@@ -1101,15 +1101,13 @@ def q_bpe_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_words(docs, "text", k=200)
 
 
-#: run-private root for oracle side tables: keyed by pid (overridable
-#: via env) so two concurrent harness/bench runs cannot clobber or
-#: cross-read each other's centroid/merge tables. queries() and
-#: oracle_sql() are called in the same process, so both see one path.
+#: root for oracle side tables. The default is fixed, so oracle_sql()
+#: renders the same text in every process; two concurrent
+#: harness/bench runs that must not clobber or cross-read each
+#: other's centroid/merge tables set SOLRIZER_ORACLE_RUN_DIR apart.
 import os as _os
 
-_ORACLE_RUN_DIR = _os.environ.get(
-    "SOLRIZER_ORACLE_RUN_DIR", f"/tmp/solrizer_oracle_{_os.getpid()}"
-)
+_ORACLE_RUN_DIR = _os.environ.get("SOLRIZER_ORACLE_RUN_DIR", "/tmp/solrizer_oracle")
 
 #: parquet side table q_kmeans_clusters materializes for its oracle:
 #: the trained centroids, from which DuckDB re-derives every vector's

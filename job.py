@@ -8,11 +8,18 @@ Dataflow (SURVEY.md §3.4):
     read pages (column-pruned scan)
       → partition_key = pmod(xxhash64(url, salt), n_buckets)
       → [resume] prune buckets already in the completion manifest
-      → salted repartition by url-hash              (skew defuse)
+      → bucket-aligned salted repartition by url-hash   (the one shuffle:
+        skew defuse; each task holds whole buckets)
       → field chain: extract → content_model → discoverability
-        → dates → facets → aggregate_fields → doc   (one Python stage)
-      → write docs partitionBy(partition_key)       (dynamic overwrite)
-      → write per-bucket manifests + lineage/metrics (manifest-last)
+        → dates → facets → aggregate_fields → doc       (one Python stage)
+      → write docs partitionBy(partition_key)           (same stage: a
+        local sort, one file per bucket; dynamic overwrite)
+      → read the sink back once → per-bucket lineage/metrics, then
+        manifests                                       (manifest-last)
+
+Global dedup modes (canonical / exact / near) and per-model chains
+shuffle or union after the placement; they re-apply the same
+placement just before the write.
 """
 
 from __future__ import annotations
@@ -90,7 +97,6 @@ def run_job(
     input_format: str = "auto",
     host_graph: bool = False,
     outline: bool = False,
-    write_rebalance: bool = True,
     max_records_per_file: int = 1_000_000,
 ) -> dict:
     if resume and dedup is not None:
@@ -177,7 +183,10 @@ def run_job(
             .drop("_rn", "_norm_url")
         )
 
-    pages = salted_repartition(pages, num_partitions, salt=salt)
+    def place(df):
+        return salted_repartition(df, num_partitions, salt=salt, n_buckets=n_buckets)
+
+    pages = place(pages)
 
     if outline:
         # heading outline rides the detail-mode blocks column; forcing
@@ -287,6 +296,11 @@ def run_job(
         )
         docs = dedup_keep_canonical(docs, comps, id_col="url")
 
+    if dedup in ("canonical", "exact", "near") or model_chains:
+        # these shuffled (or unioned) the placed rows: restore whole
+        # buckets per task so the sink still gets one file per bucket
+        docs = place(docs)
+
     docs, obs = attach_observation(docs)
     t0 = time.monotonic()
     if not resume:
@@ -295,19 +309,15 @@ def run_job(
         # overwrite never clears partitions absent from this run)
         shutil.rmtree(docs_path, ignore_errors=True)
     # dynamic overwrite: on resume, only the buckets recomputed this
-    # run are replaced; completed buckets' data stays in place
-    # rebalance-by-bucket on the way out (default): without it each of
-    # the salted extraction tasks opens a file in every partition_key
-    # directory it holds (tasks × buckets files — measured 795 files
-    # for a 1000-doc run); with it AQE regroups whole buckets per
-    # task, so file count tracks data volume. maxRecordsPerFile bounds
-    # the hot buckets.
+    # run are replaced; completed buckets' data stays in place.
+    # The placement gave each task whole buckets, so the write runs in
+    # the extraction stage (a local sort on partition_key) and opens
+    # one file per bucket; maxRecordsPerFile bounds the hot buckets.
     write_table(
         docs,
         docs_path,
         mode="overwrite",
         partition_by=["partition_key"],
-        rebalance=write_rebalance,
         max_records_per_file=max_records_per_file,
     )
     elapsed = time.monotonic() - t0
@@ -366,16 +376,9 @@ def run_job(
         }
         edges.unpersist()
 
-    try:
-        counters = dict(obs.get) if obs.get else {}
-    except Exception:
-        # AQE short-circuits a REBALANCE over an EMPTY relation to a
-        # LocalTableScan, dropping the CollectMetrics node, so the
-        # observation never fires and .get raises (reproduced on
-        # Spark 4.1: empty df + rebalance hint + observe + write).
-        # Only the all-buckets-skipped resume hits this — the honest
-        # counters there are zeros.
-        counters = {}
+    # the observation sits above the placement exchange, so it fires
+    # even when every bucket was skipped (an empty relation)
+    counters = dict(obs.get)
     n_docs = int(counters.get("n_docs") or 0)
     return {
         "run_id": run_id,
@@ -436,13 +439,6 @@ def main() -> None:
         "the single extraction pass, no extra Python stage",
     )
     ap.add_argument(
-        "--no-write-rebalance", action="store_true",
-        help="skip the AQE REBALANCE hint on the docs write (the hint "
-        "regroups rows by partition_key so file count tracks data "
-        "volume instead of tasks x buckets; disable only to preserve "
-        "the extraction tasks' output order within files)",
-    )
-    ap.add_argument(
         "--max-records-per-file", type=int, default=1_000_000,
         help="parquet maxRecordsPerFile bound for the docs write "
         "(0 = unbounded; default 1M keeps hot buckets split into "
@@ -499,7 +495,6 @@ def main() -> None:
         input_format=args.input_format,
         host_graph=args.host_graph,
         outline=args.outline,
-        write_rebalance=not args.no_write_rebalance,
         max_records_per_file=args.max_records_per_file,
     )
     print(json.dumps(stats))

@@ -21,6 +21,8 @@ gaps degrade gracefully exactly like the reference's fallback).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,11 +50,14 @@ ISO639_3TO2: dict[str, str] = {
 
 
 def _litmap(d: dict[str, str]) -> Column:
-    pairs: list[Column] = []
-    for k, v in d.items():
-        pairs.append(F.lit(k))
-        pairs.append(F.lit(v))
-    return F.create_map(*pairs)
+    """``d`` as a map literal — built once per process: each key and
+    value costs a driver→JVM call, and every plan build asks again."""
+    return _map_literal(tuple(d.items()))
+
+
+@functools.cache
+def _map_literal(items: tuple[tuple[str, str], ...]) -> Column:
+    return F.create_map(*[F.lit(x) for kv in items for x in kv])
 
 
 def normalize_primary(code: Column) -> Column:

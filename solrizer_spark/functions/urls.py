@@ -9,6 +9,8 @@ repartition. Implemented with portable regexp/string expressions (not
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -68,7 +70,23 @@ def registered_domain(
     explicitly empty set means "plain last-two-labels heuristic". The
     set compiles to a Catalyst ``InSet`` literal — a per-row hash
     probe shipped with the plan, zero joins/shuffles, so the lookup
-    costs the same at 10^12 rows as at 10^3."""
+    costs the same at 10^12 rows as at 10^3.
+
+    Building the expression costs one driver→JVM call per suffix, so
+    the Column for a named url column is built once per process."""
+    if isinstance(url, str):
+        return _registered_domain_of(
+            url, None if suffixes is None else frozenset(suffixes)
+        )
+    return _registered_domain(url, suffixes)
+
+
+@functools.cache
+def _registered_domain_of(url: str, suffixes: frozenset[str] | None) -> Column:
+    return _registered_domain(F.col(url), suffixes)
+
+
+def _registered_domain(url: Column, suffixes: frozenset[str] | None) -> Column:
     sufs = sorted(PSL_TWO_LEVEL_SNAPSHOT if suffixes is None else suffixes)
     two_level = [s for s in sufs if s.count(".") == 1]
     three_level = [s for s in sufs if s.count(".") == 2]

@@ -14,12 +14,24 @@ urls already spread uniformly under the hash; the salt decorrelates
 the layout from any previous run's bucketing (adversarial alignment,
 stragglers from sticky partition→executor maps) and gives deterministic
 re-bucketing knobs for resume (see ``manifests.partition_key``).
+
+Given the sink's bucket count the placement is also *bucket-aligned*:
+every task holds whole ``url_bucket`` values (or a slice of exactly one
+bucket), so a ``partitionBy(partition_key)`` write straight out of the
+extraction stage opens one file per bucket — no second shuffle to
+regroup the docs by bucket.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+#: Upper bound on the fullest task's bucket count over the mean share
+#: in a whole-bucket placement (see :func:`bucket_aligned_partitions`).
+MAX_BUCKET_SHARE = 1.25
 
 
 def url_bucket(url: Column | str, n_buckets: int, salt: int = 0) -> Column:
@@ -30,21 +42,54 @@ def url_bucket(url: Column | str, n_buckets: int, salt: int = 0) -> Column:
     return F.pmod(F.xxhash64(col, F.lit(salt)), F.lit(n_buckets)).cast("int")
 
 
+def bucket_aligned_partitions(num_partitions: int, n_buckets: int) -> int:
+    """Partition count for a placement that never splits a bucket
+    across tasks unless each task holds a slice of just one bucket.
+
+    * ``P > B``: ``B·k`` partitions with ``k = ⌈P/B⌉`` slices per
+      bucket.
+    * ``P ≤ B``: each task holds ``q = ⌈B/P⌉`` buckets at most, and the
+      fewest tasks with that bound is ``⌈B/q⌉`` (never more than P).
+      If ``b mod P`` would then leave the fullest task above
+      :data:`MAX_BUCKET_SHARE` × the mean share (only for tiny B), one
+      bucket per task instead."""
+    if num_partitions > n_buckets:
+        return n_buckets * math.ceil(num_partitions / n_buckets)
+    p = math.ceil(n_buckets / math.ceil(n_buckets / num_partitions))
+    if math.ceil(n_buckets / p) * p > MAX_BUCKET_SHARE * n_buckets:
+        return n_buckets
+    return p
+
+
 def salted_repartition(
     df: DataFrame,
     num_partitions: int,
     url_col: str = "url",
     salt: int = 0,
+    n_buckets: int | None = None,
 ) -> DataFrame:
     """Repartition by salted url-hash ahead of the extraction UDF.
 
-    Partitions on the FULL-resolution 64-bit hash, not on a
-    pre-bucketed value: ``repartition(n, expr)`` applies
-    ``hash(expr) % n``, so an expr already reduced to n values
-    collides (≈1/e of partitions empty, others double-loaded —
-    caught by the skew-balance test)."""
-    col = F.col(url_col)
-    return df.repartition(num_partitions, F.xxhash64(col, F.lit(salt)))
+    The partition id comes from the full 64-bit hash
+    ``h = xxhash64(url, salt)`` and is placed as is with
+    ``repartitionById`` (re-hashing an already-reduced value would
+    collide). Without ``n_buckets`` it is ``pmod(h, P)``. With
+    ``n_buckets`` (B) the count becomes
+    :func:`bucket_aligned_partitions` and, for ``b = pmod(h, B)`` (the
+    :func:`url_bucket`), the id is ``b mod P`` when P ≤ B and
+    ``b·k + pmod(h div B, k)`` when P > B."""
+    h = F.xxhash64(F.col(url_col), F.lit(salt))
+    if n_buckets is None:
+        pid = F.pmod(h, F.lit(num_partitions))
+    else:
+        num_partitions = bucket_aligned_partitions(num_partitions, n_buckets)
+        b = F.pmod(h, F.lit(n_buckets))
+        if num_partitions <= n_buckets:
+            pid = F.pmod(b, F.lit(num_partitions))
+        else:
+            k = num_partitions // n_buckets
+            pid = b * k + F.pmod(F.call_function("div", h, F.lit(n_buckets)), F.lit(k))
+    return df.repartitionById(num_partitions, pid.cast("int"))
 
 
 def _parse_byte_size(s: str) -> int:
@@ -79,8 +124,6 @@ def partitions_for_bytes(
     capped. At 100 TB this yields ~1.6M partitions — the same shape a
     real cluster's scan would produce — while a 56 MB bench input gets
     exactly ``cpus`` tasks in a single wave."""
-    import math
-
     want = max(cpus, math.ceil(total_bytes / target_partition_bytes))
     if max_partitions is not None:
         want = min(want, max_partitions)
@@ -126,7 +169,6 @@ def _scan_split_estimate(df: DataFrame) -> int | None:
     means pass-through, so at real scale — where the estimate is
     beside the point — this guard can never inject a surprise
     shuffle."""
-    import math
     import os
     from urllib.parse import urlparse
 

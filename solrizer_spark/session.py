@@ -68,6 +68,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # reading a partitioned table back (the docs sink's 256 bucket
+        # directories) lists leaves in a Spark job once past 32 paths;
+        # its default of up to 10000 tasks meant one task per directory
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

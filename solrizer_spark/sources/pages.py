@@ -44,7 +44,6 @@ def write_table(
     fmt: str = "auto",
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    rebalance: bool = False,
     max_records_per_file: int = 0,
 ) -> None:
     """Write a table (docs / manifests / metrics).
@@ -53,21 +52,16 @@ def write_table(
     replaces the buckets it recomputed (idempotent rerun semantics);
     iceberg: ``createOrReplace`` / ``append`` on the catalog table.
 
-    ``rebalance=True`` (with ``partition_by``) inserts an AQE
-    REBALANCE hint on the partition columns before the write — the
-    production layout fix for hive-style partitioned sinks: without
-    it every write task emits a file into every partition directory
-    it holds rows for (tasks × buckets files — tens of millions at
-    10^12 docs); with it AQE regroups rows by bucket, splitting hot
-    buckets at the advisory partition size and coalescing cold ones,
-    so file count tracks data size instead of task count.
-    ``max_records_per_file`` bounds individual files as belt and
-    braces (0 = Spark default, unbounded).
+    The write adds no shuffle: every task emits one file into every
+    partition directory it holds rows for, so a hive-style partitioned
+    sink gets tasks × partition-values files unless the caller places
+    rows first — the docs sink does, with a bucket-aligned
+    ``salted_repartition`` that hands each task whole buckets.
+    ``max_records_per_file`` bounds individual files (0 = Spark
+    default, unbounded).
     """
     if fmt == "auto":
         fmt = "iceberg" if ("." in target and "/" not in target) else "parquet"
-    if rebalance and partition_by:
-        df = df.hint("rebalance", *partition_by)
     if fmt == "iceberg":
         writer = df.writeTo(target)
         if partition_by:

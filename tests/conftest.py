@@ -4,6 +4,7 @@ import shutil
 import pytest
 
 REFERENCE_FIXTURES = "/root/reference/tests/indexers/test_extracted_text"
+REFERENCE_ROOT = REFERENCE_FIXTURES.split("/tests/")[0]
 
 
 def reference_fixture(name: str) -> bytes:
@@ -32,3 +33,18 @@ def corpus_dir(tmp_path_factory):
     write_corpus(base, n_pages=200, seed=42)  # → {base}/pages, {base}/golden
     yield base
     shutil.rmtree(base, ignore_errors=True)
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Say how many reference gates (byte-identity fixtures, the EDTF
+    table) skipped: a green run without the reference checkout has not
+    exercised them."""
+    reasons = [
+        r.longrepr[2] for r in terminalreporter.stats.get("skipped", [])
+        if isinstance(r.longrepr, tuple)
+    ]
+    n = sum("reference" in why and "unavailable" in why for why in reasons)
+    if n:
+        terminalreporter.write_line(
+            f"{n} reference gates skipped (no {REFERENCE_ROOT})", yellow=True
+        )

@@ -62,19 +62,24 @@ def _load_tables():
 
 RANGE_CASES, FLAG_CASES, PRECISION_CASES = _load_tables()
 
+needs_reference_docs = pytest.mark.skipif(
+    not os.path.exists(DOC), reason="reference docs unavailable"
+)
 
+
+@needs_reference_docs
 def test_corpus_loaded():
-    if not os.path.exists(DOC):
-        pytest.skip("reference docs unavailable")
     assert len(RANGE_CASES) >= 60
     assert len(PRECISION_CASES) >= 40
 
 
+@needs_reference_docs
 @pytest.mark.parametrize(("edtf", "expected"), RANGE_CASES)
 def test_solr_date_range_corpus(edtf, expected):
     assert solr_date_range(edtf) == expected
 
 
+@needs_reference_docs
 @pytest.mark.parametrize(("edtf", "unc", "approx", "both"), FLAG_CASES)
 def test_qualifier_flags_corpus(edtf, unc, approx, both):
     f = edtf_fields(edtf)
@@ -83,6 +88,7 @@ def test_qualifier_flags_corpus(edtf, unc, approx, both):
     assert f["is_uncertain_and_approximate"] is both
 
 
+@needs_reference_docs
 @pytest.mark.parametrize(("edtf", "precision"), PRECISION_CASES)
 def test_precision_corpus(edtf, precision):
     assert edtf_precision(edtf) == precision

@@ -141,6 +141,8 @@ def test_resume_skips_completed(spark, corpus_dir, job_output):
     )
     assert stats2["skipped_buckets"] == 16
     assert stats2["n_docs"] == 0
+    # the write's observation fired over the empty relation
+    assert stats2["counters"] == {"n_docs": 0}
 
 
 def test_unknown_stage_fails_fast():
@@ -178,8 +180,10 @@ def test_fast_and_detail_modes_identical(spark, corpus_dir):
 
 def test_salted_repartition_balances_skewed_domains(spark, corpus_dir):
     """FIXTURES.md corpus: 3 mega-domains own ~30% of urls. After the
-    salted url-hash repartition, physical partitions are near-uniform."""
-    from solrizer_spark.operators.repartition import salted_repartition
+    salted url-hash repartition, physical partitions are near-uniform —
+    and, given the sink's bucket count, bucket-aligned: whole buckets
+    per task when P ≤ B, a slice of exactly one bucket when P > B."""
+    from solrizer_spark.operators.repartition import salted_repartition, url_bucket
 
     pages = spark.read.parquet(os.path.join(corpus_dir, "pages"))
     # confirm the input is actually skewed
@@ -188,15 +192,56 @@ def test_salted_repartition_balances_skewed_domains(spark, corpus_dir):
     ).count()
     top3 = sum(r["count"] for r in domains.orderBy(F.col("count").desc()).limit(3).collect())
     assert top3 >= 0.2 * 200
-    sizes = (
-        salted_repartition(pages, 8)
-        .groupBy(F.spark_partition_id().alias("p"))
-        .count()
-        .collect()
-    )
-    counts = [r["count"] for r in sizes]
+
+    def layout(n_parts, n_buckets=None):
+        placed = salted_repartition(pages, n_parts, n_buckets=n_buckets)
+        rows = (
+            placed.select(
+                F.spark_partition_id().alias("p"),
+                url_bucket("url", n_buckets or 1).alias("b"),
+            )
+            .groupBy("p", "b")
+            .count()
+            .collect()
+        )
+        counts: dict[int, int] = {}
+        for r in rows:
+            counts[r["p"]] = counts.get(r["p"], 0) + r["count"]
+        c = list(counts.values())
+        assert max(c) <= 2.0 * (sum(c) / len(c))
+        return counts, rows
+
+    counts, _ = layout(8)
     assert len(counts) == 8
-    assert max(counts) <= 2.0 * (sum(counts) / len(counts))
+
+    # P ≤ B: every bucket lives in exactly one partition
+    counts, rows = layout(4, n_buckets=16)
+    assert len(counts) == 4
+    assert len({r["b"] for r in rows}) == len(rows) == 16
+
+    # P > B: every partition holds exactly one bucket (2 slices each)
+    counts, rows = layout(8, n_buckets=4)
+    assert len(counts) == 8
+    assert len({r["p"] for r in rows}) == len(rows)
+    assert sorted(r["p"] // 2 for r in rows) == sorted(r["b"] for r in rows)
+
+
+def test_bucket_aligned_partitions_bounds():
+    """The derived partition count: P ≤ B never adds tasks and keeps the
+    fullest task within 1.25× the mean bucket share; P > B is a whole
+    number of slices per bucket, never fewer tasks than asked."""
+    import math
+
+    from solrizer_spark.operators.repartition import bucket_aligned_partitions
+
+    for b in (1, 2, 3, 7, 10, 16, 255, 256):
+        for p in range(1, 3 * b + 2):
+            n = bucket_aligned_partitions(p, b)
+            if p > b:
+                assert n % b == 0 and p <= n < p + b
+            else:
+                assert n <= p or n == b
+                assert math.ceil(b / n) <= 1.25 * b / n
 
 
 def test_index_record_single_doc(spark):
@@ -455,18 +500,50 @@ def test_job_outline_surface(spark, corpus_dir, tmp_path):
     j.unpersist()
 
 
-def test_write_rebalance_bounds_file_count(spark, corpus_dir, job_output):
-    """The default docs write regroups rows by partition_key (AQE
-    REBALANCE), so the sink holds at most ~one file per non-empty
-    bucket — not tasks × buckets (the 10^12-doc small-files hazard;
-    measured 795 files for a 1000-doc run without the hint)."""
+def _sink_files(docs_path):
     import glob
 
+    files = glob.glob(os.path.join(docs_path, "**", "*.parquet"), recursive=True)
+    return files, {os.path.basename(os.path.dirname(f)) for f in files}
+
+
+def test_bucket_aligned_write_bounds_file_count(spark, corpus_dir, job_output, tmp_path):
+    """The default docs write holds at most ~one file per non-empty
+    bucket — not tasks × buckets (the 10^12-doc small-files hazard;
+    measured 795 files for a 1000-doc run with unaligned placement) —
+    with no regrouping shuffle before the write. A dedup mode that
+    shuffles after extraction keeps the same bound."""
     out, _ = job_output
-    files = glob.glob(os.path.join(out, "docs", "**", "*.parquet"),
-                      recursive=True)
-    buckets = {os.path.basename(os.path.dirname(f)) for f in files}
+    files, buckets = _sink_files(os.path.join(out, "docs"))
     assert len(buckets) <= 16
-    # at most one data file per bucket at this tiny scale (AQE may
-    # leave a bucket split only when it exceeds the advisory size)
     assert len(files) <= len(buckets) + 2, sorted(files)[:20]
+
+    exact = str(tmp_path / "exact")
+    # at this size AQE would coalesce the dedup shuffle into one task,
+    # which hides an unaligned write; keep its partitions apart
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        run_job(spark, os.path.join(corpus_dir, "pages"), exact, n_buckets=16, dedup="exact")
+    finally:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    files, buckets = _sink_files(os.path.join(exact, "docs"))
+    assert len(buckets) <= 16
+    assert len(files) <= len(buckets) + 2, sorted(files)[:20]
+
+
+def test_default_docs_plan_has_one_shuffle(spark, corpus_dir, tmp_path, monkeypatch):
+    """Scan to sink in one shuffle: the frame the default run hands to
+    the docs parquet writer holds exactly the placement exchange — no
+    regrouping exchange before the write."""
+    writer_cls = type(spark.range(1).write)
+    written = {}
+    real = writer_cls.parquet
+
+    def spy(self, path, *a, **kw):
+        written[os.path.basename(path)] = self._df
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(writer_cls, "parquet", spy)
+    run_job(spark, os.path.join(corpus_dir, "pages"), str(tmp_path / "o"), n_buckets=16)
+    plan = written["docs"]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
