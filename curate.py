@@ -55,9 +55,13 @@ Ops (applied in the order given):
 * ``chunk``       split into --chunk-tokens windows with
                   --chunk-overlap carry (emits chunk rows)
 
-Per-op row counts are collected by default (one count job per op —
-fine at curation scale; ``--stats none`` for giant runs where the
-sink row count suffices).
+Per-op row counts are collected by default (``--stats full``): each
+op's output is materialized once (an eager ``localCheckpoint``; like
+the connected-component rounds it is not fault-tolerant — a lost
+executor fails the run) and counted, and the next op and the write
+read that checkpoint instead of re-running every op before it.
+``--stats none`` keeps the pipeline fully lazy — one plan, run by the
+write — for giant runs where the sink row count suffices.
 """
 
 from __future__ import annotations
@@ -69,7 +73,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from solrizer_spark.session import get_spark
+from solrizer_spark.session import get_spark, release
 
 KNOWN_OPS = (
     "normalize", "quality", "fluency", "langs", "linededup", "substrdedup",
@@ -421,6 +425,10 @@ def run_curate(spark, args) -> dict:
         df = apply_op(df, op, args, args.id_col, args.text_col, persisted)
         entry = {"op": op}
         if args.stats == "full":
+            # materialize the op once: its count, the next op and the
+            # write read the checkpoint instead of re-running the prefix
+            df = df.localCheckpoint()
+            persisted.append(df)
             entry["rows_after"] = df.count()
         stats["ops"].append(entry)
     if args.output_format == "jsonl":
@@ -430,8 +438,8 @@ def run_curate(spark, args) -> dict:
         df.write.mode("overwrite").option("compression", "gzip").json(args.output)
     else:
         df.write.mode("overwrite").parquet(args.output)
-    for frame in persisted:  # release caches pinned by dedup ops
-        frame.unpersist()
+    for frame in persisted:  # release caches and op checkpoints
+        release(frame)
     written = (
         # explicit schema: inference crashes on empty output and the
         # JSON writer omits null fields (all-null columns would vanish)
@@ -537,7 +545,10 @@ def main() -> None:
     ap.add_argument("--chunk-tokens", type=int, default=512)
     ap.add_argument("--chunk-overlap", type=int, default=64)
     ap.add_argument("--cpus", type=int, default=None)
-    ap.add_argument("--stats", choices=["full", "none"], default="full")
+    ap.add_argument("--stats", choices=["full", "none"], default="full",
+                    help="full: materialize (localCheckpoint, not fault-"
+                    "tolerant) and count each op once; none: one lazy "
+                    "plan run by the write, for giant runs")
     ap.add_argument("--output-format", choices=["parquet", "jsonl"],
                     default="parquet",
                     help="jsonl: sharded gzip JSON-lines training export")

@@ -30,6 +30,8 @@ candidates only.
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -80,7 +82,7 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
-def minhash_signatures(shingles: Column, num_hashes: int = 64) -> Column:
+def minhash_signatures(shingles: Column | str, num_hashes: int = 64) -> Column:
     """MinHash signature: per seed i, min over shingles of
     ``xxhash64(shingle, i)``. Pure map-side Column expression.
 
@@ -89,8 +91,21 @@ def minhash_signatures(shingles: Column, num_hashes: int = 64) -> Column:
     nested higher-order lambdas evaluate interpreted per element,
     while unrolled literal seeds stay codegen'd. Seeds bind via a
     closure factory, NOT an ``i=i`` default arg (pyspark treats a
-    second lambda parameter as the array-index variable)."""
+    second lambda parameter as the array-index variable).
 
+    Building the expression costs ~5 driver→JVM calls per seed, so
+    the Column for a named shingle column is built once per process."""
+    if isinstance(shingles, str):
+        return _minhash_signatures_of(shingles, num_hashes)
+    return _minhash_signatures(shingles, num_hashes)
+
+
+@functools.cache
+def _minhash_signatures_of(shingles: str, num_hashes: int) -> Column:
+    return _minhash_signatures(F.col(shingles), num_hashes)
+
+
+def _minhash_signatures(shingles: Column, num_hashes: int) -> Column:
     def hash_with_seed(seed: int):
         lit_seed = F.lit(seed)
         return lambda s: F.xxhash64(s, lit_seed)
@@ -248,7 +263,7 @@ def minhash_lsh_pairs(
     base = ensure_min_parallelism(df).select(
         F.col(id_col).alias("_id"),
         word_shingles(text_col, shingle_n).alias("_sh"),
-    ).withColumn("_sig", minhash_signatures(F.col("_sh"), num_hashes))
+    ).withColumn("_sig", minhash_signatures("_sh", num_hashes))
     if signatures_path is not None:
         # 10^12-row scale path: the shingle/signature base is written
         # to durable storage once and re-read by the banding stage and
@@ -601,10 +616,14 @@ def connected_components(
       of diameter, the right choice for 10^12-edge graphs or long
       chain topologies (see :func:`_star_round`).
 
-    Per round exactly ONE Spark action runs: the convergence checksum
-    rides the eager ``localCheckpoint`` materialization as an
+    The pair list is materialized once on entry (an eager
+    ``localCheckpoint``; like the rounds, not fault-tolerant), so the
+    caller's pair lineage runs exactly once however many edge frames
+    read it. Per round exactly ONE Spark action runs: the convergence
+    checksum rides the eager ``localCheckpoint`` materialization as an
     ``observe()`` metric (no separate probe job), and the checkpoint
-    truncates the growing lineage.
+    truncates the growing lineage. Each round's checkpoint is released
+    once the next has materialized, and the pair checkpoint on return.
 
     Non-convergence (component diameter > ``max_iterations`` under
     label propagation) is never silent: ``strict=True`` raises;
@@ -614,13 +633,21 @@ def connected_components(
     """
     from pyspark.sql import Observation
 
+    from solrizer_spark.session import release
+
     if algorithm not in ("label_propagation", "star"):
         raise ValueError(f"unknown algorithm {algorithm!r} (label_propagation|star)")
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-    )
+    # every edge frame below reads the pair list (both directions, the
+    # node set, the self-loops): materialize it ONCE. Left lazy, one
+    # action planned and ran the caller's whole pair lineage (for LSH:
+    # shingles → signatures → banding → verification joins) once per
+    # consumer — ≥4× under label propagation.
+    pair_ck = pairs.select(
+        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+    ).localCheckpoint()
+    edges = pair_ck.unionByName(
+        pair_ck.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
 
     converged = False
     rounds = 0
@@ -659,9 +686,8 @@ def connected_components(
         else:
             n_parts = max(1, min(shuffle_parts, -(-src_bytes // (64 * 1024**2))))
         edges_full = edges_full.repartition(n_parts, "dst").persist()
-        # fill the cache NOW (one pass over the pair synthesis), then
-        # derive the initial labels from the cached self-loops — the
-        # node set never re-runs the pair synthesis lineage
+        # fill the cache NOW (one pass over the pair checkpoint), then
+        # derive the initial labels from the cached self-loops
         edges_full.count()
         labels = edges_full.where(F.col("src") == F.col("dst")).select(
             F.col("src").alias("id"), F.col("src").alias("component")
@@ -690,6 +716,7 @@ def connected_components(
                 .localCheckpoint()  # eager: runs the round's ONE job
             )
             new_sum = obs.get["label_sum"]
+            release(labels)  # the previous round's checkpoint
             labels = new_labels
             if new_sum == prev_sum:
                 converged = True
@@ -697,6 +724,7 @@ def connected_components(
             prev_sum = new_sum
         edges_full.unpersist()
     edges.unpersist()
+    release(pair_ck)
     if stats is not None:
         stats["converged"] = converged
         stats["rounds"] = rounds
@@ -741,6 +769,8 @@ def _star_components(edges: DataFrame, max_iterations: int):
     ``(id, component)`` shape as label propagation.
     """
     from pyspark.sql import Observation
+
+    from solrizer_spark.session import release
 
     # orient each undirected edge once; keep both directions available
     # per round via the symmetric frame
@@ -787,6 +817,8 @@ def _star_components(edges: DataFrame, max_iterations: int):
             .localCheckpoint()
         )
         new_sum = obs.get["label_sum"]
+        release(large)
+        release(cur)
         cur = small
         if new_sum == prev_sum:  # both None ⇔ empty edge set: converged
             converged = True
@@ -806,6 +838,7 @@ def _star_components(edges: DataFrame, max_iterations: int):
         .select("id", F.coalesce(F.col("_comp"), F.col("id")).alias("component"))
         .localCheckpoint()
     )
+    release(cur)
     return labels, converged, rounds
 
 
@@ -969,7 +1002,7 @@ def write_lsh_index(
     # cheaper to store shingles once than shingles + signature arrays)
     base.write.mode("overwrite").parquet(f"{path}/signatures")
     sigs = spark.read.parquet(f"{path}/signatures")  # durable, re-read
-    resig = sigs.withColumn("_sig", minhash_signatures(F.col("_sh"), num_hashes))
+    resig = sigs.withColumn("_sig", minhash_signatures("_sh", num_hashes))
     banded = resig.select("_id", band_key_expr(F.col("_sig"), bands, rows_per_band).alias("bk"))
     capped = cap_bucket_rows(
         banded, [F.col("bk.band"), F.col("bk.key")], [F.col("_id")], max_bucket
@@ -1029,7 +1062,7 @@ def dedup_against_index(
             F.col(id_col).cast("string").alias("_nid"),
             word_shingles(text_col, shingle_n).alias("_nsh"),
         )
-        .withColumn("_sig", minhash_signatures(F.col("_nsh"), num_hashes))
+        .withColumn("_sig", minhash_signatures("_nsh", num_hashes))
     )
     if persist_increment:
         # feeds banding AND verification; same never-unpersisted

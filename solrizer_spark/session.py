@@ -81,6 +81,18 @@ def get_spark(
     return spark
 
 
+def release(df) -> None:
+    """Free the executor blocks behind ``df``: uncache it if it was
+    ``persist()``ed and, if it is a ``localCheckpoint()``, unpersist
+    the checkpointed RDD — ``DataFrame.unpersist()`` does not reach
+    that one (the checkpoint is a ``LogicalRDD`` over an RDD, not a
+    cache entry). The frame must not be read afterwards."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 #: application ids whose Python worker pool has been pre-spawned
 _WARMED_APPS: set[str] = set()
 

@@ -121,6 +121,27 @@ def test_cc_string_ids_star(spark):
     ]
 
 
+@pytest.mark.parametrize("algorithm", ["label_propagation", "star"])
+def test_cc_runs_pair_lineage_once(spark, algorithm):
+    """The caller's pair frame is computed once, however many edge
+    frames read it: every row passing through a counting
+    ``mapInPandas`` is counted once per time its lineage runs."""
+    from solrizer_spark.operators.dedup import connected_components
+
+    edges = TOPOLOGIES["star_plus_chain"]
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    pairs = _pairs_df(spark, edges).mapInPandas(counted, "id_a long, id_b long")
+    got = _labels(connected_components(pairs, algorithm=algorithm))
+    assert got == _expected_components(edges)
+    assert seen.value == len(edges)
+
+
 def test_cc_empty_pairs(spark):
     from solrizer_spark.operators.dedup import connected_components
 
