@@ -2,22 +2,24 @@
 
 ``run_cscan(text)`` returns a finished
 :class:`solrizer_spark.extraction.html_text._ExtractorState` — the
-same object shape every other backend produces — or ``None`` when the
-C side bails (rare constructs whose semantics depend on Python
-Unicode behavior; see cscan.c's honest-bail contract). Callers fall
-back to the fused Python kernel on ``None``, so parity holds by
-construction for bailed documents and by the differential fuzz +
-golden suite for everything else.
+same object shape the stdlib ``HTMLParser`` reference produces — or
+``None`` when the C side bails (rare constructs whose semantics depend
+on Python Unicode behavior; see cscan.c's honest-bail contract).
+Callers fall back to the stdlib reference on ``None``, so parity holds
+by construction for bailed documents and by the c-vs-stdlib
+differential fuzz + golden suite for everything else.
 
 Build-on-first-use: the shared object is compiled with the system C
 compiler into a cache directory keyed by a hash of the C source and
 the generated tables (which are themselves derived from the running
 Python's stdlib + the engine tag classes). No compiler, or a failed
-compile, degrades to ``HAVE_CSCAN = False`` — the engine then runs
-the pure-Python kernels, so cluster images without a toolchain lose
-speed, never correctness. Executors compile independently
-(process-local, file-locked by atomic rename), which on a real
-cluster means one ~1 s compile per node, amortized over the job.
+compile, degrades to ``HAVE_CSCAN = False`` — backend ``auto`` then
+runs the stdlib reference, so cluster images without a toolchain lose
+speed (~110–180 µs/doc against ~20–30 µs/doc), never correctness. Speed on
+such images is not a target: gcc ships on the images the engine
+runs. Executors compile independently (process-local, file-locked by
+atomic rename), which on a real cluster means one ~1 s compile per
+node, amortized over the job.
 """
 
 from __future__ import annotations
@@ -139,7 +141,8 @@ def run_cscan(text: str):
     """Parse one document with the C kernel.
 
     Returns a finished ``_ExtractorState``, or ``None`` if the C side
-    bailed (caller must fall back to a Python kernel)."""
+    bailed or the kernel cannot be loaded (caller must fall back to
+    the stdlib reference, as ``html_text._run_c`` does)."""
     from solrizer_spark.extraction.html_text import (
         DENSITY_CANVAS_COLS,
         Block,
@@ -150,7 +153,7 @@ def run_cscan(text: str):
         return None
     try:
         payload = text.encode("utf-8")
-    except UnicodeEncodeError:     # lone surrogates: Python kernels only
+    except UnicodeEncodeError:     # lone surrogates: stdlib reference only
         return None
     resp = _lib.cscan_extract(payload, len(payload))
     if not resp:

@@ -1,10 +1,10 @@
-/* cscan — C implementation of the fused HTML extraction kernel.
+/* cscan — C implementation of the HTML extraction kernel.
  *
- * Semantics: byte-for-byte the same event stream and block features as
- * solrizer_spark/extraction/fusedscan.py (itself pinned stdlib-exact),
- * which is in turn the html.parser.HTMLParser(convert_charrefs=True)
+ * Semantics: byte-for-byte the same raw text, title and block features
+ * as the stdlib reference backend in solrizer_spark/extraction/
+ * html_text.py: the html.parser.HTMLParser(convert_charrefs=True)
  * event stream driven into html_text._ExtractorState. Every regex the
- * Python kernels borrow from the stdlib (tagfind_tolerant,
+ * reference takes from the stdlib (tagfind_tolerant,
  * locatestarttagend_tolerant, attrfind_tolerant, endtagfind,
  * commentclose, html._charref) is hand-transcribed here; the charref /
  * whitespace / tag-class tables are GENERATED from the running
@@ -14,7 +14,7 @@
  *
  * Honest-bail contract: constructs whose Python semantics depend on
  * Unicode case-folding or on rarely-exercised stdlib paths return
- * BAIL (caller re-runs the document through the Python kernel, so
+ * BAIL (caller re-runs the document through the stdlib reference, so
  * parity holds by construction):
  *   - marked sections ("<![" ...) — AssertionError paths in stdlib;
  *   - tag names containing non-ASCII bytes (str.lower() differs);

@@ -134,11 +134,12 @@ class ExtractionResult:
 
 class _ExtractorState:
     """Backend-independent extractor sink: raw text stream + block
-    segmentation, driven by a tag/data event stream. Both the stdlib
-    ``HTMLParser`` backend and the fast scanner
-    (:mod:`solrizer_spark.extraction.fastscan`) feed the same four
-    methods, so the block features and raw-text bytes are backend-
-    invariant by construction."""
+    segmentation, driven by a tag/data event stream. The stdlib
+    ``HTMLParser`` reference (:class:`_Extractor`) feeds the four
+    event methods; the C kernel (:mod:`solrizer_spark.extraction.cscan`)
+    fills ``raw_parts``/``title_parts``/``blocks`` of a fresh instance
+    directly, with the same block arithmetic, so both backends return
+    the same object shape."""
 
     def __init__(self) -> None:
         self.raw_parts: list[str] = []
@@ -240,14 +241,13 @@ class _ExtractorState:
         if self._link_depth:
             self._buf_link_chars += len(" ".join(data.split()))
 
-    def finish(self) -> None:  # final flush
-        self._flush_block()
-
 
 class _Extractor(HTMLParser, _ExtractorState):
     """stdlib-``HTMLParser``-driven extractor: the parity-reference
-    backend (exactly the round-1/2 kernel). Kept as the semantic
-    oracle the fast scanner is differential-tested against."""
+    backend (exactly the round-1/2 kernel). It is the semantic oracle
+    the C kernel is differential-tested against, the per-document
+    fallback when the C kernel bails, and what ``auto`` runs on images
+    without a C compiler (correct, ~4–6× slower than ``c``)."""
 
     def __init__(self) -> None:
         HTMLParser.__init__(self, convert_charrefs=True)
@@ -291,28 +291,13 @@ def classify_blocks(blocks: list[Block]) -> None:
 
 
 #: Default parse backend. ``auto`` resolves to ``c`` — the compiled
-#: kernel (cscan/, built on first use with the system C compiler,
-#: per-document fused-fallback on its honest-bail constructs) — when
-#: a toolchain is available, else ``fused``. ``fused`` is the
-#: single-function Python kernel (fusedscan.py) — the fastscan state
-#: machine with the sink inlined as locals, ~1.85× stdlib; ``fast``
-#: is the sink-driven single-shot scanner (fastscan.py); all are
-#: stdlib-event-exact and differential-fuzz-pinned. ``stdlib`` is the
-#: HTMLParser-driven parity reference. Overridable per-cluster
-#: without code changes via ``SOLRIZER_HTML_BACKEND`` (executors
-#: inherit it through ``spark.executorEnv.*``).
-import os as _os
-
-DEFAULT_BACKEND = _os.environ.get("SOLRIZER_HTML_BACKEND", "auto")
-
-
-def _run_fast(text: str) -> _ExtractorState:
-    from solrizer_spark.extraction.fastscan import scan
-
-    state = _ExtractorState()
-    scan(text, state)
-    state.finish()
-    return state
+#: kernel (cscan/, built on first use with the system C compiler) —
+#: when a toolchain is available, else to ``stdlib``, the
+#: HTMLParser-driven parity reference. Compiler-less images are
+#: supported for correctness only: ``stdlib`` costs ~110–180 µs/doc
+#: against ~20–30 µs/doc for ``c``, and gcc ships on every image the
+#: engine runs.
+DEFAULT_BACKEND = "auto"
 
 
 def _run_stdlib(text: str) -> _ExtractorState:
@@ -322,68 +307,40 @@ def _run_stdlib(text: str) -> _ExtractorState:
     return parser
 
 
-def _run_lxml(text: str) -> _ExtractorState:
-    from solrizer_spark.extraction.lxml_backend import run_lxml
-
-    return run_lxml(text)
-
-
-def _run_fused(text: str) -> _ExtractorState:
-    from solrizer_spark.extraction.fusedscan import run_fused
-
-    return run_fused(text)
-
-
 def _run_c(text: str) -> _ExtractorState:
-    """Compiled kernel; per-document fused fallback on its documented
+    """Compiled kernel; per-document stdlib fallback on its documented
     bail constructs (marked sections, non-ASCII tag names, potential
     case-folded CDATA closes), so parity holds by construction."""
     from solrizer_spark.extraction.cscan import run_cscan
 
     state = run_cscan(text)
     if state is None:
-        return _run_fused(text)
+        return _run_stdlib(text)
     return state
 
 
-_BACKENDS = {
-    "c": _run_c,
-    "fused": _run_fused,
-    "fast": _run_fast,
-    "stdlib": _run_stdlib,
-    "lxml": _run_lxml,
-}
+_BACKENDS = {"c": _run_c, "stdlib": _run_stdlib}
 
 
 def _resolve_backend(backend: str):
-    """Loud config failure: a typo'd ``SOLRIZER_HTML_BACKEND`` must
-    fail the job, not silently quarantine every page as parse_failed.
-    ``auto`` degrades silently (c → fused) by design: it is the "use
+    """Loud config failure: a typo'd or retired backend name must fail
+    the job, not silently quarantine every page as parse_failed.
+    ``auto`` degrades silently (c → stdlib) by design: it is the "use
     the fastest correct kernel this node can run" setting."""
-    if backend == "auto":
-        from solrizer_spark.extraction import cscan
+    from solrizer_spark.extraction import cscan
 
-        backend = "c" if cscan.load() else "fused"
+    if backend == "auto":
+        backend = "c" if cscan.load() else "stdlib"
     try:
         run = _BACKENDS[backend]
     except KeyError:
-        raise ValueError(
-            f"unknown HTML backend {backend!r} (auto|c|fused|fast|stdlib|lxml)"
-        ) from None
-    if backend == "lxml":
-        from solrizer_spark.extraction.lxml_backend import HAVE_LXML
-
-        if not HAVE_LXML:
-            raise ImportError("backend='lxml' selected but lxml is not installed on this image")
-    if backend == "c":
-        from solrizer_spark.extraction import cscan
-
-        if not cscan.load():
-            raise ImportError(
-                "backend='c' selected but the cscan kernel cannot be "
-                "built on this image (no C compiler?) — use 'auto' to "
-                "fall back to the Python kernels"
-            )
+        raise ValueError(f"unknown HTML backend {backend!r} (auto|c|stdlib)") from None
+    if backend == "c" and not cscan.load():
+        raise ImportError(
+            "backend='c' selected but the cscan kernel cannot be "
+            "built on this image (no C compiler?) — use 'auto' to "
+            "fall back to the stdlib kernel"
+        )
     return run
 
 
@@ -399,11 +356,14 @@ def extract_html(
     bad page (reference analog: IndexerError quarantine paths,
     src/solrizer/indexers/extracted_text.py:100-103).
 
-    ``backend`` selects the parse kernel (default
-    :data:`DEFAULT_BACKEND`): all backends drive the same
-    ``_ExtractorState`` sink, so block features and raw-text bytes are
-    kernel-independent; byte parity is pinned by the reference-fixture
-    goldens and a differential fuzz suite.
+    ``backend`` selects the parse kernel, one of ``auto|c|stdlib``
+    (default :data:`DEFAULT_BACKEND`); any other name raises
+    ``ValueError``. ``c`` is the compiled kernel (``ImportError`` if it
+    cannot be built here), ``stdlib`` the ``HTMLParser`` reference, and
+    ``auto`` picks ``c`` when it loads, else ``stdlib``. Both kernels
+    produce an ``_ExtractorState``, so block features and raw-text
+    bytes are kernel-independent; c-vs-stdlib byte parity is pinned by
+    the reference-fixture goldens and a differential fuzz suite.
     """
     if payload is None:
         return ExtractionResult(None, None, parse_failed=True, error="empty_html")
