@@ -200,8 +200,10 @@ def apply_op(
             id_col=id_col,
             text_col=text_col,
             threshold=args.near_threshold,
+            persisted=persisted,
         )
         comps = connected_components(pairs, algorithm=args.cc_algorithm)
+        persisted.append(comps)  # the final round's label checkpoint
         return dedup_keep_canonical(df, comps, id_col=id_col)
     if op == "basededup":
         if args.base_index:

@@ -12,10 +12,12 @@ Dataflow (SURVEY.md §3.4):
         skew defuse; each task holds whole buckets)
       → field chain: extract → content_model → discoverability
         → dates → facets → aggregate_fields → doc       (one Python stage)
-      → write docs partitionBy(partition_key)           (same stage: a
-        local sort, one file per bucket; dynamic overwrite)
-      → read the sink back once → per-bucket lineage/metrics, then
-        manifests                                       (manifest-last)
+      → write doc + the columns it lacks, partitionBy(partition_key)
+                                                        (same stage: a
+        local sort, one zstd file per bucket; dynamic overwrite)
+      → read the sink back once → per-bucket lineage/metrics collected
+        to the driver → one metrics file, then one manifest file
+                                                        (manifest-last)
 
 Global dedup modes (canonical / exact / near) and per-model chains
 shuffle or union after the placement; they re-apply the same
@@ -43,41 +45,8 @@ from solrizer_spark.operators.manifests import (
 from solrizer_spark.operators.metrics import attach_observation, build_metrics
 from solrizer_spark.operators.repartition import salted_repartition, url_bucket
 from solrizer_spark.plans.pipeline import DEFAULT_CHAIN, build_pipeline
-from solrizer_spark.session import get_spark
-from solrizer_spark.sources.pages import read_pages, write_table
-
-#: Columns persisted to the docs table. ``blocks`` is intentionally
-#: dropped — at 10^12 rows the block array quadruples the sink size
-#: and nothing downstream reads it (metrics are pre-aggregated).
-DOC_COLUMNS = [
-    "partition_key",
-    "url",
-    "id",
-    "warc_ts",
-    "lang",
-    "route",
-    "content_model_name__str",
-    "extracted_text",
-    "is_tagged",
-    "title",
-    "language__facet",
-    "warc_ts__time",
-    "is_published",
-    "is_hidden",
-    "is_top_level",
-    "is_discoverable",
-    "agg_text",
-    "agg_identifier",
-    "doc",
-    "parse_failed",
-    "error",
-    "bytes_in",
-    "blocks_kept",
-    "blocks_dropped",
-    "charset_source",
-    "canonical_url",
-    "is_noindex",
-]
+from solrizer_spark.session import get_spark, release
+from solrizer_spark.sources.pages import docs_sink_columns, read_pages, write_table
 
 
 def run_job(
@@ -205,17 +174,10 @@ def run_job(
         from solrizer_spark.operators.extract import page_outline
 
         out = out.withColumn("outline", page_outline(F.col("blocks")))
-    # a custom chain may legitimately skip stages → keep whatever
-    # subset of the canonical sink columns it produced, plus any
-    # registered faceter columns
-    keep = [c for c in DOC_COLUMNS if c in out.columns]
-    keep += [c for c in out.columns if c.endswith("__facet") and c not in keep]
-    # detail-chain outputs: child docs + IIIF link fields
-    keep += [
-        c for c in out.columns
-        if (c in ("pages", "outline") or c.startswith("iiif_")) and c not in keep
-    ]
-    docs = out.select(*keep)
+    # store doc plus only the columns it lacks or a reader needs typed
+    # (DOC_COLUMNS); the field columns doc is assembled from are not
+    # stored a second time
+    docs = out.select(*docs_sink_columns(out.columns))
 
     if dedup == "canonical":
         # rel=canonical dedup: collapse declared variants (mirrors /
@@ -258,7 +220,7 @@ def run_job(
             .drop("_rn")
         )
 
-    near_dedup_persisted = None
+    near_dedup_persisted: list = []  # released after the docs write
     near_dedup_stats = None
     if dedup == "near":
         # post-extraction NEAR-dup removal: MinHash+LSH pairs over the
@@ -276,7 +238,7 @@ def run_job(
         )
 
         docs = docs.persist()
-        near_dedup_persisted = docs
+        near_dedup_persisted.append(docs)
         text_side = docs.where(F.col("extracted_text").isNotNull()).select(
             "url", "extracted_text"
         )
@@ -289,11 +251,13 @@ def run_job(
             # to a durable table instead of executor block cache
             persist_base=near_signatures_path is None,
             signatures_path=near_signatures_path,
+            persisted=near_dedup_persisted,
         )
         near_dedup_stats = {}
         comps = connected_components(
             pairs, algorithm=near_cc_algorithm, stats=near_dedup_stats
         )
+        near_dedup_persisted.append(comps)  # the final label checkpoint
         docs = dedup_keep_canonical(docs, comps, id_col="url")
 
     if dedup in ("canonical", "exact", "near") or model_chains:
@@ -321,8 +285,8 @@ def run_job(
         max_records_per_file=max_records_per_file,
     )
     elapsed = time.monotonic() - t0
-    if near_dedup_persisted is not None:
-        near_dedup_persisted.unpersist()
+    for frame in near_dedup_persisted:
+        release(frame)
 
     # manifest-last: completion rows derive from the durably written
     # sink, restricted to buckets recomputed THIS run (resume appends
@@ -333,21 +297,25 @@ def run_job(
     written = spark.read.parquet(docs_path)
     if done:
         written = written.where(~F.col("partition_key").isin(done))
-    # ONE verification scan of the durable sink feeds both side tables:
-    # metrics first, then the completion manifest derived from the same
-    # aggregation. The manifest stays LAST (the commit marker): a crash
-    # between the two writes leaves the bucket unmarked, so resume
-    # recomputes it and appends a second metrics row for that bucket —
-    # metrics is an append-only lineage log keyed by run_id; consumers
-    # take the row whose run_id the manifest marks complete
-    metrics = build_metrics(written, run_id).persist()
-    write_table(metrics, metrics_path, mode="append")
+    # ONE verification scan of the durable sink feeds both side tables.
+    # Its aggregate is ≤ n_buckets rows: it is collected once, and the
+    # driver writes metrics, then the completion manifest derived from
+    # it, as one file each named by run_id (resume appends never
+    # collide; no Spark write job). The manifest stays LAST (the commit
+    # marker): a crash between the two writes leaves the bucket
+    # unmarked, so resume recomputes it and appends a second metrics
+    # row for that bucket — metrics is an append-only lineage log keyed
+    # by run_id; consumers take the row whose run_id the manifest marks
+    # complete
+    metrics = build_metrics(written, run_id).toArrow()
+    side_file = f"part-{run_id}.parquet"
+    write_table(metrics, metrics_path, mode="append", file_name=side_file)
     write_table(
         manifest_from_metrics(metrics, run_id, n_buckets, salt, corpus_fp),
         manifest_path,
         mode="append",
+        file_name=side_file,
     )
-    metrics.unpersist()
 
     host_graph_stats = None
     if host_graph:

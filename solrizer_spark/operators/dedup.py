@@ -233,6 +233,7 @@ def minhash_lsh_pairs(
     persist_base: bool = True,
     signatures_path: str | None = None,
     candidate_filter=None,
+    persisted: list | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + banded LSH, verified exactly.
 
@@ -254,6 +255,11 @@ def minhash_lsh_pairs(
     ``max_bucket`` lowest ids *before* aggregation (see
     :func:`cap_bucket_rows`), bounding both the quadratic pair
     blow-up AND the aggregation-buffer memory of degenerate clusters.
+
+    ``persisted`` (optional): a list the ``persist_base`` signature
+    frame is appended to, for the caller to ``session.release`` once
+    the pairs have been consumed. Without it the cache outlives the
+    call.
     """
     from solrizer_spark.operators.repartition import ensure_min_parallelism
 
@@ -280,6 +286,8 @@ def minhash_lsh_pairs(
         # three times (measured ~1.5× total). At 10^12 scale write the
         # signatures to a table instead (signatures_path).
         base = base.persist()
+        if persisted is not None:
+            persisted.append(base)
 
     # band keys: hash of each signature slice → (band_idx, band_key);
     # shared expression with the durable index (band_key_expr) so the

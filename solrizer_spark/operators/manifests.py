@@ -31,20 +31,23 @@ instead share one transaction.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-MANIFEST_SCHEMA = T.StructType(
+#: one completion row per bucket; the types are the ones Spark's writer
+#: gives this table, so driver-written and Spark-written manifest files
+#: read as one schema
+MANIFEST_SCHEMA = pa.schema(
     [
-        T.StructField("partition_key", T.IntegerType()),
-        T.StructField("n_docs", T.LongType()),
-        T.StructField("n_failed", T.LongType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("run_id", T.StringType()),
-        T.StructField("n_buckets", T.IntegerType()),
-        T.StructField("salt", T.IntegerType()),
-        T.StructField("corpus_fp", T.StringType()),
+        ("partition_key", pa.int32()),
+        ("n_docs", pa.int64()),
+        ("n_failed", pa.int64()),
+        ("status", pa.string()),
+        ("run_id", pa.string()),
+        ("n_buckets", pa.int32()),
+        ("salt", pa.int32()),
+        ("corpus_fp", pa.string()),
     ]
 )
 
@@ -60,44 +63,30 @@ def corpus_fingerprint(df) -> str:
     return hashlib.md5("\n".join(files).encode()).hexdigest()
 
 
-def build_manifest(
-    docs: DataFrame, run_id: str, n_buckets: int, salt: int, corpus_fp: str = ""
-) -> DataFrame:
-    """One completion row per bucket, derived from written docs."""
-    return (
-        docs.groupBy("partition_key")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("parse_failed").cast("long")).alias("n_failed"),
-        )
-        .withColumn("status", F.lit("complete"))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("n_buckets", F.lit(n_buckets))
-        .withColumn("salt", F.lit(salt))
-        .withColumn("corpus_fp", F.lit(corpus_fp))
-        .select([f.name for f in MANIFEST_SCHEMA.fields])
-    )
-
-
 def manifest_from_metrics(
-    metrics: DataFrame, run_id: str, n_buckets: int, salt: int, corpus_fp: str = ""
-) -> DataFrame:
-    """Completion rows derived from an already-computed per-bucket
-    metrics aggregation (operators.metrics.build_metrics) — so the
-    post-write verification pass scans the durable sink ONCE for both
-    side tables instead of twice."""
-    return (
-        metrics.select(
-            "partition_key",
-            F.col("n_docs"),
-            F.col("parse_failures").alias("n_failed"),
-        )
-        .withColumn("status", F.lit("complete"))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("n_buckets", F.lit(n_buckets))
-        .withColumn("salt", F.lit(salt))
-        .withColumn("corpus_fp", F.lit(corpus_fp))
-        .select([f.name for f in MANIFEST_SCHEMA.fields])
+    metrics: pa.Table, run_id: str, n_buckets: int, salt: int, corpus_fp: str = ""
+) -> pa.Table:
+    """Completion rows derived from the collected per-bucket metrics
+    (operators.metrics.build_metrics) — so the post-write verification
+    pass scans the durable sink ONCE for both side tables, and the
+    manifest costs no Spark job at all."""
+    n = metrics.num_rows
+
+    def const(value, typ):
+        return pa.array([value] * n, typ)
+
+    return pa.table(
+        [
+            metrics["partition_key"],
+            metrics["n_docs"],
+            metrics["parse_failures"],
+            const("complete", pa.string()),
+            const(run_id, pa.string()),
+            const(n_buckets, pa.int32()),
+            const(salt, pa.int32()),
+            const(corpus_fp, pa.string()),
+        ],
+        schema=MANIFEST_SCHEMA,
     )
 
 

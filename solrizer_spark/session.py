@@ -189,11 +189,7 @@ def write_local_parquet(rows, schema: str, path: str) -> None:
     identical data. Overwrite semantics (the directory is cleared).
     Raises for DDL types outside the scalar map — callers fall back
     to ``local_df`` + Spark write for anything exotic."""
-    import os
-    import shutil
-
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     names, types = [], []
     for f in _split_ddl(schema):
@@ -209,9 +205,29 @@ def write_local_parquet(rows, schema: str, path: str) -> None:
         for i in range(len(names))
     ]
     table = pa.Table.from_arrays(arrays, names=names)
-    shutil.rmtree(path, ignore_errors=True)
+    write_parquet_file(table, path, "part-00000.parquet")
+
+
+def write_parquet_file(
+    table, path: str, file_name: str, overwrite: bool = True
+) -> None:
+    """Write a driver-side ``pyarrow.Table`` as the one file
+    ``<path>/<file_name>`` — no Spark job. ``overwrite`` clears the
+    directory first; otherwise the file joins the ones already there
+    (an append). The file lands under a dot-prefixed temporary name
+    that Spark and ``*.parquet`` globs skip, then ``os.replace`` moves
+    it into place, so a crash never leaves a torn file in the table."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    if overwrite:
+        shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
-    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+    tmp = os.path.join(path, f".{file_name}.tmp")
+    pq.write_table(table, tmp, compression="zstd")
+    os.replace(tmp, os.path.join(path, file_name))
 
 
 def local_df(spark: SparkSession, rows, schema: str):

@@ -14,7 +14,12 @@ Column pruning and predicate pushdown behave the same way for both
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, SparkSession
+
+if TYPE_CHECKING:
+    import pyarrow
 
 
 def read_pages(spark: SparkSession, source: str, fmt: str = "auto") -> DataFrame:
@@ -38,13 +43,65 @@ def read_pages(spark: SparkSession, source: str, fmt: str = "auto") -> DataFrame
     return spark.read.parquet(source)
 
 
+#: Columns of the docs sink. A column is stored only if ``doc`` (the
+#: product) lacks it or a reader needs it typed: the goldens and the
+#: benchmark gate (url, extracted_text, parse_failed), curate (lang),
+#: ``build_metrics`` (warc_ts, route, byte/block counts,
+#: charset_source, is_noindex) and lineage ``doc`` omits (error,
+#: canonical_url). The field columns ``doc`` is assembled from — id,
+#: title, content_model_name__str, is_tagged, the flags,
+#: warc_ts__time, ``*__facet``, agg_* — are computed but not stored
+#: (SCALE.md "Sink layout" maps each to its ``doc`` field), and neither
+#: is ``blocks``: nothing downstream reads the block array.
+DOC_COLUMNS = [
+    "partition_key",
+    "url",
+    "warc_ts",
+    "lang",
+    "route",
+    "extracted_text",
+    "doc",
+    "parse_failed",
+    "error",
+    "bytes_in",
+    "blocks_kept",
+    "blocks_dropped",
+    "charset_source",
+    "canonical_url",
+    "is_noindex",
+]
+
+#: Parquet writer options of the Spark-written sink tables
+#: (``write_table`` and the streaming docs writers): zstd pages, and
+#: binary min/max statistics cut to 64 bytes — full-length ``doc``
+#: bounds were ~1.5 KB of every docs file footer.
+PARQUET_OPTIONS = {
+    "compression": "zstd",
+    "parquet.statistics.truncate.length": "64",
+}
+
+
+def docs_sink_columns(columns: list[str]) -> list[str]:
+    """The sink columns of a chain's output: the ``DOC_COLUMNS`` it
+    produced (a custom chain may skip stages) plus the detail-chain
+    outputs — child ``pages``, the heading ``outline`` and the IIIF
+    link fields."""
+    keep = [c for c in DOC_COLUMNS if c in columns]
+    keep += [
+        c for c in columns
+        if (c in ("pages", "outline") or c.startswith("iiif_")) and c not in keep
+    ]
+    return keep
+
+
 def write_table(
-    df: DataFrame,
+    df: DataFrame | pyarrow.Table,
     target: str,
     fmt: str = "auto",
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
     max_records_per_file: int = 0,
+    file_name: str | None = None,
 ) -> None:
     """Write a table (docs / manifests / metrics).
 
@@ -59,7 +116,19 @@ def write_table(
     ``salted_repartition`` that hands each task whole buckets.
     ``max_records_per_file`` bounds individual files (0 = Spark
     default, unbounded).
+
+    ``df`` may also be a ``pyarrow.Table`` — a side table already
+    collected on the driver. It is written by the driver as the one
+    parquet file ``<target>/<file_name>`` with no Spark job
+    (:func:`~solrizer_spark.session.write_parquet_file`); append mode
+    adds the file next to earlier runs', overwrite clears the
+    directory first.
     """
+    if not hasattr(df, "write"):
+        from solrizer_spark.session import write_parquet_file
+
+        write_parquet_file(df, target, file_name, overwrite=mode == "overwrite")
+        return
     if fmt == "auto":
         fmt = "iceberg" if ("." in target and "/" not in target) else "parquet"
     if fmt == "iceberg":
@@ -75,7 +144,7 @@ def write_table(
         else:
             writer.createOrReplace()
         return
-    w = df.write.mode(mode)
+    w = df.write.mode(mode).options(**PARQUET_OPTIONS)
     if mode == "overwrite":
         w = w.option("partitionOverwriteMode", "dynamic")
     if max_records_per_file:

@@ -20,6 +20,7 @@ from pyspark.sql import types as T
 
 from solrizer_spark.operators.repartition import url_bucket
 from solrizer_spark.plans.pipeline import DEFAULT_CHAIN, build_pipeline
+from solrizer_spark.sources.pages import PARQUET_OPTIONS, docs_sink_columns
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -31,11 +32,25 @@ PAGES_SCHEMA = T.StructType(
     ]
 )
 
-STREAM_DOC_COLUMNS = [
-    "partition_key", "url", "id", "route", "extracted_text", "is_tagged",
-    "title", "language__facet", "warc_ts__time", "is_discoverable", "doc",
-    "parse_failed", "error",
-]
+
+def _start_docs_sink(
+    out, n_buckets, salt, output_path, checkpoint_path, await_termination
+):
+    """Append the field chain's output stream to the docs sink: the
+    batch job's bucket key, sink columns and parquet writer options."""
+    docs = out.withColumn("partition_key", url_bucket("url", n_buckets, salt))
+    query = (
+        docs.select(*docs_sink_columns(docs.columns))
+        .writeStream.format("parquet")
+        .options(**PARQUET_OPTIONS)
+        .option("path", output_path)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if await_termination:
+        query.awaitTermination()
+    return query
 
 
 def stream_extract(
@@ -55,22 +70,10 @@ def stream_extract(
         .option("maxFilesPerTrigger", 64)
         .parquet(input_path)
     )
-    pipeline = build_pipeline(chain or DEFAULT_CHAIN)
-    docs = (
-        pipeline(pages)
-        .withColumn("partition_key", url_bucket("url", n_buckets, salt))
-        .select(*STREAM_DOC_COLUMNS)
+    return _start_docs_sink(
+        build_pipeline(chain or DEFAULT_CHAIN)(pages),
+        n_buckets, salt, output_path, checkpoint_path, await_termination,
     )
-    query = (
-        docs.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        query.awaitTermination()
-    return query
 
 
 def stream_extract_dedup(
@@ -102,22 +105,10 @@ def stream_extract_dedup(
     deduped = pages.withWatermark("warc_ts", dedup_delay).dropDuplicatesWithinWatermark(
         ["url"]
     )
-    pipeline = build_pipeline(chain or DEFAULT_CHAIN)
-    docs = (
-        pipeline(deduped)
-        .withColumn("partition_key", url_bucket("url", n_buckets, salt))
-        .select(*STREAM_DOC_COLUMNS)
+    return _start_docs_sink(
+        build_pipeline(chain or DEFAULT_CHAIN)(deduped),
+        n_buckets, salt, output_path, checkpoint_path, await_termination,
     )
-    query = (
-        docs.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        query.awaitTermination()
-    return query
 
 
 def stream_domain_counts(
@@ -221,22 +212,10 @@ def stream_warc_extract(
     )
     records = files.mapInPandas(parse_archives_batched, WARC_PAGES_SCHEMA)
     pages = warc_pages_projection(records)
-    pipeline = build_pipeline(chain or DEFAULT_CHAIN)
-    docs = (
-        pipeline(pages)
-        .withColumn("partition_key", url_bucket("url", n_buckets, salt))
-        .select(*STREAM_DOC_COLUMNS)
+    return _start_docs_sink(
+        build_pipeline(chain or DEFAULT_CHAIN)(pages),
+        n_buckets, salt, output_path, checkpoint_path, await_termination,
     )
-    query = (
-        docs.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        query.awaitTermination()
-    return query
 
 
 def stream_dedup_against_base(

@@ -108,6 +108,17 @@ def test_curate_releases_op_checkpoints(spark, docs_table, tmp_path):
     assert [e["rows_after"] for e in stats["ops"]] == [6, 6]
     assert len(jsc.getPersistentRDDs()) == before
 
+    # the ops that persist inside apply_op: neardedup's LSH signature
+    # cache and its final connected-component label checkpoint, and
+    # fluency's scan cache, are released with the op checkpoints
+    stats = run_curate(
+        spark, _args(input=docs_table, output=str(tmp_path / "o2"),
+                     ops="linededup,neardedup,fluency")
+    )
+    rows_after = [e["rows_after"] for e in stats["ops"]]
+    assert rows_after[1] < rows_after[0]  # the near-dups collapsed
+    assert len(jsc.getPersistentRDDs()) == before
+
 
 def test_curate_chunk_and_unknown_op(spark, docs_table, tmp_path):
     from curate import run_curate

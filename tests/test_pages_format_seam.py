@@ -88,18 +88,25 @@ def test_write_routing_iceberg_create_vs_append(spark):
     assert _methods(df.calls) == ["writeTo", "append"]
 
 
+_SINK_OPTIONS = (
+    "options", (), {"compression": "zstd", "parquet.statistics.truncate.length": "64"}
+)
+
+
 def test_write_routing_parquet_dynamic_overwrite():
     df = _FakeDF()
     write_table(df, "/out/docs", partition_by=["bucket"])
     assert ("mode", ("overwrite",), {}) in df.calls
     assert ("option", ("partitionOverwriteMode", "dynamic"), {}) in df.calls
     assert ("partitionBy", ("bucket",), {}) in df.calls
+    assert _SINK_OPTIONS in df.calls
     assert df.calls[-1] == ("parquet", ("/out/docs",), {})
 
     # append mode must NOT set dynamic partition overwrite
     df = _FakeDF()
     write_table(df, "/out/docs", mode="append")
     assert ("option", ("partitionOverwriteMode", "dynamic"), {}) not in df.calls
+    assert _SINK_OPTIONS in df.calls
 
 
 @pytest.mark.parametrize(

@@ -134,6 +134,64 @@ def test_manifest_complete(spark, job_output):
     assert m.agg(F.sum("n_docs")).first()[0] == 200
 
 
+def test_docs_sink_stores_each_value_once(job_output):
+    """The docs sink stores ``doc`` plus only the columns it does not
+    carry or a reader needs typed; every dropped column is recoverable
+    from what is kept. Files are zstd, and no binary min/max statistic
+    in a footer is longer than 64 bytes."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from solrizer_spark.sources.pages import DOC_COLUMNS
+
+    out, _ = job_output
+    files = glob.glob(os.path.join(out, "docs", "*", "*.parquet"))
+    assert files
+    stored = [c for c in DOC_COLUMNS if c != "partition_key"]  # the directory
+    for f in files:
+        assert pq.read_schema(f).names == stored, f
+
+    table = pq.read_table(os.path.join(out, "docs"), partitioning="hive")
+    rows = table.select(["url", "route", "doc"]).to_pylist()
+    assert len(rows) == 200
+    for r in rows:
+        doc = json.loads(r["doc"])
+        assert doc["id"] == doc["_root_"] == r["url"]
+        assert doc["content_model_name__str"] == r["route"]
+        assert ("extracted_text__dps_txt" in doc) == (r["route"] == "tagged")
+        assert "language__facet" in doc and "warc_ts__time" in doc
+
+    for f in files:
+        meta = pq.ParquetFile(f).metadata
+        for g in range(meta.num_row_groups):
+            for c in range(meta.num_columns):
+                col = meta.row_group(g).column(c)
+                assert col.compression == "ZSTD", (f, col.path_in_schema)
+                st = col.statistics
+                if col.physical_type == "BYTE_ARRAY" and st is not None and st.has_min_max:
+                    for v in (st.min, st.max):
+                        b = v.encode() if isinstance(v, str) else v
+                        assert len(b) <= 64, (f, col.path_in_schema, len(b))
+
+
+def test_side_tables_one_file_per_run(spark, job_output):
+    """metrics and manifests are written from the driver: one file
+    each, named by the run id, no temporary file left behind, and the
+    column types Spark gives the aggregate."""
+    from solrizer_spark.operators.metrics import build_metrics
+
+    out, stats = job_output
+    for table in ("metrics", "manifests"):
+        assert os.listdir(os.path.join(out, table)) == [f"part-{stats['run_id']}.parquet"]
+
+    def types(df):
+        return [(f.name, f.dataType) for f in df.schema.fields]
+
+    aggregate = build_metrics(spark.read.parquet(out + "/docs"), stats["run_id"])
+    assert types(spark.read.parquet(out + "/metrics")) == types(aggregate)
+
+
 def test_resume_skips_completed(spark, corpus_dir, job_output):
     out, _ = job_output
     stats2 = run_job(
