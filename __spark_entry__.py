@@ -1166,8 +1166,8 @@ _PQ_M, _PQ_K = 8, 16
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ scale path (Jégou et al. 2011): train product-quantizer
     codebooks in-engine (fused per-subspace Lloyd's, one distributed
-    pass per round), encode every vector to an m-byte code (pure
-    codegen), shortlist by integer-LUT asymmetric distance
+    pass per round), encode every vector to an m-byte code (one Arrow
+    numpy stage), shortlist by integer-LUT asymmetric distance
     (TakeOrdered), exact-cosine re-rank to the final top-10."""
     from solrizer_spark.operators.similarity import pq_lut, pq_topk, pq_train
     from solrizer_spark.session import local_df, write_local_parquet
@@ -2314,8 +2314,8 @@ def _pq_oracle_sql() -> str:
     """IVF-PQ leg oracle from the persisted side tables: re-derive
     every vector's PQ code from the codebook doubles (per-subspace
     L2 argmin with the exact ``|c|² − 2·x·c`` left-fold term order of
-    similarity._pq_dists; ties → lowest cell, matching the
-    first-minimal array_position), sum the INTEGER LUT over the code
+    similarity.make_pq_encode_udf; ties → lowest cell, matching the
+    kernel's first-minimal argmin), sum the INTEGER LUT over the code
     (order-free — no float-fold discipline needed), shortlist the 64
     best by (adist, vec_id), exact-cosine re-rank to top-10."""
     ds = 64 // _PQ_M

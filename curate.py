@@ -211,7 +211,7 @@ def apply_op(
 
             return dedup_against_index(
                 df, args.base_index, id_col=id_col, text_col=text_col,
-                threshold=args.near_threshold,
+                threshold=args.near_threshold, persisted=persisted,
             )
         from solrizer_spark.operators.dedup import dedup_against_base
 
@@ -220,6 +220,7 @@ def apply_op(
         return dedup_against_base(
             df, base.select(id_col, text_col), id_col=id_col,
             text_col=text_col, threshold=args.near_threshold,
+            persisted=persisted,
         )
     if op == "bloomdedup":
         # cross-increment EXACT dedup by broadcast Bloom filter: zero

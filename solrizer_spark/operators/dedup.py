@@ -129,44 +129,21 @@ def ngram_jaccard(text_a: Column, text_b: Column, n: int = 3) -> Column:
     return jaccard(word_shingles(text_a, n), word_shingles(text_b, n))
 
 
-def bucket_pairs(items: Column) -> Column:
-    """All (i < j) pairs within a bucket's member array, as
-    ``array<struct<a, b>>`` over the member elements. Callers cap and
-    sort the member array first (deterministic truncation).
-
-    NOTE: nested higher-order lambdas evaluate INTERPRETED per
-    element; for the hot row-generating path use
-    :func:`explode_bucket_pairs` (codegen Generate nodes, same pair
-    set — profiled ~25× on the simhash pair stage, round 6). This
-    expression form remains for contexts that need the pairs as an
-    array column."""
-    return F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), F.size(items) - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, F.size(items)),
-                lambda j: F.struct(
-                    F.element_at(items, i).alias("a"),
-                    F.element_at(items, j).alias("b"),
-                ),
-            ),
-        )
-    )
-
-
 def explode_bucket_pairs(buckets: DataFrame, members_col: str) -> DataFrame:
     """All (i < j) pairs from each bucket's member array, one ROW per
-    pair with columns ``a`` and ``b`` — the row-generating twin of
-    :func:`bucket_pairs`, shared by every LSH candidate generator.
+    pair with columns ``a`` and ``b`` — shared by every LSH candidate
+    generator. Callers cap and sort the member array first
+    (deterministic truncation).
 
     Shape: ``posexplode`` picks element i as ``a``; ``slice(members,
     i+2, size-i-1)`` + ``explode`` yields every LATER element as
     ``b``. Both Generate nodes and the slice are whole-stage codegen,
-    where the nested-``transform``-``flatten`` expression runs
-    interpreted per element — on a capped degenerate bucket that is
-    the difference between a multi-second single-task stage and
-    milliseconds (the post-groupBy stage is AQE-coalesced by BYTES,
-    which cannot see the quadratic pair fan-out)."""
+    where a nested-``transform``-``flatten`` expression runs
+    interpreted per element (profiled ~25× slower on the simhash pair
+    stage) — on a capped degenerate bucket that is the difference
+    between a multi-second single-task stage and milliseconds (the
+    post-groupBy stage is AQE-coalesced by BYTES, which cannot see
+    the quadratic pair fan-out)."""
     m = F.col(members_col)
     return buckets.select(
         F.posexplode(m).alias("_i", "a"), m.alias("_m")
@@ -331,9 +308,9 @@ def minhash_lsh_pairs(
 
 
 def make_simhash_udf(bits: int = 32):
-    """Arrow SimHash — integer-exact twin of the :func:`simhash`
-    Column fold (the similarity-kernel discipline, but with NO float
-    parity burden: token hash = ``int(md5(tok)[:15], 16)``, balances
+    """Arrow SimHash — the :func:`simhash` kernel, integer-exact
+    against the DuckDB oracle (no float parity burden: token hash =
+    ``int(md5(tok)[:15], 16)``, the :func:`md5_hash60` value; balances
     are ±1 integer sums, the output is a bit-OR — every step exact).
 
     Vectorization: token md5s are memoized per Arrow batch (web-corpus
@@ -390,24 +367,14 @@ def make_simhash_udf(bits: int = 32):
     return simhash_udf
 
 
-def simhash(text: Column | str, bits: int = 32, arrow: bool = True) -> Column:
-    """SimHash over word tokens as a single map-side expression.
+def simhash(text: Column | str, bits: int = 32) -> Column:
+    """SimHash over single-space-split word tokens, as one map-side
+    Arrow column (:func:`make_simhash_udf`).
 
     Token hash = 60-bit md5 prefix (DuckDB-reproducible). For each bit
-    position b, the sign of Σ_tokens (2·bit_b(h)−1) sets output bit b.
-    Default 32 bits keeps the expression tree manageable; the
-    fingerprint is a BIGINT.
-
-    Single-pass: each token is md5-hashed ONCE, then one ``aggregate``
-    folds all ``bits`` bit-balances in a ``bits``-element accumulator
-    array updated with ``zip_with`` (an earlier form ran one aggregate
-    per bit — 32 redundant md5 passes over every token). Balance sums
-    are integers, so the fold order can't change the fingerprint.
-
-    ``arrow=True`` (default) computes the identical integers through
-    the memoized-md5 numpy kernel (:func:`make_simhash_udf` —
-    interpreted ``aggregate``/``zip_with`` folds are the documented
-    hot-spot class); ``arrow=False`` is the pure-Column fallback.
+    position b, a positive Σ_tokens (2·bit_b(h)−1) sets output bit b;
+    the fingerprint is a BIGINT. Balance sums are integers, so the
+    fold order can't change the fingerprint.
 
     NULL text yields a NULL fingerprint — null-text rows (parse
     failures) are deliberately EXCLUDED from near-dup pairing rather
@@ -415,30 +382,7 @@ def simhash(text: Column | str, bits: int = 32, arrow: bool = True) -> Column:
     pathological cluster the bucket caps exist to defuse).
     """
     col = F.col(text) if isinstance(text, str) else text
-    if arrow:
-        return make_simhash_udf(bits)(col)
-    toks = F.split(col, " ")
-    hashes = F.transform(toks, md5_hash60)
-    masks = F.array(*[F.lit(1 << b).cast("long") for b in range(bits)])
-    zero = F.array(*([F.lit(0).cast("long")] * bits))
-    balances = F.aggregate(
-        hashes,
-        zero,
-        lambda acc, h: F.zip_with(
-            acc,
-            masks,
-            lambda a, m: a + (h.bitwiseAND(m) != 0).cast("long") * 2 - 1,
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            balances,
-            masks,
-            lambda bal, m: F.when(bal > 0, m).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    return make_simhash_udf(bits)(col)
 
 
 def simhash_near_dup_pairs(
@@ -875,6 +819,7 @@ def dedup_against_base(
     bands: int = 16,
     max_bucket: int = 64,
     persist_base: bool = True,
+    persisted: list | None = None,
 ) -> DataFrame:
     """Incremental dedup: the rows of ``new_df`` (a crawl increment)
     that duplicate nothing in ``base_df`` (the existing corpus) —
@@ -899,7 +844,11 @@ def dedup_against_base(
     repeated increments against the same base, build the durable
     index ONCE with :func:`write_lsh_index` and use
     :func:`dedup_against_index` (equivalent results, pinned by
-    test)."""
+    test).
+
+    ``persisted`` (optional): passed to :func:`minhash_lsh_pairs`, which
+    appends its ``persist_base`` signature cache for the caller to
+    ``session.release`` once the result has been consumed."""
     text_hash = F.md5(F.col(text_col))
     base_hashes = (
         base_df.where(F.col(text_col).isNotNull())
@@ -937,6 +886,7 @@ def dedup_against_base(
         threshold=threshold,
         max_bucket=max_bucket,
         persist_base=persist_base,
+        persisted=persisted,
         # drop same-side candidates BEFORE the verification join: the
         # base x base population dominates and is not wanted here
         candidate_filter=lambda a, b: side(a) != side(b),
@@ -1035,6 +985,7 @@ def dedup_against_index(
     text_col: str = "text",
     threshold: float | None = 0.8,
     persist_increment: bool = True,
+    persisted: list | None = None,
 ) -> DataFrame:
     """Incremental dedup against a :func:`write_lsh_index` index: the
     increment is the ONLY side that gets shingled/signatured; exact
@@ -1047,7 +998,11 @@ def dedup_against_index(
     favor: the symmetric path may evict a tagged row from an
     oversized bucket entirely, while here the increment row always
     compares against the bucket's stored members (strictly ≥ recall);
-    both sides cap their own bucket membership."""
+    both sides cap their own bucket membership.
+
+    ``persisted`` (optional): a list the ``persist_increment`` cache is
+    appended to, for the caller to ``session.release`` once the result
+    has been consumed. Without it the cache outlives the call."""
     spark = new_df.sparkSession
     p = spark.read.parquet(f"{index_path}/params").collect()[0]
     shingle_n, num_hashes, bands, max_bucket = (
@@ -1073,10 +1028,13 @@ def dedup_against_index(
         .withColumn("_sig", minhash_signatures("_nsh", num_hashes))
     )
     if persist_increment:
-        # feeds banding AND verification; same never-unpersisted
-        # lifecycle as minhash_lsh_pairs' base (pass False from sinks
-        # that cannot release caches, e.g. foreachBatch)
+        # feeds banding AND verification; released by the caller
+        # through ``persisted``, as minhash_lsh_pairs' base (pass
+        # False from sinks that cannot release caches, e.g.
+        # foreachBatch)
         inc = inc.persist()
+        if persisted is not None:
+            persisted.append(inc)
     inc_banded = inc.select(
         "_nid", band_key_expr(F.col("_sig"), bands, rows_per_band).alias("bk")
     )

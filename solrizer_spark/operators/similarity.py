@@ -58,30 +58,14 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     exclude_id: int | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k against a literal query vector. The
     ``orderBy(...).limit(k)`` compiles to TakeOrderedAndProject —
-    per-partition heaps + driver merge, no global sort shuffle. The
-    query norm is a Python-computed literal (same fold order, same
-    double) — Catalyst does not fold aggregates over literal arrays,
-    so inline ``cosine`` re-ran the q·q fold per scanned row.
-
-    ``arrow=True`` (default) scores through the Arrow numpy kernel
-    (:func:`make_cosine_to_query_udf` — bit-identical doubles by
-    construction); ``arrow=False`` is the pure-Column interpreted-HOF
-    fallback (zero Python in the plan)."""
-    import math
-
-    if arrow:
-        cos = make_cosine_to_query_udf(query_vec)(F.col(vec_col))
-    else:
-        q = F.array(*[F.lit(float(v)) for v in query_vec])
-        nq = F.lit(math.sqrt(sum(float(v) * float(v) for v in query_vec)))
-        nv = norm(F.col(vec_col))
-        cos = F.when(
-            nv * nq != 0.0, dot(F.col(vec_col), q) / (nv * nq)
-        ).otherwise(F.lit(0.0))
+    per-partition heaps + driver merge, no global sort shuffle.
+    Scoring is the Arrow numpy kernel
+    (:func:`make_cosine_to_query_udf`: the query norm is computed once
+    in Python, the per-row folds match the SQL oracle bit-for-bit)."""
+    cos = make_cosine_to_query_udf(query_vec)(F.col(vec_col))
     out = df.select(
         F.col(id_col),
         F.round(cos, 6).alias("cos_sim"),
@@ -137,7 +121,6 @@ def lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     bands: int = 1,
-    arrow: bool = True,
 ) -> DataFrame:
     """Approximate top-k: exact cosine within the query's hyperplane
     bucket(s) only. At 10^12 scale the bucketed table is precomputed
@@ -156,9 +139,8 @@ def lsh_topk(
     filter (at scale: one stored bucket column per band, nprobe-style
     partition pruning).
 
-    ``arrow=True`` computes all band keys in one Arrow batch pass
-    (:func:`make_band_keys_udf`); ``arrow=False`` keeps the plan pure
-    Column. Either way the probe filter is an OR of integer
+    All band keys come from one Arrow batch pass
+    (:func:`make_band_keys_udf`); the probe filter is an OR of integer
     equalities against plan-time query buckets."""
     dims = len(query_vec)
 
@@ -171,27 +153,17 @@ def lsh_topk(
             bucket = bucket * 2 + (1 if proj > 0 else 0)
         return bucket
 
-    if arrow:
-        withk = df.withColumn(
-            "_bkeys", make_band_keys_udf(bands, n_bits, dims)(F.col(vec_col))
-        )
-        cond = None
-        for band in range(bands):
-            this = F.element_at(F.col("_bkeys"), band + 1) == q_bucket_for(
-                band * n_bits
-            )
-            cond = this if cond is None else (cond | this)
-        return brute_force_topk(
-            withk.where(cond).drop("_bkeys"), query_vec, k, id_col, vec_col
-        )
+    withk = df.withColumn(
+        "_bkeys", make_band_keys_udf(bands, n_bits, dims)(F.col(vec_col))
+    )
     cond = None
-    out = df
     for band in range(bands):
-        col = hyperplane_bucket(F.col(vec_col), n_bits, dims, offset=band * n_bits)
-        this = col == q_bucket_for(band * n_bits)
+        this = F.element_at(F.col("_bkeys"), band + 1) == q_bucket_for(
+            band * n_bits
+        )
         cond = this if cond is None else (cond | this)
     return brute_force_topk(
-        out.where(cond), query_vec, k, id_col, vec_col, arrow=False
+        withk.where(cond).drop("_bkeys"), query_vec, k, id_col, vec_col
     )
 
 
@@ -216,15 +188,14 @@ def ivf_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool = True,
 ) -> DataFrame:
     """IVF approximate top-k: partition vectors into inverted lists by
     nearest centroid, probe only the ``nprobe`` cells nearest the
     query, exact cosine inside them. The scale path to LSH's
     alternative: at 10^12 vectors the cell assignment is a stored
     column (Iceberg partition) and a probe scans nprobe/n_cells of
-    the data. ``arrow`` picks the Arrow-kernel or pure-Column
-    assignment+scoring (bit-identical either way)."""
+    the data. Assignment and scoring are Arrow kernels
+    (:func:`make_assign_cell_sim_udf`, :func:`brute_force_topk`)."""
 
     def cos(a: list[float], b: list[float]) -> float:
         import math
@@ -236,14 +207,11 @@ def ivf_topk(
 
     order = sorted(range(len(centroids)), key=lambda i: (-cos(query_vec, centroids[i]), i))
     probe_cells = order[:nprobe]
-    if arrow:
-        cell = make_assign_cell_sim_udf(centroids)(F.col(vec_col))["cell"]
-    else:
-        cell = assign_ivf_cell(F.col(vec_col), centroids)
+    cell = make_assign_cell_sim_udf(centroids)(F.col(vec_col))["cell"]
     cells = df.withColumn("_cell", cell)
     return brute_force_topk(
         cells.where(F.col("_cell").isin(probe_cells)),
-        query_vec, k, id_col, vec_col, arrow=arrow,
+        query_vec, k, id_col, vec_col,
     )
 
 
@@ -257,19 +225,16 @@ def embedding_near_dup_pairs(
     bands: int = 8,
     max_bucket: int = 64,
     persist_base: bool = True,
-    arrow: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: banded hyperplane LSH →
     candidate pairs → exact cosine ≥ threshold. With 8 bands × 8 bits,
     a pair at cos 0.999 collides in ≥1 band with P ≈ 1−3e-8; random
     pairs (cos≈0) collide with P ≈ 8/256.
 
-    ``arrow=True`` (default) runs the two flop-heavy stages — the
-    bands·bits·dims banding projections and the per-candidate-pair
-    exact cosine — through Arrow numpy kernels
-    (:func:`make_band_keys_udf`, :func:`make_cosine_pair_udf`),
-    bit-identical to the Column folds; ``arrow=False`` keeps the whole
-    plan JVM-only (interpreted HOFs — see the kernel-section note)."""
+    The two flop-heavy stages — the bands·bits·dims banding
+    projections and the per-candidate-pair exact cosine — run through
+    Arrow numpy kernels (:func:`make_band_keys_udf`,
+    :func:`make_cosine_pair_udf`)."""
     from solrizer_spark.operators.repartition import ensure_min_parallelism
 
     # hyperplane-projection banding over 64-dim vectors is the
@@ -286,30 +251,14 @@ def embedding_near_dup_pairs(
     # through the cap window's shuffle+sort (verification re-joins it
     # from the persisted base) — with it, 8 bands × every 64-float
     # vector crosses the wire (measured ~2× on this query)
-    if arrow:
-        # one Arrow batch pass computes all band keys; posexplode's
-        # position IS the band index (the make_band_keys_udf contract)
-        banded = base.select(
-            "_id",
-            F.posexplode(
-                make_band_keys_udf(bands, band_bits, dims)(F.col("_v"))
-            ).alias("band", "key"),
-        )
-    else:
-        banded = base.select(
-            "_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(band).alias("band"),
-                            hyperplane_bucket(F.col("_v"), band_bits, dims, offset=band * band_bits).alias("key"),
-                        )
-                        for band in range(bands)
-                    ]
-                )
-            ).alias("bk"),
-        ).select("_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    # one Arrow batch pass computes all band keys; posexplode's
+    # position IS the band index (the make_band_keys_udf contract)
+    banded = base.select(
+        "_id",
+        F.posexplode(
+            make_band_keys_udf(bands, band_bits, dims)(F.col("_v"))
+        ).alias("band", "key"),
+    )
     from solrizer_spark.operators.dedup import (
         cap_bucket_rows,
         explode_bucket_pairs,
@@ -332,11 +281,7 @@ def embedding_near_dup_pairs(
         .distinct()
     )
     vecs = base
-    pair_cos = (
-        make_cosine_pair_udf(dims)(F.col("_va"), F.col("_vb"))
-        if arrow
-        else cosine(F.col("_va"), F.col("_vb"))
-    )
+    pair_cos = make_cosine_pair_udf(dims)(F.col("_va"), F.col("_vb"))
     return (
         pairs.join(vecs.withColumnRenamed("_id", "id_a").withColumnRenamed("_v", "_va"), "id_a")
         .join(vecs.withColumnRenamed("_id", "id_b").withColumnRenamed("_v", "_vb"), "id_b")
@@ -393,20 +338,20 @@ def kmeans_fit(
     n_iter: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool = True,
 ) -> list[list[float]]:
     """Distributed spherical k-means (Lloyd's) — trains the IVF
     centroids :func:`ivf_topk` / :func:`assign_ivf_cell` consume,
     closing the "centroids come from somewhere" seam in-engine.
 
-    Scale shape: per round, assignment is the Arrow numpy kernel
-    (:func:`make_assign_cell_sim_udf`, bit-identical to the
-    pure-codegen :func:`assign_ivf_cell` literal expression — the
-    ``arrow=False`` fallback); the update is
+    Scale shape: up to 4096 cells, each round is ONE mapInPandas
+    fold (:func:`_make_kmeans_stats_fold`: the
+    :func:`make_assign_cell_sim_udf` assignment arithmetic plus
+    per-cell sums), yielding one ``k × dims`` row per partition —
+    corpus size never reaches the driver. Past 4096 cells assignment
+    is the broadcast join :func:`assign_cells_join` and the update is
     posexplode → groupBy(cell, pos) partial-aggregated sums, so the
-    shuffle carries at most ``partitions × k × dims`` rows and only
-    ``k × dims`` floats ever reach the driver — corpus size never
-    does. Init is deterministic: the ``k`` vectors with the smallest
+    shuffle carries at most ``partitions × k × dims`` rows. Init is
+    deterministic: the ``k`` vectors with the smallest
     ``xxhash64(id)`` (total order, tie-broken by id).
 
     Iterative → not SQL-expressible; the oracle pattern is the same
@@ -426,23 +371,20 @@ def kmeans_fit(
     training (and unpersisted after) unless the caller already
     persisted it — at 10^9 vectors, re-running a parse/UDF chain
     ``n_iter`` times is a real cost."""
-    import math
-
     from pyspark import StorageLevel
 
     already = df.storageLevel.useMemory or df.storageLevel.useDisk
     if not already:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        return _kmeans_fit_loop(df, k, n_iter, id_col, vec_col, arrow)
+        return _kmeans_fit_loop(df, k, n_iter, id_col, vec_col)
     finally:
         if not already:
             df.unpersist()
 
 
 def _kmeans_fit_loop(
-    df: DataFrame, k: int, n_iter: int, id_col: str, vec_col: str,
-    arrow: bool = True,
+    df: DataFrame, k: int, n_iter: int, id_col: str, vec_col: str
 ) -> list[list[float]]:
     import math
 
@@ -462,7 +404,7 @@ def _kmeans_fit_loop(
     cents = [l2([float(x) for x in r["_v"]]) for r in seeds]
     dims = len(cents[0])
     for _ in range(n_iter):
-        if arrow and k <= 4096:
+        if k <= 4096:
             # Arrow numpy assignment fused with the update stats
             # (round 6): ONE mapInPandas stage per round yields a
             # single (k·dims sums) row per partition — no posexplode/
@@ -484,20 +426,12 @@ def _kmeans_fit_loop(
                 for c in range(k)
             ]
             continue
-        if k <= 64:
-            # literal-expression assignment: O(k·dims) plan nodes,
-            # zero extra shuffle
-            assigned = df.select(
-                assign_ivf_cell(F.col(vec_col), cents).alias("_cell"),
-                F.col(vec_col).alias("_v"),
-            )
-        else:
-            # large-k path: broadcast-join argmax (a 10^5-cell plan
-            # cannot carry 10^7 literals); keep_vec avoids a second
-            # join for the update below
-            assigned = assign_cells_join(
-                df, cents, id_col=id_col, vec_col=vec_col, keep_vec=True
-            ).select(F.col("cell").alias("_cell"), F.col(vec_col).alias("_v"))
+        # large-k path: broadcast-join argmax (a 10^5-cell plan
+        # cannot carry 10^7 literals); keep_vec avoids a second
+        # join for the update below
+        assigned = assign_cells_join(
+            df, cents, id_col=id_col, vec_col=vec_col, keep_vec=True
+        ).select(F.col("cell").alias("_cell"), F.col(vec_col).alias("_v"))
         stats = (
             assigned.select("_cell", F.posexplode("_v").alias("pos", "x"))
             .groupBy("_cell", "pos")
@@ -569,7 +503,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     tau: float = 0.99,
     max_cell: int | None = None,
-    arrow: bool = True,
     persist_assigned: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
@@ -577,48 +510,34 @@ def semantic_dedup(
     within-cluster cosine near-duplicates.
 
     Each vector is assigned to its nearest centroid
-    (:func:`assign_ivf_cell_sim`, pure codegen); within every cell,
-    pairs with ``round(cosine, 6) ≥ tau`` mark the HIGHER id as the
-    duplicate (keep-first, deterministic). Output: one row per input
-    — ``(id, cell, semantic_dup)``.
+    (:func:`make_assign_cell_sim_udf`); within every cell, pairs with
+    ``round(cosine, 6) ≥ tau`` mark the HIGHER id as the duplicate
+    (keep-first, deterministic). Output: one row per input —
+    ``(id, cell, semantic_dup)``.
 
-    Scale: the within-cell self-join is the SemDeDup design point —
+    Scale: the within-cell pair stage is the SemDeDup design point —
     quadratic only inside a cell, so ``k`` must grow with the corpus
-    (the paper uses cells of ~10^4 over 10^8 docs). For skewed or
-    degenerate clusterings, ``max_cell`` caps each cell's join
+    (the paper uses cells of ~10^4 over 10^8 docs). Contract: one
+    cell must fit in a Python worker (see
+    :func:`make_semdedup_cell_fn`). ``max_cell`` is the valve for
+    skewed or degenerate clusterings: it caps each cell's
     participants by ascending id pre-shuffle (the
     :func:`~solrizer_spark.operators.dedup.cap_bucket_rows` valve —
     docs beyond the cap are never flagged, trading recall for a hard
     bound, same contract as the LSH pair caps). Vectors are
-    L2-normalized ONCE per row before the join, so the per-pair work
-    is a single dot product — ``cosine()`` inline would recompute
-    both norms per pair, tripling the quadratic stage's flops
-    (measured 2.7× on the 100k-vector stress). No cartesian
-    (cell-key hash join); vectors ride the join exactly once per
-    side.
-
-    ``arrow=True`` (default) runs normalization, assignment, and the
-    per-pair dot through Arrow numpy kernels (bit-identical folds);
-    ``arrow=False`` is the pure-Column fallback."""
+    L2-normalized ONCE per row (:func:`make_unit_udf`), so the
+    per-pair work is a single dot product; no cartesian anywhere."""
     dims = len(centroids[0])
-    if arrow:
-        unit = make_unit_udf(dims)(F.col(vec_col))
-        cell = make_assign_cell_sim_udf(centroids)(F.col(vec_col))["cell"]
-    else:
-        nrm = norm(F.col(vec_col))
-        unit = F.when(
-            nrm != 0.0,
-            F.transform(F.col(vec_col), lambda x: x.cast("double") / nrm),
-        ).otherwise(F.transform(F.col(vec_col), lambda x: F.lit(0.0)))
-        cell = assign_ivf_cell_sim(F.col(vec_col), centroids)["cell"]
+    unit = make_unit_udf(dims)(F.col(vec_col))
+    cell = make_assign_cell_sim_udf(centroids)(F.col(vec_col))["cell"]
     assigned = df.select(
         F.col(id_col).alias("_id"),
         unit.alias("_v"),
         cell.alias("cell"),
     )
     if persist_assigned:
-        # feeds BOTH pair-join sides and the final dup-flag join —
-        # without it, normalization + k·dims assignment run 3× per
+        # feeds the grouped pair stage AND the final dup-flag join —
+        # without it, normalization + k·dims assignment run twice per
         # row (the embedding_near_dup_pairs persist_base rationale)
         assigned = assigned.persist()
     joinable = assigned
@@ -628,36 +547,21 @@ def semantic_dedup(
         joinable = cap_bucket_rows(
             assigned, [F.col("cell")], [F.col("_id")], max_cell
         )
-    if arrow:
-        # per-cell grouped verification: vectors cross to Python once
-        # per ROW; the quadratic pair stage is blocked numpy (see
-        # make_semdedup_cell_fn — a per-pair kernel or join ships
-        # vectors per PAIR and collapses at high pair/row ratios).
-        # The exact rounded-threshold decision stays JVM-side.
-        id_ddl = df.schema[id_col].dataType.simpleString()
-        pairs = joinable.groupBy("cell").applyInPandas(
-            make_semdedup_cell_fn(dims, tau),
-            schema=f"_ida {id_ddl}, _idb {id_ddl}, pair_dot double",
-        )
-        dups = (
-            pairs.where(F.round(F.col("pair_dot"), 6) >= tau)
-            .select(F.col("_idb").alias("_dup_id"))
-            .distinct()
-        )
-    else:
-        a = joinable.select(
-            F.col("_id").alias("_ida"), F.col("_v").alias("_va"), "cell"
-        )
-        b = joinable.select(
-            F.col("_id").alias("_idb"), F.col("_v").alias("_vb"), "cell"
-        )
-        dups = (
-            a.join(b, "cell")
-            .where(F.col("_ida") < F.col("_idb"))
-            .where(F.round(dot(F.col("_va"), F.col("_vb")), 6) >= tau)
-            .select(F.col("_idb").alias("_dup_id"))
-            .distinct()
-        )
+    # per-cell grouped verification: vectors cross to Python once per
+    # ROW; the quadratic pair stage is blocked numpy (see
+    # make_semdedup_cell_fn — a per-pair kernel or join ships vectors
+    # per PAIR and collapses at high pair/row ratios). The exact
+    # rounded-threshold decision stays JVM-side.
+    id_ddl = df.schema[id_col].dataType.simpleString()
+    pairs = joinable.groupBy("cell").applyInPandas(
+        make_semdedup_cell_fn(dims, tau),
+        schema=f"_ida {id_ddl}, _idb {id_ddl}, pair_dot double",
+    )
+    dups = (
+        pairs.where(F.round(F.col("pair_dot"), 6) >= tau)
+        .select(F.col("_idb").alias("_dup_id"))
+        .distinct()
+    )
     return (
         assigned.join(dups, assigned["_id"] == F.col("_dup_id"), "left")
         .select(
@@ -686,9 +590,10 @@ def semantic_dedup(
 # ``array_position(sims, array_max(sims))`` tie-break). Rounding
 # (``F.round``, HALF_UP) always stays a JVM Column op over the kernel
 # output — numpy's banker's rounding never touches oracle-checked
-# values. Each call site keeps a pure-Column ``arrow=False`` fallback
-# (zero Python in the plan) for JVM-only contexts, the
-# :func:`pq_encode` discipline.
+# values. These kernels are the only form the operators run; the
+# Column twins that remain (:func:`cosine`, :func:`hyperplane_bucket`,
+# :func:`assign_ivf_cell_sim`) serve the broadcast-join and registry
+# paths and the kernel bit-parity tests.
 # --------------------------------------------------------------------------
 
 
@@ -722,32 +627,11 @@ def make_cosine_pair_udf(dims: int):
     return cosine_pair_udf
 
 
-def make_dot_pair_udf(dims: int):
-    """Arrow pairwise dot — the :func:`dot` Column twin for
-    :func:`semantic_dedup`'s unit-vector pair verification."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def dot_pair_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        if a.empty:
-            return pd.Series([], dtype="float64")
-        A = np.asarray(a.tolist(), dtype=np.float64).reshape(len(a), dims)
-        B = np.asarray(b.tolist(), dtype=np.float64).reshape(len(b), dims)
-        d = np.zeros(len(a))
-        for p in range(dims):
-            d = d + A[:, p] * B[:, p]
-        return pd.Series(d)
-
-    return dot_pair_udf
-
-
 def make_unit_udf(dims: int):
-    """Arrow L2-normalizer — twin of the ``transform(x, x/‖x‖)``
-    Column in :func:`semantic_dedup` (zero vectors → zero vectors).
-    float32 → float64 widening is exact, so the per-element division
-    matches ``x.cast("double") / nrm`` bit-for-bit."""
+    """Arrow L2-normalizer for :func:`semantic_dedup` (zero vectors →
+    zero vectors): the norm is the :func:`norm` left fold, and
+    float32 → float64 widening is exact, so each element matches the
+    Column ``transform(x, x.cast("double") / norm(x))`` bit-for-bit."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, DoubleType
@@ -919,10 +803,9 @@ def make_semdedup_cell_fn(dims: int, tau: float):
     Column fold took 105 s. Grouping by cell moves each vector across
     ONCE PER ROW and runs the quadratic stage as vectorized numpy
     (row blocks of 1024 bound the accumulator at blocksize × cell
-    rows). Contract: one cell must fit in a Python worker (the
-    ``max_cell`` cap is the valve — same memory story as the
-    collect_list buckets); ``arrow=False`` keeps the unbounded-cell
-    join+fold shape."""
+    rows). Contract: one cell must fit in a Python worker; the
+    ``max_cell`` cap is the only valve (same memory story as the
+    collect_list buckets)."""
     import numpy as np
 
     pre = tau - 1e-6
@@ -996,66 +879,14 @@ def make_cosine_to_query_udf(query_vec: list[float]):
 # Product quantization (IVF-PQ scale path)
 # --------------------------------------------------------------------------
 
-def _pq_subvec(vec: Column, sub: int, ds: int) -> Column:
-    """Subspace slice ``sub`` of width ``ds`` (1-based F.slice)."""
-    return F.slice(vec, sub * ds + 1, ds)
-
-
-def _pq_dists(subvec: Column, codebook: list[list[float]]) -> Column:
-    """Array of per-centroid L2 scores ``|c|² − 2·x·c`` (the
-    ``|x|²`` term is constant across centroids, so argmin is
-    unchanged and the plan carries half the terms). ``|c|²`` is
-    evaluated in PYTHON with the same left-assoc fold the SQL oracle
-    chains, so both engines embed bit-identical literals — the
-    assign_ivf_cell_sim parity discipline."""
-    return F.array(
-        *[
-            F.lit(float(sum(v * v for v in c)))
-            - 2.0 * dot(subvec, F.array(*[F.lit(float(v)) for v in c]))
-            for c in codebook
-        ]
-    )
-
-
-def pq_assign_cell(subvec: Column, codebook: list[list[float]]) -> Column:
-    """Nearest-codeword index for one subspace (lowest L2; ties →
-    LOWEST index via a strictly-less fold, matching the oracle's
-    ``ORDER BY d ASC, cell ASC``). The codebook is a plan-time
-    literal (k·ds terms per subspace; the documented large-k escape
-    hatch is a per-subspace broadcast join, the
-    :func:`assign_cells_join` shape).
-
-    Argmin is ONE fold over (dist, index) pairs — NOT
-    ``array_position(d, array_min(d))``, which references the
-    k-distance array twice: higher-order functions run interpreted,
-    so the duplication literally doubled per-row cost (measured 1.9×
-    on pq_train's assignment stage). Distances and tie-breaks are
-    bit-identical to the two-reference form."""
-    d = _pq_dists(subvec, codebook)
-    pairs = F.zip_with(
-        d,
-        F.sequence(F.lit(0), F.lit(len(codebook) - 1)),
-        lambda x, i: F.struct(x.alias("d"), i.alias("i")),
-    )
-    best = F.aggregate(
-        pairs,
-        F.struct(
-            F.lit(float("inf")).alias("d"), F.lit(-1).alias("i")
-        ),
-        lambda acc, v: F.when(v["d"] < acc["d"], v).otherwise(acc),
-    )
-    return best["i"].cast("int")
-
-
 def make_pq_encode_udf(codebooks: list[list[list[float]]]):
     """Arrow-batched PQ encoder: numpy across (rows × cells), but the
     per-dimension accumulation is an EXPLICIT left fold (``acc = acc
-    + x_p·w_p`` for p = 0..ds-1 in float64), so every distance is
-    bit-identical to the Column fold ``aggregate(0.0, +)`` and the
-    unrolled SQL chain — argmin (first minimal = lowest cell) lands
-    on the same codeword even at exact ties. The interpreted
-    higher-order-function form cost ~3 ms/row-core for ~1k flops;
-    this is the same arithmetic at numpy speed."""
+    + x_p·w_p`` for p = 0..ds-1 in float64), so every distance
+    ``|c|² − 2·x·c`` (``|c|²`` a Python left fold) is bit-identical to
+    the unrolled SQL chain of the PQ oracle — argmin (first minimal =
+    lowest cell, the oracle's ``ORDER BY d ASC, cell ASC``) lands on
+    the same codeword even at exact ties."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -1091,32 +922,15 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     vec_col: str = "embedding",
     out_col: str = "pq_code",
-    arrow: bool = True,
 ) -> DataFrame:
     """Add ``out_col: array<int>`` — the PQ code (one codeword index
     per subspace). Map-side, zero shuffle; at ``m=8, k=256`` the
     stored code is 8 bytes per vector vs 256 bytes of float32 at
     dims=64 — the 32× compression that lets a 10^12-vector ADC scan
     read codes only (column pruning drops the raw vectors entirely).
-
-    ``arrow=True`` (default) encodes through ONE Arrow-vectorized
-    numpy stage (:func:`make_pq_encode_udf` — bit-identical distances
-    by construction); ``arrow=False`` is the pure-Column fallback
-    (zero Python in the plan) for contexts that must stay JVM-only."""
-    m = len(codebooks)
-    ds = len(codebooks[0][0])
-    if arrow:
-        enc = make_pq_encode_udf(codebooks)
-        return df.withColumn(out_col, enc(F.col(vec_col)))
-    return df.withColumn(
-        out_col,
-        F.array(
-            *[
-                pq_assign_cell(_pq_subvec(F.col(vec_col), j, ds), codebooks[j])
-                for j in range(m)
-            ]
-        ),
-    )
+    Encoding is ONE Arrow-vectorized numpy stage
+    (:func:`make_pq_encode_udf`)."""
+    return df.withColumn(out_col, make_pq_encode_udf(codebooks)(F.col(vec_col)))
 
 
 def pq_train(
@@ -1136,11 +950,12 @@ def pq_train(
     input covering all ``m`` subspaces (an explode by subspace, not
     ``m`` separate jobs).
 
-    Scale shape (the :func:`kmeans_fit` discipline): assignment is
-    pure-codegen literal expressions; the update shuffle carries at
-    most ``partitions × m × k × ds`` partially-aggregated rows (the
-    posexplode pre-aggregates map-side), and only ``m × k × ds``
-    floats ever reach the driver. Init is deterministic — the ``k``
+    Scale shape (the :func:`kmeans_fit` discipline): each round is ONE
+    ``mapInPandas`` fold (:func:`_make_pq_stats_fold` — the
+    :func:`make_pq_encode_udf` assignment arithmetic plus per-(sub,
+    cell) sums and counts), yielding one ``m × k × ds`` row per
+    partition — no shuffle, and corpus size never reaches the
+    driver. Init is deterministic — the ``k``
     vectors with the smallest ``xxhash64(id)``, sliced per subspace.
     Empty cells keep their previous codeword. The input is persisted
     for the duration of training unless the caller already did.
@@ -1302,10 +1117,9 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     code_col: str | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """PQ top-k with asymmetric distance (ADC) + exact re-rank:
-    encode every vector (pure codegen), approximate its distance to
+    encode every vector (:func:`pq_encode`), approximate its distance to
     the query as the integer-LUT sum over its code, TakeOrdered the
     ``shortlist`` best (ties → lowest id), then exact-cosine re-rank
     the shortlist to the final ``k``.
@@ -1325,7 +1139,6 @@ def pq_topk(
     tie-break (lowest id) silently drops true neighbors. Rule of
     thumb: shortlist ≳ expected cluster/near-dup group size, and
     always ≫ k (FAISS practice: re-rank 100-1000× k)."""
-    m = len(codebooks)
     lut = pq_lut(query_vec, codebooks)
     lut_lit = F.array(
         *[F.array(*[F.lit(v) for v in row]) for row in lut]
@@ -1333,7 +1146,7 @@ def pq_topk(
     if code_col is not None:
         coded = df.withColumn("_code", F.col(code_col))
     else:
-        coded = pq_encode(df, codebooks, vec_col=vec_col, out_col="_code", arrow=arrow)
+        coded = pq_encode(df, codebooks, vec_col=vec_col, out_col="_code")
     adist = F.aggregate(
         F.zip_with(
             F.col("_code"),
@@ -1343,12 +1156,17 @@ def pq_topk(
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
+    # coalesce(1) is free (the shortlist is one partition already) and
+    # keeps the re-rank's Python projection from being pushed below
+    # the limit, which would turn the shortlist from TakeOrdered into a
+    # range-partitioned sort of the whole input
     short = (
         coded.withColumn("_adist", adist)
         .orderBy(F.col("_adist").asc(), F.col(id_col).asc())
         .limit(shortlist)
+        .coalesce(1)
     )
-    return brute_force_topk(short, query_vec, k, id_col, vec_col, arrow=arrow)
+    return brute_force_topk(short, query_vec, k, id_col, vec_col)
 
 
 def ivfpq_topk(
@@ -1363,7 +1181,6 @@ def ivfpq_topk(
     vec_col: str = "embedding",
     cell_col: str | None = None,
     code_col: str | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """Full IVF-PQ (the FAISS ``IVFx,PQy`` composition): coarse-probe
     the ``nprobe`` cells nearest the query, then PQ-ADC shortlist +
@@ -1385,12 +1202,10 @@ def ivfpq_topk(
     probe = order[:nprobe]
     if cell_col is not None:
         cell = F.col(cell_col)
-    elif arrow:
-        cell = make_assign_cell_sim_udf(centroids)(F.col(vec_col))["cell"]
     else:
-        cell = assign_ivf_cell(F.col(vec_col), centroids)
+        cell = make_assign_cell_sim_udf(centroids)(F.col(vec_col))["cell"]
     probed = df.withColumn("_cell", cell).where(F.col("_cell").isin(probe))
     return pq_topk(
         probed, query_vec, codebooks, k=k, shortlist=shortlist,
-        id_col=id_col, vec_col=vec_col, code_col=code_col, arrow=arrow,
+        id_col=id_col, vec_col=vec_col, code_col=code_col,
     )

@@ -119,6 +119,22 @@ def test_curate_releases_op_checkpoints(spark, docs_table, tmp_path):
     assert rows_after[1] < rows_after[0]  # the near-dups collapsed
     assert len(jsc.getPersistentRDDs()) == before
 
+    # basededup: the LSH signature cache (--base-path) and the
+    # increment cache (--base-index) are released as well
+    from solrizer_spark.operators.dedup import write_lsh_index
+
+    base = spark.read.parquet(docs_table).where(F.col("doc_id") == 4)
+    base_path, idx = str(tmp_path / "base"), str(tmp_path / "idx")
+    base.write.parquet(base_path)
+    write_lsh_index(base, idx)
+    for name, kw in (("path", {"base_path": base_path}), ("index", {"base_index": idx})):
+        stats = run_curate(
+            spark, _args(input=docs_table, output=str(tmp_path / f"o_{name}"),
+                         ops="basededup", near_threshold=0.8, **kw)
+        )
+        assert stats["ops"][0]["rows_after"] == 5, name  # doc 4 dropped
+        assert len(jsc.getPersistentRDDs()) == before, name
+
 
 def test_curate_chunk_and_unknown_op(spark, docs_table, tmp_path):
     from curate import run_curate

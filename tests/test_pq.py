@@ -15,7 +15,6 @@ import pytest
 
 from solrizer_spark.operators.similarity import (
     brute_force_topk,
-    pq_assign_cell,
     pq_encode,
     pq_lut,
     pq_topk,
@@ -96,15 +95,17 @@ def test_pq_topk_recall_and_rerank_exactness(emb):
     assert recall >= 0.7, f"recall@10 {recall} below floor"
 
 
-def test_pq_assign_cell_tie_breaks_lowest(spark):
-    """Two identical codewords → first (lowest) index wins, matching
-    the oracle's ORDER BY d ASC, cell ASC."""
-    df = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<float>")
-    book = [[1.0, 0.0], [1.0, 0.0], [0.0, 1.0]]
-    got = df.select(
-        pq_assign_cell(F.col("embedding"), book).alias("c")
-    ).first()["c"]
-    assert got == 0
+def test_pq_encode_tie_breaks_lowest(spark):
+    """Two identical codewords → first (lowest) index wins in every
+    subspace, matching the oracle's ORDER BY d ASC, cell ASC."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 1.0])], "vec_id long, embedding array<float>"
+    )
+    books = [
+        [[1.0, 0.0], [1.0, 0.0], [0.0, 1.0]],
+        [[1.0, 0.0], [0.0, 1.0], [0.0, 1.0]],
+    ]
+    assert pq_encode(df, books).first()["pq_code"] == [0, 1]
 
 
 def test_pq_empty_cell_keeps_previous_codeword(spark):

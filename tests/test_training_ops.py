@@ -25,25 +25,20 @@ def test_exact_dedup(docs):
     assert out[3] == 1 and out[4] == 1 and out[5] == 1
 
 
-def test_explode_bucket_pairs_matches_expression_form(spark):
-    """The codegen double-explode pair generator (round-6 optimization)
-    emits EXACTLY the (i<j) pair set of the bucket_pairs expression —
-    scalar members and struct members, including 2-member buckets and
-    the last-element empty-slice edge."""
-    from solrizer_spark.operators.dedup import bucket_pairs, explode_bucket_pairs
+def test_explode_bucket_pairs_matches_combinations(spark):
+    """The codegen double-explode pair generator emits EXACTLY the
+    (i<j) pairs of each member array, in member order — scalar members
+    and struct members, including 2-member buckets and the
+    last-element empty-slice edge."""
+    import itertools
 
-    df = spark.createDataFrame(
-        [(1, [1, 2, 3, 4]), (2, [7, 8]), (3, [5, 6, 7])],
-        "b int, ids array<int>",
-    )
-    old = sorted(
-        tuple(r)
-        for r in df.select(F.explode(bucket_pairs(F.col("ids"))).alias("p"))
-        .select("p.a", "p.b")
-        .collect()
-    )
+    from solrizer_spark.operators.dedup import explode_bucket_pairs
+
+    buckets = [(1, [1, 2, 3, 4]), (2, [7, 8]), (3, [5, 6, 7])]
+    df = spark.createDataFrame(buckets, "b int, ids array<int>")
+    want = sorted(p for _, ids in buckets for p in itertools.combinations(ids, 2))
     new = sorted(tuple(r) for r in explode_bucket_pairs(df, "ids").collect())
-    assert old == new
+    assert new == want
     assert len(new) == 6 + 1 + 3
 
     sdf = spark.createDataFrame(

@@ -263,17 +263,16 @@ def main() -> int:
         "partial_count" in p18 or "partial count" in p18.lower(),
     )
 
-    # semantic_dedup now defaults to the Arrow numpy kernels (the
-    # pq_encode discipline): Python crossings must be Arrow-batched
-    # only (never row-at-a-time BatchEvalPython), still no cartesian;
-    # the arrow=False fallback stays pure JVM (audited below)
+    # semantic_dedup runs on Arrow numpy kernels: Python crossings
+    # must be Arrow-batched only (never row-at-a-time BatchEvalPython),
+    # still no cartesian
     p19 = plan_of(em.q_semantic_dedup(spark, sf))
     check(
         "semantic_dedup_arrow_only_no_cartesian",
         "BatchEvalPython" not in p19
         and "CartesianProduct" not in p19
         and "BroadcastNestedLoopJoin" not in p19,
-        f"arrow={p19.count('ArrowEvalPython')} exchanges={p19.count('Exchange')}",
+        f"arrow_evals={p19.count('ArrowEvalPython')} exchanges={p19.count('Exchange')}",
     )
     from solrizer_spark.operators.similarity import (
         embedding_near_dup_pairs,
@@ -283,14 +282,21 @@ def main() -> int:
     _cents4 = [
         [((j * 13 + d * 5) % 9 - 4) / 4.0 for d in range(64)] for j in range(4)
     ]
-    p19b = plan_of(semantic_dedup(emb, _cents4, tau=0.99, arrow=False))
+    # the operators' default plans outside the registry queries: the
+    # same Arrow-only, no-cartesian shape
+    p19b = plan_of(semantic_dedup(emb, _cents4, tau=0.99))
     p19c = plan_of(
-        embedding_near_dup_pairs(emb, threshold=0.99, persist_base=False, arrow=False)
+        embedding_near_dup_pairs(emb, threshold=0.99, persist_base=False)
     )
     check(
-        "similarity_column_fallbacks_pure_jvm",
-        all("EvalPython" not in p and "CartesianProduct" not in p for p in (p19b, p19c)),
-        f"python={p19b.count('EvalPython')},{p19c.count('EvalPython')}",
+        "similarity_default_plans_arrow_only_no_cartesian",
+        all(
+            "BatchEvalPython" not in p
+            and "CartesianProduct" not in p
+            and "BroadcastNestedLoopJoin" not in p
+            for p in (p19b, p19c)
+        ),
+        f"arrow_evals={p19b.count('ArrowEvalPython')},{p19c.count('ArrowEvalPython')}",
     )
 
     p20 = plan_of(em.q_importance_resample(spark, sf))
@@ -312,35 +318,40 @@ def main() -> int:
         f"exchanges={p21.count('Exchange')}",
     )
 
-    # PQ: encode is pure codegen (no Python, no exchange on the
-    # map side); the ADC shortlist and the exact re-rank are both
-    # TakeOrdered — never a global sort; no join at all in the scan
+    # PQ: encode is map-side (Arrow-batched Python only, no exchange);
+    # the ADC shortlist and the exact re-rank are both TakeOrdered —
+    # never a global sort; no join at all in the scan
     from solrizer_spark.operators.similarity import pq_encode, pq_topk
 
     _books = [
         [[((j * 31 + c * 7 + p) % 11 - 5) / 5.0 for p in range(8)] for c in range(16)]
         for j in range(8)
     ]
-    p22 = plan_of(pq_encode(emb, _books, arrow=False))
+    p22 = plan_of(pq_encode(emb, _books))
     check(
-        "pq_encode_pure_codegen_no_shuffle",
-        "EvalPython" not in p22 and "Exchange" not in p22,
+        "pq_encode_arrow_batched_no_shuffle",
+        "BatchEvalPython" not in p22 and "Exchange" not in p22,
         f"exchanges={p22.count('Exchange')}",
     )
     # production ADC shape: codes are a STORED column (encode once,
-    # probe many) — the probe plan itself carries zero Python
-    p23 = plan_of(
-        pq_topk(
-            pq_encode(emb, _books, arrow=False), em._QUERY_VEC, _books,
-            k=10, shortlist=64, code_col="pq_code", arrow=False,
+    # probe many) — the only Python in the probe plan is the exact
+    # re-rank over the <= shortlist rows
+    with tempfile.TemporaryDirectory() as td:
+        pq_encode(emb, _books).write.parquet(f"{td}/codes")
+        p23 = plan_of(
+            pq_topk(
+                spark.read.parquet(f"{td}/codes"), em._QUERY_VEC, _books,
+                k=10, shortlist=64, code_col="pq_code",
+            )
         )
-    )
     check(
-        "pq_adc_takeordered_no_python",
+        "pq_adc_takeordered_rerank_only_python",
         p23.count("TakeOrderedAndProject") == 2
-        and "EvalPython" not in p23
+        and p23.count("EvalPython") == 1
+        and p23.count("ArrowEvalPython") == 1
         and "CartesianProduct" not in p23,
-        f"takeordered={p23.count('TakeOrderedAndProject')}",
+        f"takeordered={p23.count('TakeOrderedAndProject')} "
+        f"python={p23.count('EvalPython')}",
     )
 
     # token-budget mix, approx mode: the rates dim broadcasts and the
@@ -373,7 +384,7 @@ def main() -> int:
     check(
         "outline_rides_single_arrow_stage",
         p25.count("ArrowEvalPython") == 1 and "Exchange" not in p25,
-        f"arrow={p25.count('ArrowEvalPython')} exch={p25.count('Exchange')}",
+        f"arrow_evals={p25.count('ArrowEvalPython')} exch={p25.count('Exchange')}",
     )
 
     # Arrow PQ encode: exactly one ArrowEvalPython, zero exchanges
@@ -384,7 +395,7 @@ def main() -> int:
     check(
         "pq_encode_single_arrow_no_shuffle",
         p26.count("ArrowEvalPython") == 1 and "Exchange" not in p26,
-        f"arrow={p26.count('ArrowEvalPython')} exch={p26.count('Exchange')}",
+        f"arrow_evals={p26.count('ArrowEvalPython')} exch={p26.count('Exchange')}",
     )
 
     # broadcast Bloom probe: membership is executor-local — one
