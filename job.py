@@ -6,15 +6,19 @@
 Dataflow (SURVEY.md §3.4):
 
     read pages (column-pruned scan)
+      → input bytes from the file listing (no job) size both the
+        placement's task count and n_buckets (default: one bucket per
+        64 MB of input, 1..256; unknown size → 256)
       → partition_key = pmod(xxhash64(url, salt), n_buckets)
-      → [resume] prune buckets already in the completion manifest
+      → [resume] prune buckets already in the completion manifest for
+        this (corpus, n_buckets, salt); none complete → a fresh run
       → bucket-aligned salted repartition by url-hash   (the one shuffle:
         skew defuse; each task holds whole buckets)
       → field chain: extract → content_model → discoverability
         → dates → facets → aggregate_fields → doc       (one Python stage)
       → write doc + the columns it lacks, partitionBy(partition_key)
                                                         (same stage: a
-        local sort, one zstd file per bucket; dynamic overwrite)
+        local sort, one zstd file per bucket slice; dynamic overwrite)
       → read the sink back once → per-bucket lineage/metrics collected
         to the driver → one metrics file, then one manifest file
                                                         (manifest-last)
@@ -43,7 +47,13 @@ from solrizer_spark.operators.manifests import (
     filter_completed,
 )
 from solrizer_spark.operators.metrics import attach_observation, build_metrics
-from solrizer_spark.operators.repartition import salted_repartition, url_bucket
+from solrizer_spark.operators.repartition import (
+    _scan_input_bytes,
+    buckets_for_bytes,
+    partitions_for_bytes,
+    salted_repartition,
+    url_bucket,
+)
 from solrizer_spark.plans.pipeline import DEFAULT_CHAIN, build_pipeline
 from solrizer_spark.session import get_spark, release
 from solrizer_spark.sources.pages import docs_sink_columns, read_pages, write_table
@@ -53,7 +63,7 @@ def run_job(
     spark,
     input_path: str,
     output_path: str,
-    n_buckets: int = 256,
+    n_buckets: int | None = None,
     salt: int = 0,
     resume: bool = False,
     num_partitions: int | None = None,
@@ -104,6 +114,13 @@ def run_job(
         pages = spark.read.parquet(ingest_path)
         ingested_path = ingest_path
     corpus_fp = corpus_fingerprint(pages)
+    # static file-listing estimate, no job; None for a non-file source
+    # or a non-local filesystem
+    input_bytes = _scan_input_bytes(pages)
+    if n_buckets is None:
+        # a pure function of the input (see buckets_for_bytes): the
+        # manifest records it, and a resume re-derives the same count
+        n_buckets = buckets_for_bytes(input_bytes)
     pages = pages.withColumn("partition_key", url_bucket("url", n_buckets, salt))
 
     done: list[int] = []
@@ -116,15 +133,8 @@ def run_job(
         # bytes-aware default: one 64 MB partition per task with a
         # one-task-per-core floor (see partitions_for_bytes — the
         # identity-UDF profile showed per-task Arrow round-trips
-        # dominating under-filled layouts). Static file-listing
-        # estimate, no job; unknown (non-file source) falls back to
+        # dominating under-filled layouts). Unknown bytes fall back to
         # the session's shuffle-partition setting.
-        from solrizer_spark.operators.repartition import (
-            _scan_input_bytes,
-            partitions_for_bytes,
-        )
-
-        input_bytes = _scan_input_bytes(pages)
         cores = spark.sparkContext.defaultParallelism
         if input_bytes is not None:
             num_partitions = partitions_for_bytes(input_bytes, cores)
@@ -267,10 +277,14 @@ def run_job(
 
     docs, obs = attach_observation(docs)
     t0 = time.monotonic()
-    if not resume:
-        # full overwrite: a fresh run must not inherit stale partitions
-        # from a previous run with different bucketing/salt (dynamic
-        # overwrite never clears partitions absent from this run)
+    if not done:
+        # a fresh run — no --resume, or nothing complete for this
+        # (corpus, n_buckets, salt) — must not inherit a previous run's
+        # partitions or completion rows: dynamic overwrite never clears
+        # buckets absent from this run (a smaller n_buckets would leave
+        # the old high buckets in place). The manifest goes first, so a
+        # crash from here on leaves nothing marked complete.
+        shutil.rmtree(manifest_path, ignore_errors=True)
         shutil.rmtree(docs_path, ignore_errors=True)
     # dynamic overwrite: on resume, only the buckets recomputed this
     # run are replaced; completed buckets' data stays in place.
@@ -290,10 +304,7 @@ def run_job(
 
     # manifest-last: completion rows derive from the durably written
     # sink, restricted to buckets recomputed THIS run (resume appends
-    # must not duplicate prior completion rows). On a fresh run, prior
-    # manifests for this output are superseded — drop them.
-    if not resume:
-        shutil.rmtree(manifest_path, ignore_errors=True)
+    # must not duplicate prior completion rows)
     written = spark.read.parquet(docs_path)
     if done:
         written = written.where(~F.col("partition_key").isin(done))
@@ -354,6 +365,8 @@ def run_job(
         "docs_per_sec": round(n_docs / elapsed, 1) if elapsed > 0 else None,
         "elapsed_sec": round(elapsed, 2),
         "skipped_buckets": skipped,
+        "n_buckets": n_buckets,
+        "input_bytes": input_bytes,
         "counters": {k: int(v) for k, v in counters.items() if v is not None},
         **({"near_dedup": near_dedup_stats} if near_dedup_stats is not None else {}),
         **({"host_graph": host_graph_stats} if host_graph_stats is not None else {}),
@@ -364,7 +377,11 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--buckets", type=int, default=256)
+    ap.add_argument(
+        "--buckets", type=int, default=None,
+        help="default: derived from input bytes, 1..256; an explicit "
+        "value is used as is",
+    )
     ap.add_argument("--salt", type=int, default=0)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--cpus", type=int, default=None)

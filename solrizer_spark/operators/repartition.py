@@ -33,6 +33,15 @@ from pyspark.sql import functions as F
 #: in a whole-bucket placement (see :func:`bucket_aligned_partitions`).
 MAX_BUCKET_SHARE = 1.25
 
+#: Input bytes per sink bucket when the bucket count is derived from the
+#: input (see :func:`buckets_for_bytes`): about one
+#: :func:`partitions_for_bytes` task's input.
+BUCKET_TARGET_BYTES = 64 * 1024**2
+
+#: The most sink buckets a derived count gives: inputs of 16 GB and more,
+#: and inputs of unknown size.
+MAX_BUCKETS = 256
+
 
 def url_bucket(url: Column | str, n_buckets: int, salt: int = 0) -> Column:
     """Stable bucket id in [0, n_buckets) for a url — pure function of
@@ -128,6 +137,21 @@ def partitions_for_bytes(
     if max_partitions is not None:
         want = min(want, max_partitions)
     return want
+
+
+def buckets_for_bytes(input_bytes: int | None) -> int:
+    """Sink bucket count for an input of ``input_bytes``:
+    ``⌈input_bytes / BUCKET_TARGET_BYTES⌉`` clamped to
+    ``[1, MAX_BUCKETS]``; unknown bytes (None) give ``MAX_BUCKETS``.
+
+    Each bucket is one directory and at least one parquet file, and
+    most of a small sink's wall time is that fixed cost per file, paid
+    at the write and again at the read-back. The count is a pure
+    function of the input — never of cores or cluster size — so a
+    ``--resume`` over the same files derives the same count."""
+    if input_bytes is None:
+        return MAX_BUCKETS
+    return min(MAX_BUCKETS, max(1, math.ceil(input_bytes / BUCKET_TARGET_BYTES)))
 
 
 def _scan_input_bytes(df: DataFrame) -> int | None:

@@ -605,3 +605,90 @@ def test_default_docs_plan_has_one_shuffle(spark, corpus_dir, tmp_path, monkeypa
     run_job(spark, os.path.join(corpus_dir, "pages"), str(tmp_path / "o"), n_buckets=16)
     plan = written["docs"]._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
+
+
+def test_buckets_for_bytes_follows_input_size():
+    """The sink's default bucket count: one bucket per 64 MB of input,
+    clamped to 1..256, and 256 (the fixed layout) for an unknown size.
+    It takes the bytes alone — no core or cluster count."""
+    import inspect
+
+    from solrizer_spark.operators.repartition import buckets_for_bytes
+
+    assert buckets_for_bytes(0) == 1
+    assert buckets_for_bytes(1_300_000) == 1
+    assert buckets_for_bytes(64 * 1024**2 + 1) == 2
+    assert buckets_for_bytes(16 * 1024**3) == 256
+    assert buckets_for_bytes(100 * 1024**4) == 256
+    assert buckets_for_bytes(None) == 256
+    sizes = [0, 1, 2**20, 2**26, 2**26 + 1, 2**30, 2**33, 2**34 - 1, 2**34, 2**40]
+    counts = [buckets_for_bytes(n) for n in sizes]
+    assert counts == sorted(counts)
+    assert list(inspect.signature(buckets_for_bytes).parameters) == ["input_bytes"]
+
+
+@pytest.fixture(scope="module")
+def derived_output(spark, corpus_dir):
+    out = tempfile.mkdtemp() + "/derived"
+    return out, run_job(spark, os.path.join(corpus_dir, "pages"), out)
+
+
+def test_default_bucket_count_follows_input(spark, corpus_dir, derived_output):
+    """Without an explicit count the sink's buckets follow the input's
+    bytes: the 200-page corpus is one bucket, written as at most one
+    file per placement task, beside one metrics and one manifest
+    file — not a file per bucket of a fixed 256."""
+    import glob
+
+    from solrizer_spark.operators.repartition import (
+        bucket_aligned_partitions,
+        buckets_for_bytes,
+        partitions_for_bytes,
+    )
+
+    out, stats = derived_output
+    pages = glob.glob(os.path.join(corpus_dir, "pages", "*.parquet"))
+    assert stats["input_bytes"] == sum(os.path.getsize(p) for p in pages)
+    assert stats["n_buckets"] == buckets_for_bytes(stats["input_bytes"]) == 1
+    assert stats["n_docs"] == 200
+    tasks = bucket_aligned_partitions(
+        partitions_for_bytes(stats["input_bytes"], spark.sparkContext.defaultParallelism),
+        stats["n_buckets"],
+    )
+    files, buckets = _sink_files(os.path.join(out, "docs"))
+    assert buckets == {"partition_key=0"}
+    assert len(files) <= tasks, sorted(files)
+    for table in ("metrics", "manifests"):
+        assert os.listdir(os.path.join(out, table)) == [f"part-{stats['run_id']}.parquet"]
+    manifest = spark.read.parquet(os.path.join(out, "manifests"))
+    assert [tuple(r) for r in manifest.select("partition_key", "n_buckets").collect()] == [(0, 1)]
+
+
+def test_resume_rederives_bucket_count(spark, corpus_dir, derived_output):
+    """A --resume over the same files derives the same bucket count,
+    finds every bucket complete, and extracts nothing."""
+    out, stats = derived_output
+    again = run_job(spark, os.path.join(corpus_dir, "pages"), out, resume=True)
+    assert again["n_buckets"] == stats["n_buckets"]
+    assert again["skipped_buckets"] == again["n_buckets"]
+    assert again["n_docs"] == 0
+
+
+def test_resume_under_new_bucket_count_is_a_fresh_run(spark, corpus_dir, tmp_path):
+    """A --resume that finds nothing complete for its (corpus,
+    n_buckets, salt) runs fresh: the previous layout's buckets and
+    completion rows go, instead of staying beside the new buckets
+    (every url would be stored twice)."""
+    src = os.path.join(corpus_dir, "pages")
+    out = str(tmp_path / "o")
+    run_job(spark, src, out, n_buckets=8)
+    stats = run_job(spark, src, out, n_buckets=4, resume=True)
+    assert stats["skipped_buckets"] == 0
+    assert stats["n_docs"] == 200
+    _, buckets = _sink_files(os.path.join(out, "docs"))
+    assert buckets == {f"partition_key={b}" for b in range(4)}
+    docs = spark.read.parquet(os.path.join(out, "docs"))
+    assert docs.count() == docs.select("url").distinct().count() == 200
+    manifest = spark.read.parquet(os.path.join(out, "manifests"))
+    assert sorted(r.partition_key for r in manifest.collect()) == [0, 1, 2, 3]
+    assert {r.n_buckets for r in manifest.collect()} == {4}
