@@ -734,10 +734,12 @@ def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over a near-dup pair list (transitive
-    closure → one cluster id per doc; min-label propagation). The
-    synthesized edge set includes 5-node CHAINS (diameter 4), so the
-    result is only right if labels propagate multiple rounds — plus
-    disjoint 2-node components."""
+    closure → one cluster id per doc, the component's minimum id).
+    The synthesized edge set includes 5-node CHAINS (diameter 4), so
+    the result is only right if labels cross multiple hops — plus
+    disjoint 2-node components. This small pair list is labelled on
+    the driver; ``tests/test_dedup_scale_paths.py`` checks the same
+    query on the distributed (star) path too."""
     from solrizer_spark.operators.dedup import connected_components
 
     docs = _table(spark, sf_dir, "documents").select("doc_id")

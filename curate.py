@@ -61,7 +61,10 @@ the connected-component rounds it is not fault-tolerant — a lost
 executor fails the run) and counted, and the next op and the write
 read that checkpoint instead of re-running every op before it.
 ``--stats none`` keeps the pipeline fully lazy — one plan, run by the
-write — for giant runs where the sink row count suffices.
+write — for giant runs where the sink row count suffices. Either way
+the ``neardedup`` entry carries ``cc``, the stats of its
+connected-components step (``path``, ``pairs``, ``rounds``,
+``converged``).
 """
 
 from __future__ import annotations
@@ -84,7 +87,8 @@ KNOWN_OPS = (
 
 
 def apply_op(
-    df: DataFrame, op: str, args, id_col: str, text_col: str, persisted: list
+    df: DataFrame, op: str, args, id_col: str, text_col: str, persisted: list,
+    stats: dict | None = None,
 ) -> DataFrame:
     if op == "normalize":
         from solrizer_spark.functions.scrub import normalize_text
@@ -202,8 +206,11 @@ def apply_op(
             threshold=args.near_threshold,
             persisted=persisted,
         )
-        comps = connected_components(pairs, algorithm=args.cc_algorithm)
-        persisted.append(comps)  # the final round's label checkpoint
+        cc: dict = {}
+        comps = connected_components(pairs, stats=cc)
+        if stats is not None:
+            stats["cc"] = cc
+        persisted.append(comps)  # star's final label checkpoint
         return dedup_keep_canonical(df, comps, id_col=id_col)
     if op == "basededup":
         if args.base_index:
@@ -425,8 +432,8 @@ def run_curate(spark, args) -> dict:
         stats["rows_in"] = df.count()
     persisted: list = []
     for op in ops:
-        df = apply_op(df, op, args, args.id_col, args.text_col, persisted)
         entry = {"op": op}
+        df = apply_op(df, op, args, args.id_col, args.text_col, persisted, entry)
         if args.stats == "full":
             # materialize the op once: its count, the next op and the
             # write read the checkpoint instead of re-running the prefix
@@ -484,8 +491,6 @@ def main() -> None:
     ap.add_argument("--span-keep", choices=["first", "none"], default="first",
                     help="substrdedup op: keep the globally-first copy or none")
     ap.add_argument("--near-threshold", type=float, default=0.8)
-    ap.add_argument("--cc-algorithm", choices=["label_propagation", "star"],
-                    default="label_propagation")
     ap.add_argument("--benchmark-file", default=None)
     ap.add_argument("--base-path", default=None,
                     help="basededup op: parquet path of the existing corpus")

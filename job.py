@@ -72,7 +72,6 @@ def run_job(
     dedup: str | None = None,
     stage_conf: dict | None = None,
     near_signatures_path: str | None = None,
-    near_cc_algorithm: str = "label_propagation",
     input_format: str = "auto",
     host_graph: bool = False,
     outline: bool = False,
@@ -264,10 +263,8 @@ def run_job(
             persisted=near_dedup_persisted,
         )
         near_dedup_stats = {}
-        comps = connected_components(
-            pairs, algorithm=near_cc_algorithm, stats=near_dedup_stats
-        )
-        near_dedup_persisted.append(comps)  # the final label checkpoint
+        comps = connected_components(pairs, stats=near_dedup_stats)
+        near_dedup_persisted.append(comps)  # star's final label checkpoint
         docs = dedup_keep_canonical(docs, comps, id_col="url")
 
     if dedup in ("canonical", "exact", "near") or model_chains:
@@ -409,14 +406,6 @@ def main() -> None:
         "results are identical)",
     )
     ap.add_argument(
-        "--near-cc-algorithm", choices=["label_propagation", "star"],
-        default="label_propagation",
-        help="with --dedup near: connected-components algorithm — "
-        "label_propagation converges in O(diameter) rounds (near-clique "
-        "dup clusters), star (large-star/small-star) in O(log^2 n) "
-        "rounds regardless of diameter (huge or chain-shaped graphs)",
-    )
-    ap.add_argument(
         "--outline", action="store_true",
         help="add an outline column (array<struct<level,text>>: the "
         "h1-h6 heading hierarchy in document order, parser-grounded "
@@ -476,7 +465,6 @@ def main() -> None:
         stage_conf=stage_conf,
         dedup=args.dedup,
         near_signatures_path=args.near_signatures_path,
-        near_cc_algorithm=args.near_cc_algorithm,
         input_format=args.input_format,
         host_graph=args.host_graph,
         outline=args.outline,

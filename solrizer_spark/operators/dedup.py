@@ -14,7 +14,8 @@ corpus-scale operators a 10^12-document extraction pipeline feeds:
 * :func:`ngram_jaccard`      exact shingle-set Jaccard between two
                              text columns
 * :func:`connected_components`  pairs → transitive-closure cluster ids
-                             (min-label propagation)
+                             (numpy on the driver for small pair
+                             lists, large-star/small-star above)
 * :func:`dedup_keep_canonical`  drop all but each cluster's min-id doc
 * :func:`duplicate_spans` /  exact substring dedup at fixed window
   :func:`remove_duplicate_spans`  size (Lee et al. 2022 ExactSubstr)
@@ -32,6 +33,7 @@ from __future__ import annotations
 
 import functools
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -529,13 +531,11 @@ def remove_repeated_lines(
     )
 
 
-def _label_checksum() -> Column:
-    """Type-agnostic convergence checksum: sum of per-row label hashes
-    — identical iff no label changed this round (hash-collision
-    false-stop probability ~2^-64 per round). decimal(38,0): a plain
-    BIGINT sum overflows under ANSI mode; xxhash64 of the string form
-    keeps numeric and url ids on one code path."""
-    return F.sum(F.xxhash64(F.col("component")).cast("decimal(38,0)")).alias("label_sum")
+#: Pair lists of fewer rows than this are labelled on the driver (one
+#: ``toArrow`` of the pair checkpoint, numpy passes, a local frame);
+#: the rest run the distributed :func:`_star_components`. At the bound
+#: the driver holds 2^21 ids: ~130 MB of Arrow if they are 60-byte urls.
+DRIVER_CC_MAX_PAIRS = 1 << 20
 
 
 def connected_components(
@@ -543,8 +543,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 25,
-    algorithm: str = "label_propagation",
-    strict: bool = False,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair list — the step
@@ -552,152 +550,122 @@ def connected_components(
     closure groups pairs into clusters so one canonical doc per
     cluster survives. Returns ``(id, component)`` for every id that
     appears in ``pairs``, where ``component`` is the minimum id
-    reachable (deterministic regardless of iteration order).
-
-    Two interchangeable algorithms (identical output):
-
-    * ``label_propagation`` (default): labels start as own id; each
-      round every node takes the min of its label and its neighbors'
-      labels (ids may be any orderable type — numeric doc ids or
-      urls); converges in O(diameter) rounds (LSH dup clusters are
-      near-cliques, so typically 1-3). Each round is one shuffle
-      (aggregate min over edges) + one join.
-    * ``star``: alternating large-star/small-star contraction
-      (Kiveris et al., "Connected Components in MapReduce and
-      Beyond", SoCC'14) — converges in O(log² n) rounds regardless
-      of diameter, the right choice for 10^12-edge graphs or long
-      chain topologies (see :func:`_star_round`).
+    reachable (deterministic regardless of iteration order). Ids may
+    be any orderable type — numeric doc ids or urls.
 
     The pair list is materialized once on entry (an eager
-    ``localCheckpoint``; like the rounds, not fault-tolerant), so the
-    caller's pair lineage runs exactly once however many edge frames
-    read it. Per round exactly ONE Spark action runs: the convergence
-    checksum rides the eager ``localCheckpoint`` materialization as an
-    ``observe()`` metric (no separate probe job), and the checkpoint
-    truncates the growing lineage. Each round's checkpoint is released
-    once the next has materialized, and the pair checkpoint on return.
+    ``localCheckpoint``; not fault-tolerant), so the caller's pair
+    lineage runs exactly once, and an ``observe()`` on that
+    checkpoint counts the pairs without a job of its own. Then:
 
-    Non-convergence (component diameter > ``max_iterations`` under
-    label propagation) is never silent: ``strict=True`` raises;
-    otherwise a warning is logged and, when a ``stats`` dict is
-    supplied, ``stats['converged']=False`` + ``stats['rounds']`` let
-    callers (job.py run stats) surface it without log scraping.
+    * fewer than :data:`DRIVER_CC_MAX_PAIRS` pairs: the checkpoint is
+      read once as Arrow and labelled on the driver
+      (:func:`_driver_labels`); the result is a local frame, so the
+      caller's keep join broadcasts it. 2 jobs in all.
+    * more: alternating large-star/small-star contraction
+      (:func:`_star_components`, Kiveris et al., "Connected
+      Components in MapReduce and Beyond", SoCC'14), O(log² n)
+      rounds whatever the diameter, one checkpointed job per
+      half-round.
+
+    ``stats`` (optional dict) receives ``path`` (``"driver"`` or
+    ``"star"``), ``pairs``, ``rounds`` (0 on the driver) and
+    ``converged``. A star run that exhausts ``max_iterations`` still
+    returns one row per id, with ``converged=False`` and a warning:
+    a component still carrying split labels would keep several
+    "canonicals" for one true cluster.
     """
     from pyspark.sql import Observation
 
     from solrizer_spark.session import release
 
-    if algorithm not in ("label_propagation", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r} (label_propagation|star)")
-    # every edge frame below reads the pair list (both directions, the
-    # node set, the self-loops): materialize it ONCE. Left lazy, one
-    # action planned and ran the caller's whole pair lineage (for LSH:
-    # shingles → signatures → banding → verification joins) once per
-    # consumer — ≥4× under label propagation.
-    pair_ck = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).localCheckpoint()
-    edges = pair_ck.unionByName(
-        pair_ck.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-
-    converged = False
-    rounds = 0
-    if algorithm == "star":
-        edges = edges.persist()
-        labels, converged, rounds = _star_components(edges, max_iterations)
+    obs = Observation()
+    pair_ck = (
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        .observe(obs, F.count(F.lit(1)).alias("pairs"))
+        .localCheckpoint()
+    )
+    n_pairs = obs.get["pairs"]
+    if n_pairs < DRIVER_CC_MAX_PAIRS:
+        path, rounds, converged = "driver", 0, True
+        labels = _driver_components(pair_ck)
     else:
-        # Round-6 loop restructuring (guide §2.4 — remove shuffles
-        # outright): a SELF-LOOP per node folds "own label" into the
-        # neighbor-min aggregation, so each round is ONE join + ONE
-        # aggregation (was join + groupBy + second left join), and the
-        # edge list is hash-partitioned by the join key ONCE up front —
-        # previously the persisted post-distinct layout was keyed on
-        # (src, dst), so every round re-shuffled the FULL edge list by
-        # dst. Partition count derives from the measured edge count
-        # (~500k edge rows per task), not a constant, so the loop stays
-        # narrow at bench scale and wide at 10^9+ edges; the same
-        # count() fills the persist before the loop.
-        nodes = edges.select("src").distinct()
-        edges_full = edges.where(F.col("src") != F.col("dst")).unionByName(
-            nodes.select("src", F.col("src").alias("dst"))
-        )
-        # partition count from the STATIC input-size estimate (zero
-        # jobs — the ensure_min_parallelism discipline): ~64 MB of
-        # source bytes per loop partition, falling back to the session
-        # shuffle width when the estimate is unknown (shuffle-fed
-        # pairs already arrive that wide)
-        from solrizer_spark.operators.repartition import _scan_input_bytes
-
-        shuffle_parts = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        src_bytes = _scan_input_bytes(pairs)
-        if src_bytes is None:
-            n_parts = shuffle_parts
-        else:
-            n_parts = max(1, min(shuffle_parts, -(-src_bytes // (64 * 1024**2))))
-        edges_full = edges_full.repartition(n_parts, "dst").persist()
-        # fill the cache NOW (one pass over the pair checkpoint), then
-        # derive the initial labels from the cached self-loops
-        edges_full.count()
-        labels = edges_full.where(F.col("src") == F.col("dst")).select(
-            F.col("src").alias("id"), F.col("src").alias("component")
-        )
-        prev_sum = None  # round 1 always changes labels (any edge a<b
-        # gives b a smaller neighbor), except the empty graph, where
-        # both sums are None and we converge immediately
-        # (Round 6 note: fusing TWO propagation steps per action with
-        # stacked observe() checksums was tried and REVERTED — it hit
-        # a JVM assertion in toPyRow on the composed plan and profiled
-        # SLOWER than one checkpointed round per action.)
-        for rounds in range(1, max_iterations + 1):
-            obs = Observation()
-            new_labels = (
-                # SHUFFLE_HASH build on the label side: the (big,
-                # persisted, already-partitioned) edge list streams
-                # without the per-round sort a sort-merge join would
-                # re-run on it every iteration
-                edges_full.join(
-                    labels.hint("shuffle_hash"), edges_full.dst == labels.id
-                )
-                .groupBy("src")
-                .agg(F.min("component").alias("component"))
-                .withColumnRenamed("src", "id")
-                .observe(obs, _label_checksum())
-                .localCheckpoint()  # eager: runs the round's ONE job
-            )
-            new_sum = obs.get["label_sum"]
-            release(labels)  # the previous round's checkpoint
-            labels = new_labels
-            if new_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = new_sum
-        edges_full.unpersist()
-    edges.unpersist()
+        path = "star"
+        edges = pair_ck.unionByName(
+            pair_ck.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).distinct().persist()
+        labels, converged, rounds = _star_components(edges, max_iterations)
+        edges.unpersist()
     release(pair_ck)
     if stats is not None:
-        stats["converged"] = converged
-        stats["rounds"] = rounds
-        stats["algorithm"] = algorithm
+        stats.update(path=path, pairs=n_pairs, rounds=rounds, converged=converged)
     if not converged:
-        # a component wider than max_iterations hops still carries
-        # split labels — dedup would keep several "canonicals" for one
-        # true cluster. Never silent: raise under strict, else warn +
-        # stats flag.
-        msg = (
-            f"connected_components({algorithm}) did not converge in "
-            f"{max_iterations} iterations; labels for components with "
-            f"diameter > {max_iterations} are incomplete — raise "
-            "max_iterations or use algorithm='star'"
-        )
-        if strict:
-            raise RuntimeError(msg)
         import logging
 
-        logging.getLogger(__name__).warning(msg)
+        logging.getLogger(__name__).warning(
+            "connected_components did not converge in %d star rounds; "
+            "labels of the largest components are incomplete — raise "
+            "max_iterations",
+            max_iterations,
+        )
     return labels
+
+
+def _driver_components(pair_ck: DataFrame) -> DataFrame:
+    """``(id, component)`` for a collected pair list, as a local frame
+    with the ids' own type. The ids are encoded as their ranks in
+    sorted order (Arrow sorts strings by UTF-8 bytes, Spark's string
+    order), so the minimum code of a component is its minimum id."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import StructField, StructType
+
+    table = pair_ck.toArrow()
+    ends = pa.chunked_array(
+        table["src"].chunks + table["dst"].chunks, table.schema.field("src").type
+    )
+    ids = pc.unique(ends)
+    ids = ids.take(pc.sort_indices(ids))
+    codes = pc.index_in(ends, value_set=ids).to_numpy()
+    n = table.num_rows
+    root = _driver_labels(codes[:n], codes[n:], len(ids))[0]
+    field = pair_ck.schema["src"]
+    schema = StructType([
+        StructField("id", field.dataType, field.nullable),
+        StructField("component", field.dataType, field.nullable),
+    ])
+    out = pa.table({"id": ids, "component": ids.take(root)})
+    return pair_ck.sparkSession.createDataFrame(out, schema=schema)
+
+
+def _driver_labels(src, dst, n: int):
+    """Component root of each of ``n`` nodes, given integer edge
+    endpoints: the smallest node of its component. Returns
+    ``(root, passes)``.
+
+    Alternates two vectorized passes until no edge spans two roots:
+    *hook* points each root at the smallest root across its edges,
+    *jump* halves every path (``parent = parent[parent]``) until each
+    node points at its root. A parent is never larger than its node,
+    so no cycle forms; every tree with an edge to another tree merges
+    each round, so there are O(log n) rounds of O(log n) jumps."""
+    parent = np.arange(n)
+    passes = 0
+    while True:
+        ru, rv = parent[src], parent[dst]
+        split = ru != rv
+        if not split.any():
+            return parent, passes
+        np.minimum.at(
+            parent, np.maximum(ru, rv)[split], np.minimum(ru, rv)[split]
+        )
+        passes += 1
+        while True:
+            grand = parent[parent]
+            passes += 1
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
 
 
 def _star_components(edges: DataFrame, max_iterations: int):
@@ -711,14 +679,12 @@ def _star_components(edges: DataFrame, max_iterations: int):
 
     Each half-round is one groupBy shuffle + one broadcast-free join,
     and the edge set only shrinks toward a star per component, so the
-    round count is O(log² n) independent of graph diameter — the
-    documented swap-in for 10^12-edge graphs where min-label
-    propagation's O(diameter) rounds are unaffordable. Works for any
-    orderable id type (numeric or url), like the label-propagation
-    path.
+    round count is O(log² n) independent of graph diameter (min-label
+    propagation needs O(diameter) rounds). Works for any orderable id
+    type (numeric or url).
 
-    Returns ``(labels, converged, rounds)`` with labels in the same
-    ``(id, component)`` shape as label propagation.
+    Returns ``(labels, converged, rounds)`` with labels in the
+    ``(id, component)`` shape of :func:`connected_components`.
     """
     from pyspark.sql import Observation
 

@@ -14,7 +14,7 @@ def _args(**kw) -> argparse.Namespace:
     base = dict(
         input=None, output=None, ops=None, id_col="doc_id", text_col="text",
         min_quality=0.5, langs="en", line_min_count=3, near_threshold=0.5,
-        cc_algorithm="label_propagation", benchmark_file=None,
+        benchmark_file=None,
         mix_source_col="lang", mix_temperature=0.7, chunk_tokens=8,
         chunk_overlap=2, cpus=None, stats="full", report=None,
         min_fluency=1e-4, base_path=None, base_index=None, output_format="parquet",
@@ -95,7 +95,7 @@ def test_curate_stats_full_and_none_write_same_survivors(spark, docs_table, tmp_
     assert len(written["full"]) == 3
 
 
-def test_curate_releases_op_checkpoints(spark, docs_table, tmp_path):
+def test_curate_releases_op_checkpoints(spark, docs_table, tmp_path, monkeypatch):
     """The per-op checkpoints of ``--stats full`` are freed after the
     write: no persisted RDD outlives the call."""
     from curate import run_curate
@@ -109,15 +109,24 @@ def test_curate_releases_op_checkpoints(spark, docs_table, tmp_path):
     assert len(jsc.getPersistentRDDs()) == before
 
     # the ops that persist inside apply_op: neardedup's LSH signature
-    # cache and its final connected-component label checkpoint, and
-    # fluency's scan cache, are released with the op checkpoints
-    stats = run_curate(
-        spark, _args(input=docs_table, output=str(tmp_path / "o2"),
-                     ops="linededup,neardedup,fluency")
-    )
-    rows_after = [e["rows_after"] for e in stats["ops"]]
-    assert rows_after[1] < rows_after[0]  # the near-dups collapsed
-    assert len(jsc.getPersistentRDDs()) == before
+    # cache and, on the star path, its final connected-component label
+    # checkpoint, and fluency's scan cache, are released with the op
+    # checkpoints. The driver bound at 0 forces the star path.
+    from solrizer_spark.operators import dedup
+
+    for path in ("driver", "star"):
+        if path == "star":
+            monkeypatch.setattr(dedup, "DRIVER_CC_MAX_PAIRS", 0)
+        stats = run_curate(
+            spark, _args(input=docs_table, output=str(tmp_path / f"o2_{path}"),
+                         ops="linededup,neardedup,fluency")
+        )
+        rows_after = [e["rows_after"] for e in stats["ops"]]
+        assert rows_after[1] < rows_after[0], path  # the near-dups collapsed
+        cc = stats["ops"][1]["cc"]
+        assert (cc["path"], cc["converged"]) == (path, True)
+        assert cc["pairs"] > 0
+        assert len(jsc.getPersistentRDDs()) == before, path
 
     # basededup: the LSH signature cache (--base-path) and the
     # increment cache (--base-index) are released as well

@@ -3,12 +3,13 @@
 * ``signatures_path`` (write-signatures-to-table instead of executor
   persist) produces pair-identical output, including through the
   ``job.py --dedup near`` surface;
-* ``connected_components(algorithm='star')`` (large-star/small-star,
-  Kiveris et al. SoCC'14) matches min-label propagation on clique,
-  chain, and random topologies — and converges on a long chain where
-  a round-capped label propagation provably cannot;
-* non-convergence is surfaced (stats flag + strict raise), not just
-  logged (ADVICE r2).
+* ``connected_components`` matches a union-find reference on both of
+  its paths — the numpy labelling of small pair lists on the driver,
+  and large-star/small-star (Kiveris et al. SoCC'14), forced by
+  setting ``DRIVER_CC_MAX_PAIRS`` to 0 — and star converges on a long
+  chain within a small round budget;
+* star non-convergence is surfaced (stats flag + warning), not
+  silent.
 """
 
 from __future__ import annotations
@@ -54,75 +55,119 @@ TOPOLOGIES = {
 }
 
 
+CC_PATHS = ["driver", "star"]
+
+
+def _force_star(monkeypatch):
+    """Set the driver bound to 0: every pair list takes the star path."""
+    from solrizer_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "DRIVER_CC_MAX_PAIRS", 0)
+
+
+@pytest.fixture()
+def cc_path(request, monkeypatch):
+    """The connected_components path under test: ``driver`` runs as
+    shipped (these pair lists are far below the bound), ``star`` is
+    forced."""
+    if request.param == "star":
+        _force_star(monkeypatch)
+    return request.param
+
+
 @pytest.mark.parametrize("name", sorted(TOPOLOGIES))
-@pytest.mark.parametrize("algorithm", ["label_propagation", "star"])
-def test_cc_matches_union_find(spark, name, algorithm):
+@pytest.mark.parametrize("cc_path", CC_PATHS, indirect=True)
+def test_cc_matches_union_find(spark, name, cc_path):
     from solrizer_spark.operators.dedup import connected_components
 
     edges = TOPOLOGIES[name]
     stats = {}
-    got = _labels(
-        connected_components(
-            _pairs_df(spark, edges), algorithm=algorithm, stats=stats
-        )
-    )
+    got = _labels(connected_components(_pairs_df(spark, edges), stats=stats))
     assert got == _expected_components(edges)
+    assert stats["path"] == cc_path
+    assert stats["pairs"] == len(edges)
     assert stats["converged"] is True
-    assert stats["algorithm"] == algorithm
+    assert (stats["rounds"] == 0) == (cc_path == "driver")
 
 
-def test_cc_star_converges_where_capped_label_propagation_cannot(spark):
-    """A 16-hop chain needs ~16 label-propagation rounds; the star
-    algorithm contracts it within the same small round budget."""
+@pytest.mark.parametrize("cc_path", CC_PATHS, indirect=True)
+def test_cc_leaves_no_persisted_rdd(spark, cc_path):
+    """Nothing CC materializes outlives the call but the returned
+    labels: none on the driver path, star's label checkpoint, freed
+    by ``release``."""
+    from solrizer_spark.operators.dedup import connected_components
+    from solrizer_spark.session import release
+
+    def persisted():
+        # ids, not a count: the context cleaner may free RDDs that
+        # earlier tests left behind while this one runs
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    out = connected_components(_pairs_df(spark, TOPOLOGIES["star_plus_chain"]))
+    held = persisted() - before
+    assert len(held) == (0 if cc_path == "driver" else 1)
+    out.collect()
+    release(out)
+    assert not persisted() & held
+
+
+def test_cc_star_converges_on_long_chain(spark, monkeypatch):
+    """A 16-hop chain needs ~16 min-label propagation rounds; the star
+    algorithm contracts it within a round budget of 6."""
     from solrizer_spark.operators.dedup import connected_components
 
+    _force_star(monkeypatch)
     edges = [(i, i + 1) for i in range(1, 17)]
-    budget = 6
-
-    lp_stats = {}
-    lp = connected_components(
-        _pairs_df(spark, edges), max_iterations=budget, stats=lp_stats
-    )
-    assert lp_stats["converged"] is False
-    # incomplete labels: more than one "component" survives
-    assert lp.select("component").distinct().count() > 1
-
-    star_stats = {}
+    stats = {}
     star = connected_components(
-        _pairs_df(spark, edges),
-        max_iterations=budget,
-        algorithm="star",
-        stats=star_stats,
+        _pairs_df(spark, edges), max_iterations=6, stats=stats
     )
-    assert star_stats["converged"] is True
+    assert stats["path"] == "star"
+    assert stats["converged"] is True
+    assert stats["rounds"] <= 6
     assert _labels(star) == _expected_components(edges)
 
 
-def test_cc_strict_raises_on_nonconvergence(spark):
+# url ids, including non-ASCII ones: the component is the minimum id
+# in Spark's string order (UTF-8 bytes, so "é" sorts after "z")
+URL_PAIRS = [
+    ("u/b", "u/a"), ("u/b", "u/c"), ("u/x", "u/y"),
+    ("https://é.example/b", "https://z.example/a"),
+    ("https://ü.example/", "https://u.example/"),
+    ("https://ü.example/", "https://日本.example/"),
+]
+URL_LABELS = [
+    ("https://u.example/", "https://u.example/"),
+    ("https://z.example/a", "https://z.example/a"),
+    ("https://é.example/b", "https://z.example/a"),
+    ("https://ü.example/", "https://u.example/"),
+    ("https://日本.example/", "https://u.example/"),
+    ("u/a", "u/a"), ("u/b", "u/a"), ("u/c", "u/a"),
+    ("u/x", "u/x"), ("u/y", "u/x"),
+]
+
+
+def _check_string_ids(spark):
     from solrizer_spark.operators.dedup import connected_components
 
-    edges = [(i, i + 1) for i in range(1, 17)]
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(_pairs_df(spark, edges), max_iterations=3, strict=True)
+    pairs = spark.createDataFrame(URL_PAIRS, "id_a string, id_b string")
+    out = connected_components(pairs)
+    assert out.schema.simpleString() == "struct<id:string,component:string>"
+    assert _labels(out) == URL_LABELS
 
 
-def test_cc_string_ids_star(spark):
-    from solrizer_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [("u/b", "u/a"), ("u/b", "u/c"), ("u/x", "u/y")],
-        "id_a string, id_b string",
-    )
-    got = sorted((r["id"], r["component"]) for r in
-                 connected_components(pairs, algorithm="star").collect())
-    assert got == [
-        ("u/a", "u/a"), ("u/b", "u/a"), ("u/c", "u/a"),
-        ("u/x", "u/x"), ("u/y", "u/x"),
-    ]
+def test_cc_string_ids_star(spark, monkeypatch):
+    _force_star(monkeypatch)
+    _check_string_ids(spark)
 
 
-@pytest.mark.parametrize("algorithm", ["label_propagation", "star"])
-def test_cc_runs_pair_lineage_once(spark, algorithm):
+def test_cc_string_ids_driver(spark):
+    _check_string_ids(spark)
+
+
+@pytest.mark.parametrize("cc_path", CC_PATHS, indirect=True)
+def test_cc_runs_pair_lineage_once(spark, cc_path):
     """The caller's pair frame is computed once, however many edge
     frames read it: every row passing through a counting
     ``mapInPandas`` is counted once per time its lineage runs."""
@@ -137,20 +182,71 @@ def test_cc_runs_pair_lineage_once(spark, algorithm):
             yield pdf
 
     pairs = _pairs_df(spark, edges).mapInPandas(counted, "id_a long, id_b long")
-    got = _labels(connected_components(pairs, algorithm=algorithm))
+    got = _labels(connected_components(pairs))
     assert got == _expected_components(edges)
     assert seen.value == len(edges)
 
 
-def test_cc_empty_pairs(spark):
+def test_cc_empty_pairs(spark, monkeypatch):
     from solrizer_spark.operators.dedup import connected_components
 
     empty = spark.createDataFrame([], "id_a long, id_b long")
-    for algorithm in ("label_propagation", "star"):
+    for path in CC_PATHS:
+        if path == "star":
+            _force_star(monkeypatch)
         stats = {}
-        out = connected_components(empty, algorithm=algorithm, stats=stats)
+        out = connected_components(empty, stats=stats)
         assert out.count() == 0
+        assert stats["path"] == path
+        assert stats["pairs"] == 0
         assert stats["converged"] is True
+
+
+def test_cc_driver_long_chain(spark):
+    """A 10^5-node chain, its ids scrambled by a bijection, is one
+    component on the driver path; the numpy labelling takes
+    O(log² n) vectorized passes, not one per hop."""
+    import math
+
+    import numpy as np
+
+    from solrizer_spark.operators.dedup import _driver_labels, connected_components
+
+    n = 100_000
+
+    def scramble(c):
+        return (c * 7919) % n  # 7919 is prime, so coprime to n
+
+    pairs = spark.range(n - 1).select(
+        scramble(F.col("id")).alias("id_a"), scramble(F.col("id") + 1).alias("id_b")
+    )
+    stats = {}
+    out = connected_components(pairs, stats=stats)
+    assert stats == {"path": "driver", "pairs": n - 1, "rounds": 0, "converged": True}
+    got = out.agg(F.count("id"), F.countDistinct("id"), F.max("component")).first()
+    assert tuple(got) == (n, n, 0)
+
+    order = np.random.default_rng(0).permutation(n)
+    root, passes = _driver_labels(order[:-1], order[1:], n)
+    assert (root == 0).all()
+    assert passes <= math.ceil(math.log2(n)) ** 2
+
+
+@pytest.mark.parametrize("cc_path", CC_PATHS, indirect=True)
+def test_q_dedup_clusters_matches_union_find(spark, cc_path, tmp_path):
+    """The ``dedup_clusters`` registry query (chains of diameter 4
+    plus disjoint pairs) against the union-find reference, over a
+    ``documents`` table of 200 doc ids."""
+    import __spark_entry__ as em
+
+    ids = list(range(200))
+    spark.range(200).withColumnRenamed("id", "doc_id").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    edges = [(i, i + 1) for i in ids if i % 16 < 4]
+    edges += [(i, i + 2) for i in ids if i % 16 in (8, 9)]
+    got = _labels(em.q_dedup_clusters(spark, str(tmp_path)))
+    assert got == _expected_components(edges)
 
 
 def _near_dup_docs(spark, n=40):
@@ -189,10 +285,11 @@ def test_signatures_path_pairs_identical(spark, tmp_path):
     assert any(f.endswith(".parquet") for f in os.listdir(tmp_path / "sigs"))
 
 
-def test_job_near_dedup_signatures_and_star(spark, corpus_dir, tmp_path):
+def test_job_near_dedup_signatures_and_star(spark, corpus_dir, tmp_path, monkeypatch):
     """job.py --dedup near via the scale paths: signatures-to-table +
-    star CC give byte-identical surviving docs vs the default path,
-    and the run stats carry the convergence flag."""
+    star CC (driver bound forced to 0) give byte-identical surviving
+    docs vs the default path, and the run stats carry the CC path and
+    convergence flag."""
     from job import run_job
 
     out_a = str(tmp_path / "out_default")
@@ -200,6 +297,7 @@ def test_job_near_dedup_signatures_and_star(spark, corpus_dir, tmp_path):
     stats_a = run_job(
         spark, f"{corpus_dir}/pages", out_a, n_buckets=16, dedup="near"
     )
+    _force_star(monkeypatch)
     stats_b = run_job(
         spark,
         f"{corpus_dir}/pages",
@@ -207,41 +305,48 @@ def test_job_near_dedup_signatures_and_star(spark, corpus_dir, tmp_path):
         n_buckets=16,
         dedup="near",
         near_signatures_path=str(tmp_path / "sigs"),
-        near_cc_algorithm="star",
     )
     assert stats_a["near_dedup"]["converged"] is True
     assert stats_b["near_dedup"]["converged"] is True
-    assert stats_b["near_dedup"]["algorithm"] == "star"
+    assert stats_a["near_dedup"]["path"] == "driver"
+    assert stats_b["near_dedup"]["path"] == "star"
+    assert stats_a["near_dedup"]["pairs"] == stats_b["near_dedup"]["pairs"]
     da = spark.read.parquet(f"{out_a}/docs").select("url", "extracted_text")
     db = spark.read.parquet(f"{out_b}/docs").select("url", "extracted_text")
     assert sorted(map(tuple, da.collect())) == sorted(map(tuple, db.collect()))
     assert stats_a["n_docs"] == stats_b["n_docs"] > 0
 
 
-def test_cc_star_lone_self_pair(spark):
+def test_cc_star_lone_self_pair(spark, monkeypatch):
     """A node whose ONLY edge is a self-pair must still get a label row
     (review regression: star dropped self-loops before labeling)."""
     from solrizer_spark.operators.dedup import connected_components
 
+    _force_star(monkeypatch)
     pairs = spark.createDataFrame([(7, 7), (1, 2)], "id_a long, id_b long")
-    got = _labels(connected_components(pairs, algorithm="star"))
+    got = _labels(connected_components(pairs))
     assert got == [(1, 1), (2, 1), (7, 7)]
 
 
-def test_cc_star_nonconverged_one_row_per_id(spark):
+def test_cc_star_nonconverged_one_row_per_id(spark, monkeypatch, caplog):
     """Exhausting the round budget must still yield structurally valid
     labels: exactly one row per id (review regression: mid-contraction
-    edge lists produced duplicate ids with conflicting components)."""
-    from solrizer_spark.operators.dedup import connected_components
+    edge lists produced duplicate ids with conflicting components).
+    And it is never silent: the stats say ``converged=False`` and a
+    warning is logged."""
+    from solrizer_spark.operators import dedup
 
+    _force_star(monkeypatch)
     edges = [(i, i + 1) for i in range(1, 40)]
     stats = {}
-    out = connected_components(
-        _pairs_df(spark, edges), max_iterations=1, algorithm="star", stats=stats
-    ).collect()
+    with caplog.at_level("WARNING", logger=dedup.__name__):
+        out = dedup.connected_components(
+            _pairs_df(spark, edges), max_iterations=1, stats=stats
+        ).collect()
     ids = [r["id"] for r in out]
     assert len(ids) == len(set(ids)) == 39 + 1
-    assert stats["converged"] is False
+    assert stats == {"path": "star", "pairs": 39, "rounds": 1, "converged": False}
+    assert "did not converge" in caplog.text
 
 
 def test_lsh_index_equivalent_to_direct_base_dedup(spark, tmp_path):

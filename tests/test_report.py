@@ -71,7 +71,7 @@ def test_curate_report_flag(spark, tmp_path):
     args = argparse.Namespace(
         input=path, output=out, ops="normalize", id_col="doc_id",
         text_col="text", min_quality=0.5, langs="en", line_min_count=3,
-        near_threshold=0.5, cc_algorithm="label_propagation",
+        near_threshold=0.5,
         benchmark_file=None, mix_source_col="lang", mix_temperature=0.7,
         chunk_tokens=8, chunk_overlap=2, cpus=None, stats="none",
         report=report, min_fluency=1e-4, base_path=None, base_index=None, output_format="parquet",
@@ -99,7 +99,7 @@ def test_curate_report_after_chunk_op(spark, tmp_path):
     args = argparse.Namespace(
         input=path, output=out, ops="chunk", id_col="doc_id",
         text_col="text", min_quality=0.5, langs="en", line_min_count=3,
-        near_threshold=0.5, cc_algorithm="label_propagation",
+        near_threshold=0.5,
         benchmark_file=None, mix_source_col="lang", mix_temperature=0.7,
         chunk_tokens=8, chunk_overlap=2, cpus=None, stats="none",
         report=report, min_fluency=1e-4, base_path=None, base_index=None, output_format="parquet",

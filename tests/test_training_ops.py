@@ -327,7 +327,7 @@ def test_simhash_bucket_cap_pre_aggregation(spark):
 
 
 def test_connected_components_chains_and_keep_canonical(spark):
-    """Label propagation must cross multi-hop chains (diameter > 1),
+    """Component labels must cross multi-hop chains (diameter > 1),
     and dedup_keep_canonical keeps exactly one doc per cluster."""
     from solrizer_spark.operators.dedup import (
         connected_components,

@@ -212,6 +212,7 @@ def main() -> None:
     )
     out["cc_nodes"] = comps["n"]
     out["cc_components"] = comps["k"]
+    out["cc_path"] = stats.get("path")
     out["cc_rounds"] = stats.get("rounds")
     out["cc_converged"] = stats.get("converged")
     assert stats.get("converged"), "CC did not converge at sf1"
