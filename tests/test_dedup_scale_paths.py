@@ -129,6 +129,26 @@ def test_cc_star_converges_on_long_chain(spark, monkeypatch):
     assert _labels(star) == _expected_components(edges)
 
 
+def test_cc_strict_raises_on_nonconvergence(spark, monkeypatch, caplog):
+    """The same chain cut at 3 rounds does not converge, and that is
+    never silent. There is no ``strict=`` flag any more: the caller
+    reads ``converged=False`` from the stats (and raises if it must),
+    and a warning naming the round budget is logged."""
+    from solrizer_spark.operators import dedup
+
+    _force_star(monkeypatch)
+    edges = [(i, i + 1) for i in range(1, 17)]
+    stats = {}
+    with caplog.at_level("WARNING", logger=dedup.__name__):
+        dedup.connected_components(
+            _pairs_df(spark, edges), max_iterations=3, stats=stats
+        ).collect()
+    assert stats == {"path": "star", "pairs": 16, "rounds": 3, "converged": False}
+    assert "did not converge" in caplog.text
+    with pytest.raises(TypeError):
+        dedup.connected_components(_pairs_df(spark, edges), strict=True)
+
+
 # url ids, including non-ASCII ones: the component is the minimum id
 # in Spark's string order (UTF-8 bytes, so "é" sorts after "z")
 URL_PAIRS = [
