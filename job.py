@@ -173,12 +173,17 @@ def run_job(
         # page_outline is pure Column expressions over it
         stage_conf = {**(stage_conf or {}), "include_blocks": True}
 
+    # plan_s: building the chain's DataFrame (py4j calls, analysis);
+    # the stages cache their Columns, so calls after the first in a
+    # process pay a few round trips per stage
+    t_plan = time.monotonic()
     if model_chains:
         from solrizer_spark.plans.pipeline import run_model_chains
 
         out = run_model_chains(pages, model_chains, conf=stage_conf)
     else:
         out = build_pipeline(chain or DEFAULT_CHAIN, conf=stage_conf)(pages)
+    plan_s = time.monotonic() - t_plan
     if outline and "blocks" in out.columns:
         from solrizer_spark.operators.extract import page_outline
 
@@ -361,6 +366,7 @@ def run_job(
         "n_docs": n_docs,
         "docs_per_sec": round(n_docs / elapsed, 1) if elapsed > 0 else None,
         "elapsed_sec": round(elapsed, 2),
+        "plan_s": round(plan_s, 3),
         "skipped_buckets": skipped,
         "n_buckets": n_buckets,
         "input_bytes": input_bytes,

@@ -19,6 +19,8 @@ codegen'd Catalyst expressions — no Python, no UDF.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -89,7 +91,13 @@ def doc_json_stage(df: DataFrame, conf: dict | None = None) -> DataFrame:
     (indexers/__init__.py:82-101 fold + per-model lists). Registered
     faceter columns (``{name}__facet``) are included automatically.
     """
-    cols = set(df.columns)
+    return df.withColumn("doc", _doc_column(frozenset(df.columns)))
+
+
+@functools.cache
+def _doc_column(cols: frozenset[str]) -> Column:
+    """The ``doc`` Column for an input with these columns, built once
+    per process (it reads nothing else of the input)."""
     lang_sfx = F.col("lang_suffix")
 
     def nonempty(arr: Column) -> Column:
@@ -193,6 +201,4 @@ def doc_json_stage(df: DataFrame, conf: dict | None = None) -> DataFrame:
     for _, piece in dynamics[di:]:
         pieces.append(piece)
 
-    return df.withColumn(
-        "doc", F.concat(F.lit("{"), F.concat_ws(",", *pieces), F.lit("}"))
-    )
+    return F.concat(F.lit("{"), F.concat_ws(",", *pieces), F.lit("}"))

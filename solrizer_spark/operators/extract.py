@@ -22,6 +22,7 @@ Reference semantics re-expressed (src/solrizer/indexers/extracted_text.py):
 
 from __future__ import annotations
 
+import functools
 import re
 
 import pandas as pd
@@ -400,62 +401,66 @@ def extract_stage(
     # feeds the decode ladder between BOM and in-document declarations;
     # corpora without the column pass a typed NULL (zero-cost: the
     # ladder only consults it after strict UTF-8 fails)
-    hint = (
-        F.col("http_charset")
-        if "http_charset" in df.columns
-        else F.lit(None).cast("string")
-    )
-    if not include_blocks:
-        fast = make_extract_fast_udf(dpi)
-        df = df.withColumn("_ext", fast(F.col("html"), F.col("text"), hint))
-        e = F.col("_ext")
-        return (
-            df.withColumn("route", e["route"])
-            .withColumn("title", e["title"])
-            .withColumn("parse_failed", e["parse_failed"])
-            .withColumn("error", e["error"])
-            .withColumn("bytes_in", e["bytes_in"])
-            .withColumn("is_tagged", e["route"] == F.lit("tagged"))
-            .withColumn("blocks_kept", e["blocks_kept"])
-            .withColumn("blocks_dropped", e["blocks_dropped"])
-            .withColumn("charset_source", e["charset_source"])
-            .withColumn("canonical_url", e["canonical_url"])
-            .withColumn("is_noindex", e["is_noindex"])
-            .withColumn("extracted_text", e["extracted_text"])
-            .drop("_ext")
-        )
-    ext = make_extract_udf(dpi)
-    df = df.withColumn("_ext", ext(F.col("html"), F.col("text"), hint))
+    layers = _extract_layers(tuple(dpi), include_blocks, "http_charset" in df.columns)
+    return functools.reduce(DataFrame.withColumns, layers, df).drop("_ext")
+
+
+@functools.cache
+def _extract_layers(
+    dpi: tuple[int, int], include_blocks: bool, has_charset: bool
+) -> tuple[dict[str, Column], ...]:
+    """The stage's Columns, built once per process: the UDF call into
+    ``_ext``, then the fields read from it, then (detail mode) the text
+    assembled from those fields. Each layer reads only the columns
+    before it, so it is one ``withColumns``."""
+    hint = F.col("http_charset") if has_charset else F.lit(None).cast("string")
+    args = (F.col("html"), F.col("text"), hint)
     e = F.col("_ext")
+    if not include_blocks:
+        return (
+            {"_ext": make_extract_fast_udf(dpi)(*args)},
+            {
+                "route": e["route"],
+                "title": e["title"],
+                "parse_failed": e["parse_failed"],
+                "error": e["error"],
+                "bytes_in": e["bytes_in"],
+                "is_tagged": e["route"] == F.lit("tagged"),
+                "blocks_kept": e["blocks_kept"],
+                "blocks_dropped": e["blocks_dropped"],
+                "charset_source": e["charset_source"],
+                "canonical_url": e["canonical_url"],
+                "is_noindex": e["is_noindex"],
+                "extracted_text": e["extracted_text"],
+            },
+        )
     n_kept = F.size(kept_blocks(e["blocks"]))
     n_blocks = F.size(e["blocks"])
     return (
-        df.withColumn("route", e["route"])
-        .withColumn("title", e["title"])
-        .withColumn("parse_failed", e["parse_failed"])
-        .withColumn("error", e["error"])
-        .withColumn("bytes_in", e["bytes_in"])
-        .withColumn("charset_source", e["charset_source"])
-        .withColumn("canonical_url", e["canonical_url"])
-        .withColumn("is_noindex", e["is_noindex"])
-        .withColumn("blocks", e["blocks"])
-        .withColumn("is_tagged", e["route"] == F.lit("tagged"))
-        .withColumn(
-            "blocks_kept", F.when(e["blocks"].isNotNull(), n_kept).otherwise(F.lit(0))
-        )
-        .withColumn(
-            "blocks_dropped",
-            F.when(e["blocks"].isNotNull(), n_blocks - n_kept).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "extracted_text",
-            F.when(e["parse_failed"], F.lit(None).cast("string"))
+        {"_ext": make_extract_udf(dpi)(*args)},
+        {
+            "route": e["route"],
+            "title": e["title"],
+            "parse_failed": e["parse_failed"],
+            "error": e["error"],
+            "bytes_in": e["bytes_in"],
+            "charset_source": e["charset_source"],
+            "canonical_url": e["canonical_url"],
+            "is_noindex": e["is_noindex"],
+            "blocks": e["blocks"],
+            "is_tagged": e["route"] == F.lit("tagged"),
+            "blocks_kept": F.when(e["blocks"].isNotNull(), n_kept).otherwise(F.lit(0)),
+            "blocks_dropped": F.when(e["blocks"].isNotNull(), n_blocks - n_kept).otherwise(
+                F.lit(0)
+            ),
+        },
+        {
+            "extracted_text": F.when(e["parse_failed"], F.lit(None).cast("string"))
             .when(e["route"] == "tagged", e["tagged_text"])
             .when(e["route"] == "plain", e["raw_text"])
             # html route: boilerplate detected ⇒ main-content text;
             # clean page ⇒ raw markup-strip bytes (get_text parity)
             .when(F.col("blocks_dropped") > 0, main_text(e["blocks"]))
             .otherwise(e["raw_text"]),
-        )
-        .drop("_ext")
+        },
     )

@@ -35,7 +35,7 @@ Deliberate narrowings (documented):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -105,15 +105,17 @@ def _collect_any(col: Column, dtype: T.DataType, name: str) -> Column | None:
     return None
 
 
-def recursive_values(df: DataFrame, name: str) -> Column:
-    """``..|objects|.name`` over the whole row (root object included)."""
-    root = F.struct(*[F.col(c) for c in df.columns])
-    out = _collect_any(root, df.schema, name)
-    return out if out is not None else _empty()
+def recursive_values(schema: T.StructType, name: str) -> Column:
+    """``..|objects|.name`` over a row of ``schema`` (root object
+    included)."""
+    if not _subtree_has(schema, name):
+        return _empty()
+    return _collect_any(F.struct(*[F.col(c) for c in schema.fieldNames()]), schema, name)
 
 
-def compile_path(df: DataFrame, path: str) -> Column | None:
-    """One jq program → an ``array<string>`` Column of its results.
+def compile_path(schema: T.StructType, path: str) -> Column | None:
+    """One jq program over a row of ``schema`` → an ``array<string>``
+    Column of its results.
 
     Returns None for an optional path whose column is absent (the
     caller skips it). Raises for a required path with no column —
@@ -127,17 +129,17 @@ def compile_path(df: DataFrame, path: str) -> Column | None:
     if p.startswith(_RECURSE_PREFIX):
         # absent-everywhere just yields no results in jq, so recursive
         # descent is inherently optional
-        return recursive_values(df, p[len(_RECURSE_PREFIX):])
+        return recursive_values(schema, p[len(_RECURSE_PREFIX):])
     splat = p.endswith("[]")
     if splat:
         p = p[:-2]
     name = p[1:] if p.startswith(".") else p  # bare names = legacy round-1 syntax
-    if name not in df.columns:
+    if name not in schema.fieldNames():
         if optional:
             return None
         raise ValueError(
             f"aggregate field path {path!r} requires column {name!r} "
-            f"(available: {sorted(df.columns)})"
+            f"(available: {sorted(schema.fieldNames())})"
         )
     col = F.col(name)
     if splat:

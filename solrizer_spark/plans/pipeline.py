@@ -13,17 +13,28 @@ columns (the ``doc.update`` accumulation). Catalyst fuses the whole
 chain into one WholeStageCodegen pipeline — stage boundaries are
 logical, not physical.
 
+Planning cost: a stage's Columns depend only on ``conf`` and the
+input schema, so each stage builds them once per process in a cached
+builder keyed by exactly what it reads (``functools.cache``; the
+facets stage keys by its faceter builders too) and applies them as
+one ``withColumns`` per layer, a layer being the columns that read
+only what came before it. A warm chain build is then a few py4j round
+trips per stage instead of one per expression node. Cached Columns
+name their inputs (``F.col``) and are never bound to one DataFrame.
+
 Unknown / duplicate stage names fail fast at composition time
 (reference analog: parse_indexers_param validation, web.py:254-289).
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 from collections.abc import Callable
-from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from solrizer_spark.functions.datetime_fns import solr_timestamp
 from solrizer_spark.functions.language import language_name_col, language_suffix_col
@@ -52,34 +63,52 @@ def stage_content_model(df: DataFrame, conf: dict) -> DataFrame:
     ``content_model_name__str``, ``described_by__uri``). Our content
     model is the payload route (html/plain/tagged/failed) — the analog
     of guess_model (web.py:357-362)."""
-    return (
-        df.withColumn("id", F.col("url"))
-        .withColumn("content_model_name__str", F.col("route"))
-        .withColumn("described_by__uri", F.col("url"))
-    )
+    return df.withColumns(_content_model_columns())
+
+
+@functools.cache
+def _content_model_columns() -> dict[str, Column]:
+    return {
+        "id": F.col("url"),
+        "content_model_name__str": F.col("route"),
+        "described_by__uri": F.col("url"),
+    }
 
 
 def stage_discoverability(df: DataFrame, conf: dict) -> DataFrame:
     """Boolean access flags (discoverability.py:23-30 semantics:
     membership tests + conjunction). Published ⇔ extraction produced
     text; hidden ⇔ parse failure; top-level ⇔ url path depth ≤ 2."""
+    return functools.reduce(DataFrame.withColumns, _discoverability_layers(), df)
+
+
+@functools.cache
+def _discoverability_layers() -> tuple[dict[str, Column], ...]:
     path = F.parse_url(F.col("url"), F.lit("PATH"))
     depth = F.size(F.split(path, "/")) - 1
-    df = (
-        df.withColumn("is_published", F.col("extracted_text").isNotNull())
-        .withColumn("is_hidden", F.col("parse_failed"))
-        .withColumn("is_top_level", depth <= F.lit(2))
-    )
-    return df.withColumn(
-        "is_discoverable",
-        F.col("is_top_level") & F.col("is_published") & ~F.col("is_hidden"),
+    return (
+        {
+            "is_published": F.col("extracted_text").isNotNull(),
+            "is_hidden": F.col("parse_failed"),
+            "is_top_level": depth <= F.lit(2),
+        },
+        {
+            "is_discoverable": F.col("is_top_level")
+            & F.col("is_published")
+            & ~F.col("is_hidden"),
+        },
     )
 
 
 def stage_dates(df: DataFrame, conf: dict) -> DataFrame:
     """Timestamp → Solr UTC Z-notation (dates indexer / solr_datetime,
     utils.py:4-23)."""
-    return df.withColumn("warc_ts__time", solr_timestamp("warc_ts"))
+    return df.withColumns(_dates_columns())
+
+
+@functools.cache
+def _dates_columns() -> dict[str, Column]:
+    return {"warc_ts__time": solr_timestamp("warc_ts")}
 
 
 #: Pluggable faceter registry — the analog of the reference's
@@ -87,7 +116,9 @@ def stage_dates(df: DataFrame, conf: dict) -> DataFrame:
 #: facets.py:38-49): each faceter is a Column builder; the facets
 #: stage appends ``{name}__facet`` for every registered faceter (null
 #: values are omitted from the doc, facets.py:44-47). Users extend by
-#: inserting into this dict before building the pipeline.
+#: inserting into (or replacing an entry of) this dict before building
+#: the pipeline: the facets stage keys its cached Columns by the
+#: builder itself, so a new entry gets its own plan.
 def _ocr_faceter(df: DataFrame):
     # OCRFacet analog (faceters.py:262-282): present only when the
     # page carried tagged OCR text; null ⇒ facet omitted
@@ -283,6 +314,13 @@ def _archival_collection_faceter(df: DataFrame):
 #: add their own ``{name}__facet`` column), or ``(df, conf) ->`` either
 #: shape (config-driven faceters, e.g. dim tables). Select per chain
 #: with ``conf['faceters']``.
+#:
+#: A ``df -> Column`` faceter runs once per process for each input
+#: column set, and its Column is reused for every later input with
+#: those columns: it must name columns (``F.col``), never bind one to
+#: its ``df`` (``df["x"]``). It sees the columns the stage started with
+#: (plus those of joins before it), not the other Column faceters'
+#: output. Join-shaped and config-driven faceters run on every call.
 FACETERS: dict[str, Callable[[DataFrame], "object"]] = {
     "language": lambda df: language_name_col("lang"),
     "ocr": _ocr_faceter,
@@ -315,18 +353,55 @@ def stage_facets(df: DataFrame, conf: dict) -> DataFrame:
     selects registered faceters per chain (the reference selects
     faceter classes per content model via entry points,
     pyproject.toml:66-82); unknown names fail fast."""
-    names = conf.get("faceters", DEFAULT_FACETERS)
+    names = tuple(conf.get("faceters", DEFAULT_FACETERS))
     unknown = [n for n in names if n not in FACETERS]
     if unknown:
         raise ValueError(f"unknown faceter(s): {unknown}; available: {sorted(FACETERS)}")
-    import inspect
+    key = (names, tuple(FACETERS[n] for n in names), frozenset(df.columns))
+    if key not in _FACET_STEPS:
+        _FACET_STEPS[key] = _facet_steps(df, conf, names)
+    for step in _FACET_STEPS[key]:
+        df = df.withColumns(step) if isinstance(step, dict) else _apply_faceter(df, step, conf)
+    return df
 
+
+#: (faceter names, their FACETERS entries, input columns) → the facets
+#: stage's steps, built by the first call with that key. A failed build
+#: raises and stores nothing.
+_FACET_STEPS: dict[tuple, tuple] = {}
+
+
+def _takes_conf(builder) -> bool:
+    return len(inspect.signature(builder).parameters) >= 2
+
+
+def _apply_faceter(df: DataFrame, name: str, conf: dict) -> DataFrame:
+    builder = FACETERS[name]
+    res = builder(df, conf) if _takes_conf(builder) else builder(df)
+    return res if isinstance(res, DataFrame) else df.withColumn(f"{name}__facet", res)
+
+
+def _facet_steps(df: DataFrame, conf: dict, names: tuple[str, ...]) -> tuple:
+    """The facets stage as steps: a dict of Columns (one
+    ``withColumns``), or the name of a faceter that runs on every call
+    (a join, or one that reads conf)."""
+    steps: list = []
+    cols: dict[str, Column] = {}
     for name in names:
         builder = FACETERS[name]
-        n_params = len(inspect.signature(builder).parameters)
-        res = builder(df, conf) if n_params >= 2 else builder(df)
-        df = res if isinstance(res, DataFrame) else df.withColumn(f"{name}__facet", res)
-    return df.withColumn("lang_suffix", language_suffix_col("lang"))
+        res = None if _takes_conf(builder) else builder(df)
+        if isinstance(res, Column):
+            cols[f"{name}__facet"] = res
+            continue
+        if cols:
+            steps.append(cols)
+            df = df.withColumns(cols)
+            cols = {}
+        steps.append(name)
+        df = _apply_faceter(df, name, conf)
+    cols["lang_suffix"] = language_suffix_col("lang")
+    steps.append(cols)
+    return tuple(steps)
 
 
 #: default aggregate-field settings — the indexer-settings.yml analog
@@ -348,20 +423,29 @@ def stage_aggregate_fields(df: DataFrame, conf: dict) -> DataFrame:
     recursive descent into child docs included) and ``array_compact``
     is the non-null filter (aggregate_fields.py:42). Configure via
     ``conf['aggregate_fields']``. Column names carry an ``agg_``
-    prefix (the input table owns ``text``); doc JSON keys drop it."""
+    prefix (the input table owns ``text``); doc JSON keys drop it.
+    Every field reads the stage's input row, not the other fields."""
+    settings = conf.get("aggregate_fields", DEFAULT_AGGREGATE_FIELDS)
+    frozen = tuple((field, tuple(paths)) for field, paths in settings.items())
+    return df.withColumns(_aggregate_columns(frozen, df.schema))
+
+
+@functools.cache
+def _aggregate_columns(
+    settings: tuple[tuple[str, tuple[str, ...]], ...], schema: T.StructType
+) -> dict[str, Column]:
     from solrizer_spark.plans.jq_fields import compile_path
 
-    settings = conf.get("aggregate_fields", DEFAULT_AGGREGATE_FIELDS)
-    for out_field, paths in settings.items():
-        pieces = [c for p in paths if (c := compile_path(df, p)) is not None]
+    out = {}
+    for out_field, paths in settings:
+        pieces = [c for p in paths if (c := compile_path(schema, p)) is not None]
         if not pieces:
-            value = F.array().cast("array<string>")
+            out[out_field] = F.array().cast("array<string>")
         else:
-            value = F.array_compact(
+            out[out_field] = F.array_compact(
                 pieces[0] if len(pieces) == 1 else F.concat(*pieces)
             )
-        df = df.withColumn(out_field, value)
-    return df
+    return out
 
 
 def stage_doc(df: DataFrame, conf: dict) -> DataFrame:
@@ -381,6 +465,11 @@ def stage_child_docs(df: DataFrame, conf: dict) -> DataFrame:
             "child_docs requires the detail extraction mode: set "
             "conf={'include_blocks': True} so the blocks column exists"
         )
+    return df.withColumns(_child_docs_columns())
+
+
+@functools.cache
+def _child_docs_columns() -> dict[str, Column]:
     kept = F.filter(F.col("blocks"), lambda b: b["kept"])
     child = F.transform(
         kept,
@@ -400,7 +489,7 @@ def stage_child_docs(df: DataFrame, conf: dict) -> DataFrame:
             b["tag_path"].alias("page__tag_path__str"),
         ),
     )
-    return df.withColumn("pages", child)
+    return {"pages": child}
 
 
 def stage_iiif_links(df: DataFrame, conf: dict) -> DataFrame:
@@ -415,48 +504,52 @@ def stage_iiif_links(df: DataFrame, conf: dict) -> DataFrame:
     keys), plus ``iiif_page_files_field`` naming the files array inside
     each ``pages`` element (our block child docs carry no files — every
     page then falls back to ``static:unavailable``)."""
-    from pyspark.sql import types as T
+    layers = _iiif_layers(
+        conf.get("iiif_identifier_prefix", "fcrepo:"),
+        conf.get("iiif_manifests_url_pattern", "https://iiif.example.edu/manifests/{+id}"),
+        conf.get("iiif_thumbnail_url_pattern", "https://iiif.example.edu/thumbnails/{+id}"),
+        conf.get("iiif_page_files_field", "page__has_file"),
+        df.schema["pages"].dataType if "pages" in df.columns else None,
+    )
+    return functools.reduce(DataFrame.withColumns, layers, df)
 
+
+@functools.cache
+def _iiif_layers(
+    prefix: str, man_tpl: str, thumb_tpl: str, files_field: str, page_type: T.DataType | None
+) -> tuple[dict[str, Column], ...]:
     from solrizer_spark.functions.uris import (
         expand_uri_template,
         iiif_identifier,
         thumbnail_identifier,
     )
 
-    prefix = conf.get("iiif_identifier_prefix", "fcrepo:")
-    man_tpl = conf.get("iiif_manifests_url_pattern", "https://iiif.example.edu/manifests/{+id}")
-    thumb_tpl = conf.get("iiif_thumbnail_url_pattern", "https://iiif.example.edu/thumbnails/{+id}")
-    files_field = conf.get("iiif_page_files_field", "page__has_file")
-
-    ident = iiif_identifier(F.parse_url(F.col("url"), F.lit("PATH")), prefix)
-    df = df.withColumn("iiif_manifest__id", ident).withColumn(
-        "iiif_manifest__uri", expand_uri_template(man_tpl, F.col("iiif_manifest__id"))
+    ident = {
+        "iiif_manifest__id": iiif_identifier(F.parse_url(F.col("url"), F.lit("PATH")), prefix)
+    }
+    second = {"iiif_manifest__uri": expand_uri_template(man_tpl, F.col("iiif_manifest__id"))}
+    if page_type is None:
+        return ident, second
+    is_struct_array = isinstance(page_type, T.ArrayType) and isinstance(
+        page_type.elementType, T.StructType
     )
-    if "pages" in df.columns:
-        page_type = df.schema["pages"].dataType
-        is_struct_array = isinstance(page_type, T.ArrayType) and isinstance(
-            page_type.elementType, T.StructType
+    if not is_struct_array:
+        raise ValueError(
+            "iiif_links requires 'pages' to be an array of structs "
+            f"(got {page_type.simpleString()})"
         )
-        if not is_struct_array:
-            raise ValueError(
-                "iiif_links requires 'pages' to be an array of structs "
-                f"(got {page_type.simpleString()})"
-            )
-        has_files = any(f.name == files_field for f in page_type.elementType.fields)
-        if has_files:
-            thumb_ids = F.transform(
-                F.col("pages"), lambda p: thumbnail_identifier(p[files_field], prefix)
-            )
-        else:
-            thumb_ids = F.transform(F.col("pages"), lambda p: F.lit("static:unavailable"))
-        df = df.withColumn("iiif_thumbnail_sequence__ids", thumb_ids).withColumn(
-            "iiif_thumbnail_sequence__uris",
-            F.transform(
-                F.col("iiif_thumbnail_sequence__ids"),
-                lambda i: expand_uri_template(thumb_tpl, i),
-            ),
+    has_files = any(f.name == files_field for f in page_type.elementType.fields)
+    if has_files:
+        thumb_ids = F.transform(
+            F.col("pages"), lambda p: thumbnail_identifier(p[files_field], prefix)
         )
-    return df
+    else:
+        thumb_ids = F.transform(F.col("pages"), lambda p: F.lit("static:unavailable"))
+    second["iiif_thumbnail_sequence__ids"] = thumb_ids
+    uris = F.transform(
+        F.col("iiif_thumbnail_sequence__ids"), lambda i: expand_uri_template(thumb_tpl, i)
+    )
+    return ident, second, {"iiif_thumbnail_sequence__uris": uris}
 
 
 STAGES: dict[str, Stage] = {
@@ -499,7 +592,7 @@ def build_pipeline(names: list[str] | None = None, conf: dict | None = None) -> 
         raise ValueError(f"duplicate stage(s): {sorted(dupes)}")
 
     def pipeline(df: DataFrame) -> DataFrame:
-        return reduce(lambda acc, name: STAGES[name](acc, conf), names, df)
+        return functools.reduce(lambda acc, name: STAGES[name](acc, conf), names, df)
 
     return pipeline
 

@@ -169,7 +169,7 @@ def test_jq_recursive_descent_jq_object_order(spark):
         [([("p1",), ("p2",)], "root-id")],
         "pages array<struct<id:string>>, id string",
     )
-    got = df.select(recursive_values(df, "id").alias("r")).first().r
+    got = df.select(recursive_values(df.schema, "id").alias("r")).first().r
     assert got == ["root-id", "p1", "p2"]  # self first, then descend
 
 

@@ -20,7 +20,7 @@ def test_jq_recursive_descent_preorder(spark):
         "v string, items array<struct<v:string, subs:array<struct<v:string>>>>, "
         "nested struct<v:string, subs:array<struct<v:string>>>",
     )
-    got = df.select(recursive_values(df, "v").alias("r")).first().r
+    got = df.select(recursive_values(df.schema, "v").alias("r")).first().r
     assert got == ["root", "a", "x", "y", "b", "s", "z"]
 
 
@@ -31,7 +31,8 @@ def test_jq_array_of_scalars_and_nulls(spark):
         [(["i1", None, "i2"], None)], "ids array<string>, empty array<string>"
     )
     got = df.select(
-        compile_path(df, ".ids[]").alias("a"), compile_path(df, ".empty[]?").alias("b")
+        compile_path(df.schema, ".ids[]").alias("a"),
+        compile_path(df.schema, ".empty[]?").alias("b"),
     ).first()
     assert got.a == ["i1", None, "i2"]  # non-null filter is the caller's job
     assert got.b == []  # null array coalesces to empty
@@ -41,9 +42,9 @@ def test_jq_required_missing_fails_at_plan_time(spark):
     from solrizer_spark.plans.jq_fields import compile_path
 
     df = spark.createDataFrame([(1,)], "x int")
-    assert compile_path(df, ".nope?") is None
+    assert compile_path(df.schema, ".nope?") is None
     with pytest.raises(ValueError, match="nope"):
-        compile_path(df, ".nope")
+        compile_path(df.schema, ".nope")
 
 
 def test_aggregate_fields_reach_child_docs(spark):
@@ -344,6 +345,6 @@ def test_jq_matches_python_reference(spark):
         out.extend(s[0] for s in row[2][1])
         return out
 
-    got = [r.r for r in df.select(recursive_values(df, "x").alias("r")).collect()]
+    got = [r.r for r in df.select(recursive_values(df.schema, "x").alias("r")).collect()]
     for spark_vals, row in zip(got, rows):
         assert spark_vals == reference(row)
