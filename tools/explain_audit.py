@@ -318,21 +318,15 @@ def main() -> int:
         f"exchanges={p21.count('Exchange')}",
     )
 
-    # PQ: encode is map-side (Arrow-batched Python only, no exchange);
-    # the ADC shortlist and the exact re-rank are both TakeOrdered —
-    # never a global sort; no join at all in the scan
+    # PQ: the ADC shortlist and the exact re-rank are both TakeOrdered —
+    # never a global sort; no join at all in the scan (the encode's own
+    # plan shape is pq_encode_single_arrow_no_shuffle below)
     from solrizer_spark.operators.similarity import pq_encode, pq_topk
 
     _books = [
         [[((j * 31 + c * 7 + p) % 11 - 5) / 5.0 for p in range(8)] for c in range(16)]
         for j in range(8)
     ]
-    p22 = plan_of(pq_encode(emb, _books))
-    check(
-        "pq_encode_arrow_batched_no_shuffle",
-        "BatchEvalPython" not in p22 and "Exchange" not in p22,
-        f"exchanges={p22.count('Exchange')}",
-    )
     # production ADC shape: codes are a STORED column (encode once,
     # probe many) — the only Python in the probe plan is the exact
     # re-rank over the <= shortlist rows
