@@ -787,31 +787,6 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_near_dup_pairs(union, threshold=0.9999, dims=64)
 
 
-def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from solrizer_spark.functions.text_stats import langid
-
-    docs = _table(spark, sf_dir, "documents")
-    return docs.select("doc_id", langid("text").alias("lang_pred"))
-
-
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from solrizer_spark.functions.text_stats import quality_score, subword_count_estimate
-
-    docs = _table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        quality_score("text").alias("quality"),
-        subword_count_estimate("text").alias("subword_tokens"),
-    )
-
-
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from solrizer_spark.functions.text_stats import rolling_fingerprint
-
-    docs = _table(spark, sf_dir, "documents")
-    return docs.select("doc_id", rolling_fingerprint("text").alias("fingerprint"))
-
-
 def _media_assets(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
     """Deterministic fake media assets derived from documents."""
     docs = _table(spark, sf_dir, "documents")
@@ -1071,24 +1046,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _table(spark, sf_dir, "embeddings")
     return ivf_topk(emb, _QUERY_VEC, _IVF_CENTROIDS, k=10, nprobe=2)
-
-
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting three ways: whitespace, BPE-ish regex runs,
-    length-based subword estimate."""
-    from solrizer_spark.functions.text_stats import (
-        bpe_token_count,
-        subword_count_estimate,
-        token_count,
-    )
-
-    docs = _table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        token_count("text").alias("ws_tokens"),
-        bpe_token_count("text").alias("bpe_tokens"),
-        subword_count_estimate("text").alias("subword_est"),
-    )
 
 
 def q_bpe_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1480,20 +1437,6 @@ def q_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return filter_blocked_domains(base, block).select("doc_id", "url")
 
 
-def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MOSS-style winnowing fingerprints (k=8 char-grams, window=4)."""
-    from solrizer_spark.functions.text_stats import winnow_fingerprints
-
-    docs = _table(spark, sf_dir, "documents")
-    fps = winnow_fingerprints("text", k=8, window=4)
-    return docs.select(
-        "doc_id",
-        F.size(fps).alias("n_fps"),
-        F.element_at(fps, 1).alias("fp_min"),
-        F.element_at(fps, -1).alias("fp_max"),
-    )
-
-
 _SAMPLE_RATES = {"en": 0.2, "de": 0.5, "zh": 1.0}
 
 
@@ -1660,9 +1603,10 @@ _L = F.lit
 
 
 def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite of text_stats + quality_score + langid + token_counts
-    + fingerprint + winnow_fingerprints: one zero-shuffle projection
-    over ``documents`` (all six are per-doc Column expressions)."""
+    """Composite of text_stats plus quality, langid, token-count,
+    rolling-fingerprint and winnowing columns: one zero-shuffle
+    projection over ``documents`` (all per-doc Column expressions;
+    its oracle joins the six component oracles)."""
     from solrizer_spark.functions.text_stats import (
         bpe_token_count,
         langid,

@@ -198,8 +198,8 @@ def run_job(
         # AMP / tracking urls) onto their canonical target BEFORE any
         # content hashing — one shuffle on the canonical key; the
         # canonical page itself wins when present, undeclared rows are
-        # self-canonical and pass through 1:1 (operators/dedup.py
-        # canonical_url_dedup is the aggregate form of this rule)
+        # self-canonical and pass through 1:1 (curate.py
+        # canonicaldedup applies the same rule)
         ckey = F.coalesce(F.col("canonical_url"), F.col("url"))
         docs = (
             docs.withColumn("_ck", ckey)

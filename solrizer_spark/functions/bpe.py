@@ -277,215 +277,8 @@ def save_merges(spark, merges: Sequence[tuple[str, str]], path: str) -> None:
     write_local_parquet(rows, "rank long, left string, right string", path)
 
 
-def load_merges(spark, path: str) -> list[tuple[str, str]]:
-    """Load a merge table written by :func:`save_merges`, rank order
-    restored."""
-    rows = spark.read.parquet(path).orderBy("rank").collect()
-    return [(r["left"], r["right"]) for r in rows]
-
-
-# --------------------------------------------------------------------------
-# token-id encoding (corpus → training-ready input_ids)
-# --------------------------------------------------------------------------
-
-#: default special tokens, ids 0..2
-SPECIALS = ("<pad>", "<unk>", "<eos>")
-
-
 #: loud-failure bound for tables documented as "vocabulary-sized":
 #: past this, a global (unpartitioned) rank/sum window is no longer
 #: operating on a vocabulary but on something corpus-shaped, and the
 #: single-partition exchange it implies must not proceed silently
 MAX_VOCAB_ROWS = 10_000_000
-
-
-def build_vocab(
-    df: DataFrame,
-    merges: Sequence[tuple[str, str]],
-    text_col: str = "text",
-    specials: Sequence[str] = SPECIALS,
-    max_vocab_rows: int | None = MAX_VOCAB_ROWS,
-) -> DataFrame:
-    """Vocabulary table ``(token, id)``: specials take ids
-    ``0..len(specials)-1``, then corpus tokens ranked by (freq desc,
-    token asc) — deterministic under any partitioning. The BPE token
-    set is bounded by observed characters + one entry per merge, so
-    the ranking window runs over a vocabulary-sized table, not the
-    corpus — and that assumption is now ENFORCED: a count over the
-    same unpartitioned window (zero extra pass, same exchange) feeds
-    a ``raise_error`` guard, so a pathological corpus (hash-garbage
-    "tokens" inflating the vocab toward corpus size) fails loudly
-    instead of silently single-partition-sorting a giant table.
-    ``max_vocab_rows=None`` disables the guard."""
-    spark = df.sparkSession
-    counts = (
-        bpe_tokenize(df, merges, text_col)
-        .select(F.explode("bpe_tokens").alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .where(~F.col("token").isin(*specials))
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.orderBy(F.desc("freq"), F.asc("token"))
-    rid = (F.row_number().over(w) - 1 + len(specials)).cast("long")
-    if max_vocab_rows is not None:
-        vrows = F.count(F.lit(1)).over(Window.partitionBy())
-        rid = F.when(vrows <= max_vocab_rows, rid).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "build_vocab: token table has "
-                    ),
-                    vrows.cast("string"),
-                    F.lit(
-                        f" rows > max_vocab_rows={max_vocab_rows}; this is "
-                        "not a vocabulary — refusing the global rank window"
-                    ),
-                )
-            ).cast("long")
-        )
-    ranked = counts.select("token", rid.alias("id"))
-    from solrizer_spark.session import local_df
-
-    special_rows = local_df(
-        spark, [(t, i) for i, t in enumerate(specials)], "token string, id long"
-    )
-    return special_rows.unionByName(ranked)
-
-
-def encode_ids(
-    df: DataFrame,
-    merges: Sequence[tuple[str, str]],
-    vocab_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    out_col: str = "input_ids",
-    unk_id: int = 1,
-    append_eos: int | None = 2,
-) -> DataFrame:
-    """Add ``out_col: array<long>`` to ``df`` (all input columns
-    kept) — the document's BPE token ids in order, unknown tokens →
-    ``unk_id``, optional ``append_eos`` id at the end. The vocab side
-    is BROADCAST (bounded by construction: observed characters + one
-    entry per merge + specials). Null text → null ids; empty/
-    token-free text → ``[]`` (plus eos when enabled), so present-but-
-    empty docs stay distinguishable from null ones."""
-    toks = bpe_tokenize(df, merges, text_col).select(
-        id_col, F.posexplode("bpe_tokens").alias("pos", "token")
-    )
-    joined = toks.join(F.broadcast(vocab_df), "token", "left").select(
-        id_col, "pos", F.coalesce(F.col("id"), F.lit(unk_id)).alias("tid")
-    )
-    ids = joined.groupBy(id_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "tid"))),
-            lambda s: s["tid"],
-        ).alias("__ids")
-    )
-    empty = F.array().cast("array<long>")
-    body = F.coalesce(F.col("__ids"), empty)
-    if append_eos is not None:
-        body = F.concat(body, F.array(F.lit(append_eos).cast("long")))
-    return (
-        df.join(ids, id_col, "left")
-        .withColumn(
-            out_col,
-            F.when(F.col(text_col).isNull(), F.lit(None).cast("array<long>"))
-            .otherwise(body),
-        )
-        .drop("__ids")
-    )
-
-
-def pack_examples(
-    df: DataFrame,
-    merges: Sequence[tuple[str, str]],
-    vocab_df: DataFrame,
-    context_len: int = 512,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_col: str | None = None,
-    pad_id: int = 0,
-    eos_id: int = 2,
-    unk_id: int = 1,
-) -> DataFrame:
-    """GPU-ready training rows: encode every doc to token ids, pack
-    docs into ~``context_len``-token bins with the deterministic
-    cumulative packer (``sampling.pack_sequences`` — bin membership is
-    reproducible under any partitioning, unlike greedy first-fit),
-    concatenate each bin's ids in id order, then truncate/pad to
-    exactly ``context_len`` with ``pad_id``.
-
-    Emits ``(group, bin_id, input_ids array<long>, n_real_tokens,
-    doc_spans array<struct<doc, start, len>>)`` — the spans table is
-    what attention-reset masking consumes downstream, and it is
-    CLIPPED to the window: a doc straddling the bin boundary keeps
-    only its in-window prefix (span ``len`` reduced accordingly), and
-    its overflow tokens are DROPPED, not carried to the next bin —
-    the simple truncation packing scheme. Pre-chunk with
-    ``chunk_text`` to bound that loss (a straddling tail is at most
-    one doc per bin). One encode pass + one window shuffle + one
-    groupBy."""
-    from ..operators.sampling import pack_sequences
-
-    enc = encode_ids(
-        df, merges, vocab_df, text_col=text_col, id_col=id_col,
-        unk_id=unk_id, append_eos=eos_id,
-    ).where(F.col("input_ids").isNotNull())
-    grp = F.col(group_col) if group_col else F.lit("all")
-    sized = enc.select(
-        grp.alias("__grp"), id_col, "input_ids",
-        F.size("input_ids").cast("long").alias("__n"),
-    )
-    binned = pack_sequences(
-        sized, "__grp", [F.col(id_col).asc()], "__n", capacity=context_len
-    )
-    packed = (
-        binned.groupBy("__grp", "bin_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("d"), "input_ids", "__n"))
-            ).alias("docs")
-        )
-        .select(
-            F.col("__grp").alias("group"),
-            "bin_id",
-            F.flatten(F.transform(F.col("docs"), lambda s: s["input_ids"])).alias(
-                "__flat"
-            ),
-            F.transform(
-                F.col("docs"),
-                lambda s, i: F.struct(
-                    s["d"].alias("doc"),
-                    F.aggregate(
-                        F.slice(F.transform(F.col("docs"), lambda x: x["__n"]), 1, i),
-                        F.lit(0).cast("long"),
-                        lambda acc, v: acc + v,
-                    ).alias("start"),
-                    s["__n"].alias("len"),
-                ),
-            ).alias("doc_spans"),
-        )
-    )
-    pad = F.array_repeat(F.lit(pad_id).cast("long"), context_len)
-    # clip spans to the truncated window so metadata always describes
-    # input_ids exactly: drop spans starting at/after the boundary,
-    # shorten the straddling one (review finding)
-    clipped = F.transform(
-        F.filter(F.col("doc_spans"), lambda sp: sp["start"] < context_len),
-        lambda sp: F.struct(
-            sp["doc"].alias("doc"),
-            sp["start"].alias("start"),
-            F.least(sp["len"], F.lit(context_len) - sp["start"]).alias("len"),
-        ),
-    )
-    return packed.select(
-        "group",
-        "bin_id",
-        F.slice(F.concat(F.col("__flat"), pad), 1, context_len).alias("input_ids"),
-        F.least(F.size("__flat"), F.lit(context_len)).cast("long").alias(
-            "n_real_tokens"
-        ),
-        clipped.alias("doc_spans"),
-    )

@@ -30,11 +30,3 @@ def solr_timestamp(ts: Column | str) -> Column:
         F.when(micros != "000000", F.concat(F.lit("."), micros)).otherwise(F.lit("")),
         F.lit("Z"),
     )
-
-
-def solr_timestamp_from_string(dt_string: Column | str) -> Column:
-    """ISO-8601 string (any offset) → UTC Z-notation string — the
-    direct analog of the reference's string→string conversion
-    (fractional seconds preserved when nonzero)."""
-    col = F.col(dt_string) if isinstance(dt_string, str) else dt_string
-    return solr_timestamp(F.to_timestamp(col))

@@ -45,10 +45,6 @@ def hdl_uri(handle: Column) -> Column:
     return F.concat(F.lit("hdl:"), handle_str(handle))
 
 
-def info_uri(handle: Column) -> Column:
-    return F.concat(F.lit("info:hdl/"), handle_str(handle))
-
-
 def proxy_url(handle: Column, proxy_base: str = DEFAULT_PROXY_BASE) -> Column:
     return F.concat(F.lit(proxy_base), handle_str(handle))
 

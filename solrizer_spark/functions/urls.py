@@ -16,10 +16,6 @@ from pyspark.sql import functions as F
 
 from solrizer_spark.functions.psl import PSL_TWO_LEVEL_SNAPSHOT
 
-#: kept for backward compatibility; registered_domain now defaults to
-#: the full pinned snapshot (functions/psl.py, ~770 suffixes)
-TWO_LEVEL_SUFFIXES = ("co.uk", "com.au", "co.jp", "com.br", "co.in", "org.uk")
-
 _HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]+)"
 _PATH_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*(/[^?#]*)"
 _QUERY_RE = r"\?([^#]*)"
@@ -233,45 +229,6 @@ def parse_robots_txt(content: str | bytes | None, agent: str = "*") -> list[str]
     return [
         v for f, v in _robots_directives(content, agent) if f == "disallow" and v
     ]
-
-
-def parse_sitemaps(content: str | bytes | None) -> list[str]:
-    """Sitemap URLs declared in a robots.txt body.
-
-    Per RFC 9309 / the sitemaps.org protocol the ``Sitemap`` field is
-    NOT part of any user-agent group — it applies to the whole file —
-    so this scans every line instead of the group selection
-    :func:`_robots_directives` performs. Dim-side parser like the
-    rest of the robots family: one small blob per host, feeding the
-    crawl scheduler's frontier discovery."""
-    if content is None:
-        return []
-    if isinstance(content, bytes):
-        content = content.decode("utf-8", errors="replace")
-    out: list[str] = []
-    for raw in content.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        field, _, value = line.partition(":")
-        if field.strip().lower() == "sitemap" and value.strip():
-            out.append(value.strip())
-    return out
-
-
-#: <loc> entries from a sitemap / sitemap-index XML body — pure JVM
-#: regexp (urlset and sitemapindex both carry their targets in <loc>),
-#: tolerant of surrounding whitespace; misses yield an empty array.
-def sitemap_locs(xml: Column | str) -> Column:
-    xml = F.col(xml) if isinstance(xml, str) else xml
-    return F.regexp_extract_all(xml, F.lit(r"<loc>\s*([^<]+?)\s*</loc>"), F.lit(1))
-
-
-def sitemap_lastmods(xml: Column | str) -> Column:
-    """<lastmod> values, positionally parallel to sitemap entries on
-    well-formed feeds (both tags appear once per <url> block)."""
-    xml = F.col(xml) if isinstance(xml, str) else xml
-    return F.regexp_extract_all(
-        xml, F.lit(r"<lastmod>\s*([^<]+?)\s*</lastmod>"), F.lit(1)
-    )
 
 
 def parse_robots_rules(

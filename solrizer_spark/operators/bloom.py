@@ -405,19 +405,12 @@ def bloom_might_contain(
     col: str,
     bf: BloomFilter,
     out_col: str = "bloom_hit",
-    bc=None,
 ) -> DataFrame:
     """Adds boolean ``out_col``: True = maybe in the filter (FP rate
     as sized), False = DEFINITELY not (exact). NULL values are never
     hits. The filter rides a real ``SparkContext.broadcast`` — one
-    copy per executor, not one per task closure. Callers that query
-    repeatedly (e.g. a streaming sink, one probe per micro-batch)
-    should pass ``bc`` = ``sparkContext.broadcast((bf.chunks, bf.k,
-    bf.bits_total))`` and ``destroy()`` it themselves — otherwise
-    each call pins a fresh filter-sized broadcast until GC."""
-    spark = df.sparkSession
-    if bc is None:
-        bc = spark.sparkContext.broadcast((bf.chunks, bf.k, bf.bits_total))
+    copy per executor, not one per task closure."""
+    bc = df.sparkSession.sparkContext.broadcast((bf.chunks, bf.k, bf.bits_total))
 
     def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         chunks, k, bits_total = bc.value

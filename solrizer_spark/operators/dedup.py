@@ -170,36 +170,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def canonical_url_dedup(
-    df: DataFrame, canonical_col: str = "canonical_url", url_col: str = "url"
-) -> DataFrame:
-    """Dedup by declared ``rel=canonical`` target — the crawl-side rule
-    that precedes any content hashing: mirrors/AMP/tracking variants of
-    one page all point their ``<link rel="canonical">`` at the same
-    URL (extracted by ``functions/html_meta.canonical_url``).
-
-    Keeps the row whose own url equals the canonical target when that
-    page is in the corpus, else the minimum url (deterministic); rows
-    with no declaration group by their own url (self-canonical), so
-    they pass through 1:1. One shuffle on the canonical key, map-side
-    combinable — the cheapest dedup wave, run before minhash at scale.
-    """
-    key = F.coalesce(F.col(canonical_col), F.col(url_col))
-    keeper = F.struct(
-        # self-canonical rows sort first (0), so the canonical page
-        # itself wins over its variants when present
-        F.when(F.col(url_col) == key, F.lit(0)).otherwise(F.lit(1)).alias("rank"),
-        F.col(url_col).alias("u"),
-    )
-    return (
-        df.groupBy(key.alias("canonical_key"))
-        .agg(
-            F.min(keeper).getField("u").alias("kept_url"),
-            F.count(F.lit(1)).alias("n_variants"),
-        )
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -45,40 +45,12 @@ def json_entry(key: Column | str, value: Column) -> Column:
     return F.when(value.isNotNull(), fragment)
 
 
-def json_entry_array(key: Column | str, value: Column) -> Column:
-    """Like :func:`json_entry` but omits empty arrays too."""
-    return F.when(F.size(value) > 0, json_entry(key, value))
-
-
-def assemble_doc(entries: list[Column]) -> Column:
-    """Sorted-key canonical JSON object from single-entry fragments
-    (runtime sort — used when keys are not plan-time sortable)."""
-    return F.concat(
-        F.lit("{"),
-        F.array_join(F.array_sort(F.array_compact(F.array(*entries))), ","),
-        F.lit("}"),
-    )
-
-
 def _fragment(fields: list[tuple[str, Column]]) -> Column:
     """Render several static-name fields as one JSON fragment via a
     single ``to_json(struct(...))``; null when every field was null."""
     j = F.to_json(F.struct(*[c.alias(name) for name, c in fields]))
     body = j.substr(F.lit(2), F.length(j) - F.lit(2))
     return F.nullif(body, F.lit(""))
-
-
-def wrap_command(doc: Column | str, command: str = "add") -> Column:
-    """Solr command wrapping (web.py:390-403): ``add`` → the doc
-    nested under ``{"add":{"doc":…}}``; ``none`` → the bare doc. The
-    ``update`` (atomic diff) form is produced by
-    ``operators.atomic.atomic_diff`` instead."""
-    col = F.col(doc) if isinstance(doc, str) else doc
-    if command == "add":
-        return F.concat(F.lit('{"add":{"doc":'), col, F.lit("}}"))
-    if command == "none":
-        return col
-    raise ValueError(f"unknown command {command!r}; expected 'add' or 'none'")
 
 
 def doc_json_stage(df: DataFrame, conf: dict | None = None) -> DataFrame:

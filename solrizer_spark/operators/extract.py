@@ -91,7 +91,7 @@ EXTRACT_FAST_TYPE = T.StructType(
         #: never decode via the charset ladder (plain/tagged/pdf/failed)
         T.StructField("charset_source", T.StringType()),
         #: declared <link rel=canonical> target (html route only) —
-        #: the key canonical_url_dedup groups on
+        #: the key ``--dedup canonical`` / curate ``canonicaldedup`` group on
         T.StructField("canonical_url", T.StringType()),
         #: robots-meta noindex/none declared (html route; False elsewhere)
         T.StructField("is_noindex", T.BooleanType()),
@@ -118,7 +118,7 @@ _OCR_MARKERS = (b"<alto", b"ocrx_word", b"ocr_page")
 
 #: rel=canonical target, scanned on the RAW bytes head (hrefs are
 #: ASCII on the real web; byte-level keeps it charset-independent and
-#: zero-cost beyond one bounded regex) — feeds canonical_url_dedup
+#: zero-cost beyond one bounded regex) — feeds ``--dedup canonical``
 _CANONICAL_WINDOW = 8192
 _PY_CANONICAL = re.compile(
     rb"""<link[^>]*?rel\s*=\s*["']canonical["'][^>]*?href\s*=\s*["']([^"']+)["']""",

@@ -169,25 +169,3 @@ def host_edges(
         )
         .distinct()
     )
-
-
-def host_pagerank(
-    pages: DataFrame,
-    html_col: str = "html_text",
-    url_col: str = "url",
-    iterations: int = 5,
-) -> DataFrame:
-    """PageRank over the registered-domain (eTLD+1) link graph of a
-    crawl: outlink extraction (JVM regex, ``functions/urls.py``) →
-    distinct host edges → :func:`pagerank`.
-
-    The node set comes from the EDGES: a host whose pages have no
-    valid outlinks and that nothing links to is absent from the
-    result (it has no graph position) — left-join ranks back onto the
-    crawl's host table and ``coalesce`` to 0 if every host needs a
-    row."""
-    return pagerank(
-        host_edges(pages, html_col, url_col),
-        iterations=iterations,
-        dedup_edges=False,  # host_edges output is already distinct
-    )

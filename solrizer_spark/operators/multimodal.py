@@ -3,10 +3,9 @@
 Media assets are opaque ``binary`` columns with typed metadata — the
 same pattern as the pages table's ``html`` column. The Spark-side
 plumbing (schemas, Arrow batch shape, ``mapInPandas`` fan-out) is real
-and tested; the actual codec work is STUBBED behind
-``NotImplementedError`` because this container ships no image/audio
-libraries (PIL/ffmpeg). A deterministic fake header format ("IMG1" /
-"AUD1" / "VID1") stands in so the dataflow is verifiable end-to-end.
+and tested; there is no codec: a deterministic fake header format
+("IMG1" / "AUD1" / "VID1") stands in so the dataflow is verifiable
+end-to-end.
 
 Fake header layout (ASCII, fixed width):
     IMG1<width:6><height:6><channels:1>payload…
@@ -72,72 +71,15 @@ def parse_media_header(payload: bytes | None) -> dict:
     return out
 
 
-try:  # real codec, used when the cluster image ships Pillow
-    from PIL import Image as _PILImage
-except ImportError:  # this sandbox: no imaging libraries
-    _PILImage = None
-
-HAVE_PIL = _PILImage is not None
-
-
-def decode_pixels(payload: bytes) -> "object":
-    """Real image decode behind a feature flag: with Pillow installed
-    (``HAVE_PIL``) returns ``(width, height, mode, pixel_bytes)`` from
-    the actual codec; without it raises ``NotImplementedError`` (the
-    Spark plumbing calls :func:`parse_media_header` instead, and
-    :func:`media_metadata_stage` works either way). Tested where PIL
-    exists, skip-marked where not (tests/test_round3_features.py)."""
-    if _PILImage is None:
-        raise NotImplementedError(
-            "image decode requires Pillow (pip install pillow on the "
-            "cluster image); not available in this environment"
-        )
-    import io
-
-    with _PILImage.open(io.BytesIO(payload)) as im:  # pragma: no cover
-        im.load()
-        return im.width, im.height, im.mode, im.tobytes()
-
-
-def real_image_metadata(payload: bytes | None) -> dict:
-    """PIL-backed variant of :func:`parse_media_header` for real image
-    bytes (PNG/JPEG/…): same ``MEDIA_META_TYPE`` dict shape, so a
-    cluster with codecs can swap it into ``media_metadata_stage`` via
-    ``parser=real_image_metadata`` with no schema change."""
-    out = {
-        "kind": None, "width": None, "height": None, "channels": None,
-        "sample_rate": None, "n_samples": None, "n_frames": None,
-        "n_bytes": len(payload) if payload else 0, "valid": False,
-    }
-    if not payload or _PILImage is None:
-        return out
-    import io
-
-    try:  # pragma: no cover - requires Pillow
-        with _PILImage.open(io.BytesIO(payload)) as im:
-            out.update(
-                kind="image", width=im.width, height=im.height,
-                channels=len(im.getbands()), valid=True,
-            )
-    except Exception:
-        out["valid"] = False
-    return out
-
-
-def media_metadata_stage(
-    df: DataFrame, payload_col: str = "payload", parser=None
-) -> DataFrame:
+def media_metadata_stage(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Add a typed ``media_meta`` struct via an Arrow-batched
-    mapInPandas-style pandas UDF (binary in → struct out). ``parser``
-    defaults to the deterministic fake-header parse; pass
-    :func:`real_image_metadata` on clusters with Pillow."""
+    mapInPandas-style pandas UDF (binary in → struct out), parsed by
+    the deterministic fake-header :func:`parse_media_header`."""
     from pyspark.sql.functions import pandas_udf
-
-    parse = parser or parse_media_header
 
     @pandas_udf(MEDIA_META_TYPE)
     def meta_udf(payload: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame([parse(p) for p in payload])
+        return pd.DataFrame([parse_media_header(p) for p in payload])
 
     return df.withColumn("media_meta", meta_udf(F.col(payload_col)))
 

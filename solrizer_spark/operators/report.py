@@ -159,59 +159,3 @@ def render_corpus_card(stats: dict[str, Any], title: str = "Corpus card") -> str
             lines.append(f"| {r['domain']} | {r['n_docs']:,} |")
     lines.append("")
     return "\n".join(lines)
-
-
-def corpus_overlap(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    key_col: str = "url",
-    exact: bool = False,
-    lgk: int = 14,
-) -> dict[str, float]:
-    """Estimate the key overlap between two corpora WITHOUT a join
-    (release hygiene: "how much of snapshot B is already in A", eval
-    contamination against a training set, dedup-wave effectiveness).
-
-    Sketch mode (default, the 10^12 shape): one ``hll_sketch_agg``
-    scan per side (mergeable, map-side combined, one row to the
-    driver each), ``|A∩B|`` by inclusion-exclusion over
-    ``hll_union``. Relative error ~1.04/√2^lgk (~0.8% at the default
-    lgk=14) on the union terms; the DIFFERENCE amplifies that when
-    the true overlap is small — for |A∩B| ≪ |A∪B| use
-    ``exact=True`` (a distinct left-semi count; shuffles both sides
-    on the key) or treat the estimate as a screen, not a measurement.
-
-    Returns ``{n_a, n_b, n_union, n_intersection, jaccard,
-    frac_b_in_a}`` (distinct-key counts; estimates in sketch mode)."""
-    a_keys = df_a.select(F.col(key_col).alias("k")).where(F.col("k").isNotNull())
-    b_keys = df_b.select(F.col(key_col).alias("k")).where(F.col("k").isNotNull())
-    if exact:
-        n_a = a_keys.distinct().count()
-        n_b = b_keys.distinct().count()
-        n_i = a_keys.distinct().join(b_keys.distinct(), "k", "left_semi").count()
-        n_u = n_a + n_b - n_i
-    else:
-        sk_a = a_keys.agg(F.hll_sketch_agg("k", F.lit(lgk)).alias("s")).first()["s"]
-        sk_b = b_keys.agg(F.hll_sketch_agg("k", F.lit(lgk)).alias("s")).first()["s"]
-        from solrizer_spark.session import local_df
-
-        both = local_df(
-            df_a.sparkSession, [(bytearray(sk_a), bytearray(sk_b))],
-            "sa binary, sb binary",
-        )
-        row = both.select(
-            F.hll_sketch_estimate("sa").alias("na"),
-            F.hll_sketch_estimate("sb").alias("nb"),
-            F.hll_sketch_estimate(F.hll_union("sa", "sb")).alias("nu"),
-        ).first()
-        n_a, n_b, n_u = float(row["na"]), float(row["nb"]), float(row["nu"])
-        n_i = max(0.0, n_a + n_b - n_u)
-    jac = (n_i / n_u) if n_u else 0.0
-    return {
-        "n_a": float(n_a),
-        "n_b": float(n_b),
-        "n_union": float(n_u),
-        "n_intersection": float(n_i),
-        "jaccard": jac,
-        "frac_b_in_a": (n_i / n_b) if n_b else 0.0,
-    }

@@ -1167,45 +1167,3 @@ def pq_topk(
         .coalesce(1)
     )
     return brute_force_topk(short, query_vec, k, id_col, vec_col)
-
-
-def ivfpq_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    k: int = 10,
-    nprobe: int = 2,
-    shortlist: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str | None = None,
-    code_col: str | None = None,
-) -> DataFrame:
-    """Full IVF-PQ (the FAISS ``IVFx,PQy`` composition): coarse-probe
-    the ``nprobe`` cells nearest the query, then PQ-ADC shortlist +
-    exact re-rank WITHIN the probed cells only. At 10^12 vectors with
-    stored ``cell_col`` (an Iceberg partition) and stored ``code_col``,
-    a probe reads nprobe/n_cells of an m-byte-per-vector code column —
-    the two reductions compose multiplicatively."""
-    import math
-
-    def cos(a: list[float], b: list[float]) -> float:
-        d = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return d / (na * nb) if na and nb else 0.0
-
-    order = sorted(
-        range(len(centroids)), key=lambda i: (-cos(query_vec, centroids[i]), i)
-    )
-    probe = order[:nprobe]
-    if cell_col is not None:
-        cell = F.col(cell_col)
-    else:
-        cell = make_assign_cell_sim_udf(centroids)(F.col(vec_col))["cell"]
-    probed = df.withColumn("_cell", cell).where(F.col("_cell").isin(probe))
-    return pq_topk(
-        probed, query_vec, codebooks, k=k, shortlist=shortlist,
-        id_col=id_col, vec_col=vec_col, code_col=code_col,
-    )

@@ -601,38 +601,6 @@ def run_chain(df: DataFrame, names: list[str] | None = None, conf: dict | None =
     return build_pipeline(names, conf)(df)
 
 
-def index_record(
-    spark,
-    url: str,
-    html: bytes | None = None,
-    text: str | None = None,
-    lang: str | None = None,
-    warc_ts=None,
-    names: list[str] | None = None,
-    conf: dict | None = None,
-) -> dict:
-    """Single-record convenience — the analog of the reference's
-    ``GET /doc?uri=…`` request path (web.py:330-405): index ONE page
-    through the same chain and return the doc as a dict. Exists for
-    parity/debugging; the batch job is the real engine."""
-    import datetime as _dt
-    import json
-
-    # naive datetimes are interpreted in spark.sql.session.timeZone
-    # (UTC — pinned by get_spark), not the driver's local tz; pass a
-    # tz-aware warc_ts to be explicit (see session.local_df docstring)
-    ts = warc_ts or _dt.datetime(2024, 1, 1, tzinfo=_dt.timezone.utc)
-    from solrizer_spark.session import local_df
-
-    df = local_df(
-        spark,
-        [(url, ts, html, text, lang)],
-        "url string, warc_ts timestamp, html binary, text string, lang string",
-    )
-    row = run_chain(df, names, conf).select("doc").first()
-    return json.loads(row.doc)
-
-
 #: Per-content-model stage lists — the analog of the reference's
 #: per-model indexer configuration (indexers.yml:1-29) with the
 #: ``__default__`` fallback (web.py:298-300,376-381). The extract

@@ -37,8 +37,8 @@ def read_pages(spark: SparkSession, source: str, fmt: str = "auto") -> DataFrame
     if fmt == "warc":
         from solrizer_spark.sources.warc import read_warc, warc_pages_projection
 
-        # hygiene filter + pages projection shared with the streaming
-        # path; use read_warc() directly for the unfiltered records
+        # hygiene filter + pages projection; use read_warc() directly
+        # for the unfiltered records
         return warc_pages_projection(read_warc(spark, source))
     return spark.read.parquet(source)
 
@@ -72,9 +72,9 @@ DOC_COLUMNS = [
 ]
 
 #: Parquet writer options of the Spark-written sink tables
-#: (``write_table`` and the streaming docs writers): zstd pages, and
-#: binary min/max statistics cut to 64 bytes — full-length ``doc``
-#: bounds were ~1.5 KB of every docs file footer.
+#: (``write_table``): zstd pages, and binary min/max statistics cut to
+#: 64 bytes — full-length ``doc`` bounds were ~1.5 KB of every docs
+#: file footer.
 PARQUET_OPTIONS = {
     "compression": "zstd",
     "parquet.statistics.truncate.length": "64",

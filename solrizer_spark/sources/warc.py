@@ -230,12 +230,11 @@ def _archive_error_row(path_: str, err: Exception) -> dict:
 
 
 def parse_archives_batched(batches, batch_rows: int = 2000):
-    """The shared ``mapInPandas`` body for batch AND streaming WARC
-    reads: one streaming parser per archive, rows emitted in ≤
-    ``batch_rows`` pandas frames so peak task memory is one raw
-    archive (inherent to the binaryFile source) + one batch of parsed
-    rows — never the whole decompressed archive plus every row at
-    once. Any per-archive parser crash (corrupt gzip, pathological
+    """The ``mapInPandas`` body of WARC reads: one streaming parser
+    per archive, rows emitted in ≤ ``batch_rows`` pandas frames so
+    peak task memory is one raw archive (inherent to the binaryFile
+    source) + one batch of parsed rows — never the whole decompressed
+    archive plus every row at once. Any per-archive parser crash (corrupt gzip, pathological
     bytes) is quarantined as a single ``parse_error='archive_error:*'``
     row for that file (already-emitted batches are kept), never a
     task failure."""
@@ -258,9 +257,8 @@ def parse_archives_batched(batches, batch_rows: int = 2000):
 
 
 def warc_pages_projection(records: DataFrame) -> DataFrame:
-    """Ingest-boundary hygiene + pages-schema projection, shared by
-    the batch (``read_pages(fmt='warc')``) and streaming
-    (``stream_warc_extract``) paths: only successful (2xx) page-like
+    """Ingest-boundary hygiene + pages-schema projection of
+    ``read_pages(fmt='warc')``: only successful (2xx) page-like
     responses become pages rows — real archives carry 404/500 bodies,
     JSON/JS/images, robots fetches; letting those through would
     pollute extraction/dedup/stats downstream. A missing content-type

@@ -15,6 +15,23 @@ def reference_fixture(name: str) -> bytes:
         return fh.read()
 
 
+def chain_doc(spark, url: str, html: bytes, lang: str | None = None,
+              conf: dict | None = None) -> dict:
+    """The ``doc`` JSON of one page run through ``DEFAULT_CHAIN``."""
+    import datetime as dt
+    import json
+
+    from solrizer_spark.plans.pipeline import run_chain
+    from solrizer_spark.session import local_df
+
+    df = local_df(
+        spark,
+        [(url, dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc), html, None, lang)],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    return json.loads(run_chain(df, conf=conf).select("doc").first().doc)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from solrizer_spark.session import get_spark

@@ -129,144 +129,16 @@ def test_more_merges_never_more_tokens():
 
 
 def test_merge_table_roundtrip(spark, tmp_path):
-    from solrizer_spark.functions.bpe import load_merges, save_merges
+    from solrizer_spark.functions.bpe import save_merges
 
     merges = learn_bpe(SENNRICH, 5)
     path = str(tmp_path / "merges")
     save_merges(spark, merges, path)
-    assert load_merges(spark, path) == merges
+    rows = spark.read.parquet(path).orderBy("rank").collect()
+    loaded = [(r["left"], r["right"]) for r in rows]
+    assert loaded == merges
     # tokenization with reloaded merges is identical
     df = spark.createDataFrame([(1, "lowest")], ["doc_id", "text"])
     a = bpe_tokenize(df, merges, "text").collect()[0]["bpe_tokens"]
-    b = bpe_tokenize(df, load_merges(spark, path), "text").collect()[0]["bpe_tokens"]
+    b = bpe_tokenize(df, loaded, "text").collect()[0]["bpe_tokens"]
     assert a == b == ["low", "est" + END_OF_WORD]
-
-
-def test_build_vocab_and_encode_ids(spark):
-    from solrizer_spark.functions.bpe import SPECIALS, build_vocab, encode_ids
-
-    df = spark.createDataFrame(
-        [(i, " ".join(w for w, f in SENNRICH for _ in range(f)))
-         for i in range(2)] + [(9, None)],
-        "doc_id long, text string",
-    )
-    merges = learn_bpe(SENNRICH, 5)
-    vocab = build_vocab(df, merges)
-    rows = {r["token"]: r["id"] for r in vocab.collect()}
-    # specials pinned at 0..2; real tokens start after
-    assert [rows[s] for s in SPECIALS] == [0, 1, 2]
-    assert min(v for t, v in rows.items() if t not in SPECIALS) == len(SPECIALS)
-    assert len(set(rows.values())) == len(rows)  # ids unique
-
-    out = {r["doc_id"]: r["input_ids"]
-           for r in encode_ids(df, merges, vocab).collect()}
-    assert out[9] is None                      # null text -> null ids
-    assert out[0] == out[1]                    # identical docs, same ids
-    assert out[0][-1] == 2                     # eos appended
-    # decode round-trip: ids -> tokens reproduces the token stream
-    inv = {v: t for t, v in rows.items()}
-    from solrizer_spark.functions.bpe import bpe_tokenize
-    toks = bpe_tokenize(df.where(F.col("doc_id") == 0), merges, "text") \
-        .collect()[0]["bpe_tokens"]
-    assert [inv[i] for i in out[0][:-1]] == toks
-
-
-def test_encode_ids_unknown_token_maps_to_unk(spark):
-    from solrizer_spark.functions.bpe import build_vocab, encode_ids
-
-    train = spark.createDataFrame([(1, "aa aa bb")], ["doc_id", "text"])
-    merges = learn_bpe([("aa", 4), ("bb", 2)], 4)
-    vocab = build_vocab(train, merges)
-    new = spark.createDataFrame([(5, "aa zz")], ["doc_id", "text"])
-    ids = encode_ids(new, merges, vocab, append_eos=None) \
-        .collect()[0]["input_ids"]
-    known = {r["id"] for r in vocab.collect()}
-    assert ids[0] in known and 1 in ids  # 'z' chars unseen -> unk(1)
-
-
-def test_encode_ids_keeps_columns_and_empty_text(spark):
-    """Review regressions: encode_ids keeps input columns; empty text
-    gets [] (+eos), distinguishable from null text."""
-    from solrizer_spark.functions.bpe import build_vocab, encode_ids
-
-    df = spark.createDataFrame(
-        [(1, "aa bb", "en"), (2, "", "en"), (3, None, "en")],
-        "doc_id long, text string, lang string",
-    )
-    merges = learn_bpe([("aa", 4), ("bb", 2)], 4)
-    vocab = build_vocab(df, merges)
-    out = {r["doc_id"]: r for r in encode_ids(df, merges, vocab).collect()}
-    assert out[1]["lang"] == "en" and out[1]["text"] == "aa bb"  # cols kept
-    assert out[2]["input_ids"] == [2]   # empty text -> [eos]
-    assert out[3]["input_ids"] is None  # null text -> null
-
-
-def test_pack_examples_training_rows(spark):
-    from solrizer_spark.functions.bpe import (
-        build_vocab,
-        encode_ids,
-        pack_examples,
-    )
-
-    df = spark.createDataFrame(
-        [(i, "aa bb aa") for i in range(1, 5)], ["doc_id", "text"]
-    )
-    merges = learn_bpe([("aa", 9), ("bb", 5)], 4)
-    vocab = build_vocab(df, merges)
-    enc = encode_ids(df, merges, vocab).collect()
-    per_doc = len(enc[0]["input_ids"])  # 3 tokens + eos = 4
-
-    out = pack_examples(df, merges, vocab, context_len=8).collect()
-    rows = {r["bin_id"]: r for r in out}
-    # 4 docs x 4 tokens = 16 tokens -> bins of 8 -> 2 full bins
-    assert set(rows) == {0, 1}
-    for r in out:
-        assert len(r["input_ids"]) == 8 and r["n_real_tokens"] == 8
-        assert [s["doc"] for s in r["doc_spans"]] in ([1, 2], [3, 4])
-        assert [s["start"] for s in r["doc_spans"]] == [0, per_doc]
-        assert all(s["len"] == per_doc for s in r["doc_spans"])
-
-    # partitioning invariance: same bins under a different layout
-    out2 = pack_examples(df.repartition(5), merges, vocab, context_len=8).collect()
-    assert {r["bin_id"]: r["input_ids"] for r in out2} == {
-        r["bin_id"]: r["input_ids"] for r in out
-    }
-
-
-def test_pack_examples_padding_and_null(spark):
-    from solrizer_spark.functions.bpe import build_vocab, pack_examples
-
-    df = spark.createDataFrame(
-        [(1, "aa"), (2, None)], "doc_id long, text string"
-    )
-    merges = learn_bpe([("aa", 9)], 2)
-    vocab = build_vocab(df, merges)
-    out = pack_examples(df, merges, vocab, context_len=6, pad_id=0).collect()
-    assert len(out) == 1  # null-text doc contributes nothing
-    r = out[0]
-    assert len(r["input_ids"]) == 6
-    assert r["n_real_tokens"] == 2  # 'aa' token + eos
-    assert r["input_ids"][r["n_real_tokens"]:] == [0] * 4  # padded
-
-
-def test_pack_examples_clips_straddling_spans(spark):
-    """Review regression: a doc straddling the bin boundary keeps only
-    its in-window prefix in doc_spans — metadata always describes
-    input_ids exactly (start+len <= context_len)."""
-    from solrizer_spark.functions.bpe import build_vocab, pack_examples
-
-    # doc1: 3 tokens+eos=4, doc2: 5 tokens+eos=6 -> ctx 8: doc2 straddles
-    df = spark.createDataFrame(
-        [(1, "aa aa aa"), (2, "aa aa aa aa aa")], ["doc_id", "text"]
-    )
-    merges = learn_bpe([("aa", 9)], 2)
-    vocab = build_vocab(df, merges)
-    out = {r["bin_id"]: r for r in
-           pack_examples(df, merges, vocab, context_len=8).collect()}
-    spans0 = out[0]["doc_spans"]
-    assert [(s["doc"], s["start"], s["len"]) for s in spans0] == [
-        (1, 0, 4), (2, 4, 4),   # doc2 clipped from 6 to 4
-    ]
-    for r in out.values():
-        for s in r["doc_spans"]:
-            assert s["start"] + s["len"] <= 8

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from solrizer_spark.operators.crawl import fetch_schedule
 
@@ -182,79 +181,3 @@ def test_fetch_schedule_invariants_property(spark, per_slot):
             import math
             bound = math.ceil(len(slots) / per_slot)
             assert all(0 <= s < bound for s in slots), (mode, host, slots)
-
-
-def test_parse_sitemaps_global_scope():
-    """Sitemap is NOT group-scoped (RFC 9309): declarations inside and
-    outside user-agent groups all apply."""
-    from solrizer_spark.functions.urls import parse_sitemaps
-
-    body = (
-        "Sitemap: https://a.com/sitemap.xml\n"
-        "User-agent: googlebot\n"
-        "Disallow: /private\n"
-        "Sitemap: https://a.com/news.xml\n"
-        "User-agent: *\n"
-        "Disallow: /tmp\n"
-        "# Sitemap: https://a.com/commented.xml\n"
-        "sitemap:https://a.com/lower.xml\n"
-    )
-    assert parse_sitemaps(body) == [
-        "https://a.com/sitemap.xml",
-        "https://a.com/news.xml",
-        "https://a.com/lower.xml",
-    ]
-    assert parse_sitemaps(None) == []
-    assert parse_sitemaps(b"Sitemap: https://b.io/s.xml") == ["https://b.io/s.xml"]
-
-
-def test_sitemap_locs_and_lastmods(spark):
-    from pyspark.sql import functions as F
-
-    from solrizer_spark.functions.urls import sitemap_lastmods, sitemap_locs
-
-    xml = (
-        '<?xml version="1.0"?><urlset>'
-        "<url><loc> https://a.com/p1 </loc><lastmod>2024-01-01</lastmod></url>"
-        "<url><loc>https://a.com/p2</loc><lastmod>2024-02-02</lastmod></url>"
-        "</urlset>"
-    )
-    idx = "<sitemapindex><sitemap><loc>https://a.com/part1.xml</loc></sitemap></sitemapindex>"
-    df = spark.createDataFrame([(xml,), (idx,), ("no xml here",)], "body string")
-    rows = df.select(
-        sitemap_locs("body").alias("locs"), sitemap_lastmods("body").alias("mods")
-    ).collect()
-    assert rows[0]["locs"] == ["https://a.com/p1", "https://a.com/p2"]
-    assert rows[0]["mods"] == ["2024-01-01", "2024-02-02"]
-    assert rows[1]["locs"] == ["https://a.com/part1.xml"]
-    assert rows[2]["locs"] == []
-    # pure JVM: no Python in the plan
-    plan = df.select(sitemap_locs("body"))._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
-
-
-def test_sitemap_frontier_composition(spark):
-    """Sitemap discovery feeds the scheduler: robots Sitemap field →
-    sitemap <loc> targets → anti-join the already-crawled set →
-    fetch_schedule over the new frontier."""
-    from pyspark.sql import functions as F
-
-    from solrizer_spark.functions.urls import parse_sitemaps, sitemap_locs
-
-    robots_body = "User-agent: *\nDisallow: /tmp\nSitemap: https://a.com/sitemap.xml"
-    assert parse_sitemaps(robots_body) == ["https://a.com/sitemap.xml"]
-    sitemap_xml = (
-        "<urlset>"
-        + "".join(f"<url><loc>https://a.com/p{i}</loc></url>" for i in range(6))
-        + "</urlset>"
-    )
-    feeds = spark.createDataFrame([(sitemap_xml,)], "body string")
-    frontier = feeds.select(F.explode(sitemap_locs("body")).alias("url"))
-    crawled = spark.createDataFrame(
-        [("https://a.com/p0",), ("https://a.com/p1",)], "url string"
-    )
-    fresh = frontier.join(crawled, "url", "left_anti")
-    out = fetch_schedule(fresh, per_slot=2, mode="exact").collect()
-    assert {r["url"] for r in out} == {f"https://a.com/p{i}" for i in range(2, 6)}
-    # 4 new urls on one host at 2/slot -> slots 0..1, politeness held
-    assert {r["slot"] for r in out} == {0, 1}

@@ -31,19 +31,3 @@ def test_doc_snapshots_byte_identical(spark, snapshots):
     assert set(out) == set(snapshots)
     for url, doc in out.items():
         assert doc == snapshots[url], f"doc drifted for {url}"
-
-
-def test_add_command_wrapping(spark, snapshots):
-    """web.py:390-403: add command nests the doc."""
-    from pyspark.sql import functions as F
-
-    from solrizer_spark.operators.doc_json import wrap_command
-
-    df = spark.createDataFrame(
-        [(u, d) for u, d in snapshots.items()], "url string, doc string"
-    )
-    row = df.select(wrap_command("doc", "add").alias("w"), "doc").first()
-    wrapped = json.loads(row.w)
-    assert wrapped["add"]["doc"] == json.loads(row.doc)
-    with pytest.raises(ValueError, match="unknown command"):
-        wrap_command("doc", "delete")

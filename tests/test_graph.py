@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from solrizer_spark.operators.graph import host_pagerank, pagerank
+from solrizer_spark.operators.graph import host_edges, pagerank
 
 EDGES = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "a")]
 
@@ -65,6 +65,8 @@ def test_pagerank_bad_damping(spark):
 
 
 def test_host_pagerank_end_to_end(spark):
+    """The host-graph composition ``job.py --host-graph`` runs:
+    distinct eTLD+1 edges from outlinks, then PageRank over them."""
     rows = [
         (
             f"https://site{i % 3}.com/p{i}",
@@ -74,9 +76,10 @@ def test_host_pagerank_end_to_end(spark):
         for i in range(12)
     ]
     df = spark.createDataFrame(rows, ["url", "html_text"])
+    edges = host_edges(df, html_col="html_text", url_col="url")
     ranks = {
         r["node"]: r["rank"]
-        for r in host_pagerank(df, iterations=3).collect()
+        for r in pagerank(edges, iterations=3, dedup_edges=False).collect()
     }
     # every site links to hub.org → it dominates
     assert max(ranks, key=ranks.get) == "hub.org"

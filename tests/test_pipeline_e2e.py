@@ -10,6 +10,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import chain_doc
 from job import run_job
 from solrizer_spark.plans.pipeline import build_pipeline
 
@@ -302,14 +303,12 @@ def test_bucket_aligned_partitions_bounds():
                 assert math.ceil(b / n) <= 1.25 * b / n
 
 
-def test_index_record_single_doc(spark):
-    """Single-record parity path (GET /doc analog, web.py:330-405)."""
-    from solrizer_spark.plans.pipeline import index_record
-
-    doc = index_record(
+def test_single_record_doc(spark):
+    """One page through the chain (GET /doc analog, web.py:330-405)."""
+    doc = chain_doc(
         spark,
-        url="https://example.org/one",
-        html=b"<html><head><title>T One</title></head><body><p>Hello single record path.</p></body></html>",
+        "https://example.org/one",
+        b"<html><head><title>T One</title></head><body><p>Hello single record path.</p></body></html>",
         lang="en",
     )
     assert doc["id"] == "https://example.org/one"

@@ -1,4 +1,4 @@
-"""Product quantization (IVF-PQ) — operators/similarity.py.
+"""Product quantization (PQ) — operators/similarity.py.
 
 Engine-original scale path for ANN over 10^12 vectors (no reference
 analog; the reference consumes binary files single-request,
@@ -10,7 +10,6 @@ FAISS fast-scan practice so shortlist sums are order-free.
 import math
 import random
 
-import pyspark.sql.functions as F
 import pytest
 
 from solrizer_spark.operators.similarity import (
@@ -140,36 +139,6 @@ def test_pq_topk_stored_codes_match_on_the_fly(emb):
     ).collect()
     assert [(r["vec_id"], r["cos_sim"]) for r in fly] == [
         (r["vec_id"], r["cos_sim"]) for r in stored
-    ]
-
-
-def test_ivfpq_probes_then_adc(emb):
-    """IVF-PQ composition: results must come from the probed cells
-    only, re-ranked by exact cosine — and with nprobe covering all
-    cells it must equal plain pq_topk."""
-    from solrizer_spark.operators.similarity import (
-        assign_ivf_cell,
-        ivfpq_topk,
-        kmeans_fit,
-    )
-
-    cents = kmeans_fit(emb, k=4, n_iter=2)
-    books = pq_train(emb, m=M, k=K, n_iter=2)
-    q = [((d % 5) - 2) / 2.0 for d in range(DIMS)]
-    got = ivfpq_topk(emb, q, cents, books, k=5, nprobe=1, shortlist=40).collect()
-    assert got
-    cells = {
-        r["vec_id"]: r["c"]
-        for r in emb.select(
-            "vec_id", assign_ivf_cell(F.col("embedding"), cents).alias("c")
-        ).collect()
-    }
-    probe_cells = {cells[r["vec_id"]] for r in got}
-    assert len(probe_cells) == 1, "nprobe=1 must stay inside one cell"
-    full = ivfpq_topk(emb, q, cents, books, k=5, nprobe=4, shortlist=40).collect()
-    plain = pq_topk(emb, q, books, k=5, shortlist=40).collect()
-    assert [(r["vec_id"], r["cos_sim"]) for r in full] == [
-        (r["vec_id"], r["cos_sim"]) for r in plain
     ]
 
 

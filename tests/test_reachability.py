@@ -1,0 +1,153 @@
+"""Every top-level name of the program is reached from an entry point.
+
+The engine is one batch dataflow with three user entry points —
+``job.py`` (extraction), ``curate.py`` (the operator chain) and
+``__spark_entry__.py`` (``queries()``/``oracle_sql()``/``entry()``,
+the oracle-checked registry) — plus ``bench.py`` and the two required
+gates ``tools/check_oracles.py`` and ``tools/explain_audit.py``. A
+name none of them reaches is code only tests run, so it is deleted
+with its tests, or it gets an entry point.
+
+Pure AST, no SparkSession. The walk is a transitive name closure:
+
+* roots are every name those files mention, plus the module-level
+  statements of each package module (they run at import);
+* a reached top-level def or assign of ``solrizer_spark/**`` or
+  ``__spark_entry__.py`` reaches every name its body mentions;
+* a mention is a ``Name``, an attribute, an ``import ... as`` alias,
+  or an identifier inside a string constant, so a help text or
+  docstring naming the tool that writes a CLI's input (curate's
+  ``--base-index`` → ``write_lsh_index``) keeps that tool;
+* code that looks builders up as ``getattr(em, f"q_{name}")`` (the
+  ``bench.py`` component leaves) mentions ``q_<s>`` for each string
+  ``s`` it holds.
+
+Resolution is by bare name, so the closure over-approximates: a miss
+is always real dead code.
+"""
+
+from __future__ import annotations
+
+import ast
+import functools
+import re
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+ROOT_FILES = (
+    "job.py",
+    "curate.py",
+    "bench.py",
+    "tools/check_oracles.py",
+    "tools/explain_audit.py",
+)
+ENTRY = "__spark_entry__.py"
+ENTRY_FUNCS = {"queries", "oracle_sql", "entry"}
+
+#: names no entry point calls, each kept for a reason the scan cannot see
+KEEP = {
+    "edtf_precision": "reference path: tests/test_edtf.py drives the "
+    "reference EDTF table through it (edtf_fields is the fused form)",
+    "solr_date_range": "reference path: tests/test_edtf.py drives the "
+    "reference EDTF table through it (edtf_fields is the fused form)",
+}
+
+_IDENT = re.compile(r"[A-Za-z_]\w*")
+
+
+def _mentions(node: ast.AST) -> set[str]:
+    out: set[str] = set()
+    words: set[str] = set()
+    by_q_name = False
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias) and n.asname:
+            out.add(n.name.rsplit(".", 1)[-1])
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            words.update(_IDENT.findall(n.value))
+        elif isinstance(n, ast.JoinedStr) and n.values:
+            head = n.values[0]
+            by_q_name |= isinstance(head, ast.Constant) and head.value == "q_"
+    if by_q_name:  # getattr(em, f"q_{name}") over a list of names
+        words |= {f"q_{w}" for w in words}
+    return out | words
+
+
+def _top_level(body: list[ast.stmt]):
+    """Module statements, looking through top-level if/try blocks."""
+    for s in body:
+        if isinstance(s, ast.If):
+            yield from _top_level(s.body + s.orelse)
+        elif isinstance(s, ast.Try):
+            yield from _top_level(
+                s.body + [x for h in s.handlers for x in h.body] + s.orelse + s.finalbody
+            )
+        else:
+            yield s
+
+
+def _defined_names(s: ast.stmt) -> list[str]:
+    if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [s.name]
+    targets = s.targets if isinstance(s, ast.Assign) else (
+        [s.target] if isinstance(s, ast.AnnAssign) else []
+    )
+    return [t.id for t in targets if isinstance(t, ast.Name)]
+
+
+@functools.cache
+def _scan() -> tuple[dict[str, list[tuple[str, ast.stmt]]], set[str]]:
+    """(top-level definitions by name → [(file, statement)], reached names)."""
+    defs: dict[str, list[tuple[str, ast.stmt]]] = {}
+    roots: set[str] = set()
+    modules = sorted((ROOT / "solrizer_spark").rglob("*.py")) + [ROOT / ENTRY]
+    for path in modules:
+        rel = str(path.relative_to(ROOT))
+        for s in _top_level(ast.parse(path.read_text()).body):
+            if isinstance(s, (ast.Import, ast.ImportFrom)):
+                roots |= _mentions(s)  # only the ``as`` aliases count
+                continue
+            names = _defined_names(s)
+            if names == ["__all__"]:
+                continue  # re-export lists are not uses
+            if not names or (rel == ENTRY and names[0] in ENTRY_FUNCS):
+                roots |= _mentions(s)
+            for name in names:
+                defs.setdefault(name, []).append((rel, s))
+    for f in ROOT_FILES:
+        roots |= _mentions(ast.parse((ROOT / f).read_text()))
+
+    reached: set[str] = set()
+    todo = list(roots)
+    while todo:
+        name = todo.pop()
+        if name in reached:
+            continue
+        reached.add(name)
+        for _, s in defs.get(name, ()):
+            todo.extend(_mentions(s) - reached)
+    return defs, reached
+
+
+def test_every_top_level_name_is_reached():
+    defs, reached = _scan()
+    dead = sorted(
+        f"{rel}:{s.lineno} {name}"
+        for name, where in defs.items()
+        if name not in reached and name not in KEEP
+        and not (name.startswith("__") and name.endswith("__"))
+        for rel, s in where
+    )
+    assert not dead, (
+        "no entry point reaches these names; delete them with their "
+        "tests, or give them an entry point:\n" + "\n".join(dead)
+    )
+
+
+def test_keep_list_is_current():
+    defs, reached = _scan()
+    stale = sorted(n for n in KEEP if n not in defs or n in reached)
+    assert not stale, f"KEEP entries that are gone or reached: {stale}"

@@ -108,21 +108,3 @@ def test_curate_report_after_chunk_op(spark, tmp_path):
     assert stats["rows_out"] >= 3
     text = open(report, encoding="utf-8").read()
     assert "Documents**" in text  # card over chunk rows, no crash
-
-
-def test_corpus_overlap_exact_and_sketch(spark):
-    """corpus_overlap: exact mode is the ground truth; the HLL
-    inclusion-exclusion estimate must land within a few percent on a
-    50%-overlap shape (well inside its error envelope)."""
-    from solrizer_spark.operators.report import corpus_overlap
-
-    a = spark.range(0, 4000).select(F.concat(F.lit("u"), "id").alias("url"))
-    b = spark.range(2000, 6000).select(F.concat(F.lit("u"), "id").alias("url"))
-    ex = corpus_overlap(a, b, exact=True)
-    assert ex["n_a"] == 4000 and ex["n_b"] == 4000
-    assert ex["n_intersection"] == 2000 and ex["n_union"] == 6000
-    assert abs(ex["jaccard"] - 2000 / 6000) < 1e-12
-    est = corpus_overlap(a, b)
-    assert abs(est["n_intersection"] - 2000) / 2000 < 0.10
-    assert abs(est["n_union"] - 6000) / 6000 < 0.05
-    assert abs(est["frac_b_in_a"] - 0.5) < 0.05

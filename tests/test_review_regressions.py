@@ -2,6 +2,7 @@
 
 import pytest
 
+from conftest import chain_doc
 from solrizer_spark.extraction.tagged import extract_hocr_words
 from solrizer_spark.operators.extract import _extract_one
 
@@ -59,18 +60,16 @@ def test_normalize_url_fragment_and_userinfo(spark):
 
 def test_custom_faceter_reaches_doc(spark):
     """FACETERS registration must flow through to the doc JSON."""
-    import json
-
     from pyspark.sql import functions as F
 
-    from solrizer_spark.plans.pipeline import FACETERS, index_record
+    from solrizer_spark.plans.pipeline import FACETERS
 
     FACETERS["mood"] = lambda df: F.lit("cheerful")
     try:
-        doc = index_record(
+        doc = chain_doc(
             spark,
-            url="https://example.org/f",
-            html=b"<html><body><p>facet flows to the doc now.</p></body></html>",
+            "https://example.org/f",
+            b"<html><body><p>facet flows to the doc now.</p></body></html>",
             lang="en",
             conf={"faceters": ["language", "ocr", "domain", "mood"]},
         )
@@ -83,15 +82,15 @@ def test_custom_faceter_reaches_doc(spark):
 def test_gap_clash_rejected(spark):
     from pyspark.sql import functions as F
 
-    from solrizer_spark.plans.pipeline import FACETERS, index_record
+    from solrizer_spark.plans.pipeline import FACETERS
 
     FACETERS["title__txt_style"] = lambda df: F.lit("x")
     try:
         with pytest.raises(ValueError, match="dynamic name"):
-            index_record(
+            chain_doc(
                 spark,
-                url="https://example.org/g",
-                html=b"<html><body><p>clash</p></body></html>",
+                "https://example.org/g",
+                b"<html><body><p>clash</p></body></html>",
                 conf={"faceters": ["language", "ocr", "domain", "title__txt_style"]},
             )
     finally:

@@ -226,10 +226,7 @@ def test_child_docs_carry_page_label(spark):
 
 
 def test_solr_timestamp_subsecond(spark):
-    from solrizer_spark.functions.datetime_fns import (
-        solr_timestamp,
-        solr_timestamp_from_string,
-    )
+    from solrizer_spark.functions.datetime_fns import solr_timestamp
 
     df = spark.createDataFrame(
         [
@@ -246,12 +243,6 @@ def test_solr_timestamp_subsecond(spark):
         "2024-03-01T12:00:05.123000Z",
         "2024-03-01T12:00:05.000007Z",
     ]
-    sdf = spark.createDataFrame(
-        [("2024-03-01T14:00:05.250000+02:00",), ("2024-03-01T12:00:05+00:00",)],
-        "s string",
-    )
-    got2 = [r.z for r in sdf.select(solr_timestamp_from_string("s").alias("z")).collect()]
-    assert got2 == ["2024-03-01T12:00:05.250000Z", "2024-03-01T12:00:05Z"]
 
 
 def test_admin_set_faceter_dim_join(spark):

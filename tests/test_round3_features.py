@@ -182,38 +182,6 @@ def test_dup_line_fraction_literal_sep(spark):
 # -- PIL-gated real decode --------------------------------------------------
 
 
-def test_decode_pixels_gated():
-    from solrizer_spark.operators.multimodal import HAVE_PIL, decode_pixels
-
-    if not HAVE_PIL:
-        with pytest.raises(NotImplementedError, match="Pillow"):
-            decode_pixels(b"\x89PNG\r\n")
-        pytest.skip("Pillow not installed in this sandbox; decode path gated")
-    # pragma: no cover below — runs only on images with Pillow
-    import io
-
-    from PIL import Image
-
-    buf = io.BytesIO()
-    Image.new("RGB", (3, 2)).save(buf, format="PNG")
-    w, h, mode, raw = decode_pixels(buf.getvalue())
-    assert (w, h, mode) == (3, 2, "RGB")
-    assert len(raw) == 3 * 2 * 3
-
-
-def test_real_image_metadata_shape():
-    from solrizer_spark.operators.multimodal import (
-        HAVE_PIL,
-        MEDIA_META_TYPE,
-        real_image_metadata,
-    )
-
-    out = real_image_metadata(b"not-an-image")
-    assert set(out) == {f.name for f in MEDIA_META_TYPE.fields}
-    if not HAVE_PIL:
-        assert out["valid"] is False
-
-
 # -- chunk_text --------------------------------------------------------------
 
 

@@ -118,18 +118,6 @@ def _garbage_docs(spark, n_docs=20, toks_per_doc=30):
     )
 
 
-def test_build_vocab_guard_trips_on_garbage_corpus(spark):
-    from solrizer_spark.functions.bpe import bpe_train, build_vocab
-
-    docs = _garbage_docs(spark)
-    merges = bpe_train(docs, "text", num_merges=4, top_k=100)
-    bad = build_vocab(docs, merges, "text", max_vocab_rows=10)
-    with pytest.raises(Exception, match="not a vocabulary"):
-        bad.collect()
-    ok = build_vocab(docs, merges, "text", max_vocab_rows=10_000_000)
-    assert ok.count() > 3
-
-
 def test_unigram_guard_trips_on_garbage_corpus(spark):
     from solrizer_spark.operators.lm import train_unigram_model
 

@@ -160,7 +160,6 @@ def test_fingerprint_deterministic(spark):
 
 def test_multimodal_metadata_and_stub(spark):
     from solrizer_spark.operators.multimodal import (
-        decode_pixels,
         media_metadata_stage,
         parse_media_header,
     )
@@ -178,8 +177,6 @@ def test_multimodal_metadata_and_stub(spark):
     assert out[2].kind == "audio" and out[2].sample_rate == 44100
     assert out[3].kind == "video" and out[3].n_frames == 50
     assert out[4].valid is False and out[5].valid is False
-    with pytest.raises(NotImplementedError):
-        decode_pixels(b"IMG1...")
     assert parse_media_header(b"IMG1000640000480" + b"3")["valid"] is True
 
 
@@ -606,35 +603,3 @@ def test_assign_cells_join_equals_literal_path(spark):
     got_j = {r["vec_id"]: (r["cell"], r["sim"]) for r in join.collect()}
     assert got_l == got_j
     assert got_j[1000][0] == 7  # tie resolved to the LOWEST cell
-
-
-def test_canonical_url_dedup(spark):
-    """rel=canonical dedup: variants collapse onto the canonical page
-    when present (else min url); undeclared rows pass through 1:1."""
-    from pyspark.sql import functions as F
-
-    from solrizer_spark.operators.dedup import canonical_url_dedup
-
-    rows = [
-        # canonical page + two variants pointing at it
-        ("https://a.com/page", None),
-        ("https://a.com/page?utm=x", "https://a.com/page"),
-        ("https://a.com/amp/page", "https://a.com/page"),
-        # variants of a target NOT in the corpus → min url wins
-        ("https://b.com/m2", "https://b.com/gone"),
-        ("https://b.com/m1", "https://b.com/gone"),
-        # no declaration → self-canonical passthrough
-        ("https://c.com/solo", None),
-    ]
-    df = spark.createDataFrame(rows, "url string, canonical_url string")
-    out = {r["canonical_key"]: r for r in canonical_url_dedup(df).collect()}
-    assert len(out) == 3
-    a = out["https://a.com/page"]
-    assert a["kept_url"] == "https://a.com/page" and a["n_variants"] == 3
-    b = out["https://b.com/gone"]
-    assert b["kept_url"] == "https://b.com/m1" and b["n_variants"] == 2
-    assert out["https://c.com/solo"]["n_variants"] == 1
-    # one shuffle, map-side combinable
-    plan = canonical_url_dedup(df)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1
-    assert "partial" in plan.lower()

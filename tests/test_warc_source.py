@@ -268,37 +268,6 @@ def test_read_pages_warc_keeps_pdfs(spark, tmp_path):
     }
 
 
-def test_stream_warc_incremental(spark, tmp_path):
-    """AvailableNow WARC stream: pass 1 ingests the first archive;
-    pass 2 picks up ONLY the newly arrived archive (checkpointed file
-    progress) and extraction matches the batch chain byte-for-byte."""
-    from solrizer_spark.streaming.incremental import stream_warc_extract
-
-    archives = tmp_path / "drop"
-    archives.mkdir()
-    out = str(tmp_path / "docs")
-    ckpt = str(tmp_path / "ckpt")
-
-    write_warc(_records(3), str(archives / "seg-0.warc.gz"), gzip_members=True)
-    stream_warc_extract(spark, str(archives), out, ckpt, n_buckets=8)
-    first = spark.read.parquet(out)
-    assert first.count() == 3
-
-    write_warc(
-        [{**r, "url": r["url"] + "?late=1", "rec_id": r["rec_id"] + "-l"}
-         for r in _records(2)],
-        str(archives / "seg-1.warc.gz"),
-        gzip_members=True,
-    )
-    stream_warc_extract(spark, str(archives), out, ckpt, n_buckets=8)
-    rows = {r["url"]: r["extracted_text"] for r in spark.read.parquet(out).collect()}
-    assert len(rows) == 5  # 3 + 2, no reprocessing of seg-0
-    for i in range(2):
-        assert rows[f"https://warc.example.org/page/{i}?late=1"] == (
-            f"Doc {i}warc body text {i}"
-        )
-
-
 def test_http_charset_drives_extraction(spark, tmp_path):
     """Transport-layer charset (Content-Type header) flows WARC →
     pages projection → extraction decode ladder: a shift_jis body
