@@ -2074,6 +2074,32 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
+def component_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The fine-grained component builders the composite ``queries()``
+    entries were consolidated from. ``bench.py`` keeps timing them so
+    per-operator timings stay comparable across rounds; the plan and
+    profiling tools walk the same set."""
+    return {
+        "text_stats": q_text_stats,
+        "dedup_minhash_lsh": q_dedup_minhash_lsh,
+        "dedup_simhash": q_dedup_simhash,
+        "dedup_simhash_pairs": q_dedup_simhash_pairs,
+        "ann_bruteforce": q_ann_bruteforce,
+        "outlinks": q_outlinks,
+        "media_features": q_media_features,
+        "domain_stats": q_domain_stats,
+        "fetch_schedule": q_fetch_schedule,
+        "lm_score": q_lm_score,
+        "lm_backoff": q_lm_backoff,
+        "anchors": q_anchors,
+        "crawl_delay_schedule": q_crawl_delay_schedule,
+        "inverted_postings": q_inverted_postings,
+        "tfidf_keywords": q_tfidf_keywords,
+        "keyword_search": q_keyword_search,
+        "ann_pq": q_ann_pq,
+    }
+
+
 # --------------------------------------------------------------------------
 # oracles (DuckDB SQL over the same parquet views)
 # --------------------------------------------------------------------------

@@ -147,18 +147,8 @@ def main() -> None:
     # Round 5 consolidated the queries() registry into composite
     # entries (driver 50-row window); the bench keeps timing the
     # FINE-GRAINED component queries so per-operator timings stay
-    # comparable round-over-round. Components no longer in the
-    # registry are resolved from their q_* functions directly.
-    qs = dict(em.queries())
-    for comp in (
-        "text_stats", "dedup_minhash_lsh", "dedup_simhash",
-        "dedup_simhash_pairs", "ann_bruteforce", "outlinks",
-        "media_features", "domain_stats", "fetch_schedule", "lm_score",
-        "lm_backoff", "anchors", "crawl_delay_schedule",
-        "inverted_postings", "tfidf_keywords", "keyword_search",
-        "ann_pq",
-    ):
-        qs.setdefault(comp, getattr(em, f"q_{comp}"))
+    # comparable round-over-round; ``component_queries()`` lists them.
+    qs = {**em.queries(), **em.component_queries()}
     # Iterative queries (connected components) run real Spark jobs at
     # DataFrame-build time, so those must be rebuilt inside each timed
     # run. Everything else is a lazy plan: build it ONCE and time the

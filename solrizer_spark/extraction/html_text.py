@@ -127,10 +127,6 @@ class ExtractionResult:
     #: "strict" | "bom" | "xml_decl" | "meta" | "fallback"
     charset_source: str = "strict"
 
-    @property
-    def main_text(self) -> str:
-        return "\n".join(b.text for b in self.blocks if b.kept)
-
 
 class _ExtractorState:
     """Backend-independent extractor sink: raw text stream + block

@@ -93,14 +93,6 @@ def meta_robots(html: Column) -> Column:
     return _nullify(F.lower(F.regexp_extract(html, _ROBOTS_PAT, 1)))
 
 
-def is_noindex(html: Column) -> Column:
-    """True when the robots meta declares noindex or none."""
-    robots = meta_robots(html)
-    return F.coalesce(
-        robots.rlike(r"(^|[,\s])(noindex|none)([,\s]|$)"), F.lit(False)
-    )
-
-
 def page_metadata(html: Column) -> dict[str, Column]:
     """All extractors as a name→Column dict, for select-splat use."""
     return {

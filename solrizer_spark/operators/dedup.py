@@ -4,7 +4,6 @@ No reference analog (solrizer indexes one record per request; its only
 dup check is indexer-name validation, web.py:286-287) — these are the
 corpus-scale operators a 10^12-document extraction pipeline feeds:
 
-* :func:`exact_dedup`        content-hash groupBy
 * :func:`minhash_signatures` word-shingle MinHash
 * :func:`minhash_lsh_pairs`  banded-LSH candidate generation + exact
                              Jaccard verification
@@ -154,19 +153,6 @@ def explode_bucket_pairs(buckets: DataFrame, members_col: str) -> DataFrame:
         F.explode(
             F.slice(F.col("_m"), F.col("_i") + F.lit(2), F.size("_m") - F.col("_i") - F.lit(1))
         ).alias("b"),
-    )
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Content-hash exact dedup: one row per distinct content with the
-    canonical (minimum) id and the duplicate count. One shuffle, map-
-    side combinable."""
-    return (
-        df.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
-        .agg(
-            F.min(id_col).alias("canonical_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
     )
 
 

@@ -1,18 +1,20 @@
 """The extraction stage — the engine's single Python hot path.
 
 One Arrow-vectorized pandas UDF maps ``(html binary, text string)`` →
-a typed extraction struct. Everything downstream (main-text assembly,
-routing, metrics, field naming) is native Spark SQL over the struct,
-keeping the Python surface minimal and the rest of the plan inside
+a typed extraction struct. The kernel decides each record's
+``extracted_text`` itself; everything downstream (routing flags,
+metrics, field naming) is native Spark SQL over the struct, keeping
+the Python surface to one boundary and the rest of the plan inside
 WholeStageCodegen.
 
 Reference semantics re-expressed (src/solrizer/indexers/extracted_text.py):
 
 * content routing OCR → PDF → HTML → plain text (get_text_page,
   extracted_text.py:76-111) becomes payload sniffing inside the UDF
-  (``route`` field) + ``F.when`` chains downstream;
-* HTML route: get_text-equivalent ``raw_text`` plus scored DOM blocks
-  (the new-engine boilerplate classifier, SURVEY.md §2.12);
+  (``route`` field);
+* HTML route: the kept blocks' text when the boilerplate classifier
+  (SURVEY.md §2.12) dropped any block, else the get_text-equivalent
+  markup strip;
 * OCR route: ``word|n={page}&xywh={x,y,w,h}`` tokens
   (extracted_text.py:114-119), detected for ALTO / hOCR / OCR1;
 * plain route: ``text`` passthrough unaltered (extracted_text.py:109-111);
@@ -54,31 +56,15 @@ BLOCK_TYPE = T.StructType(
     ]
 )
 
-EXTRACT_TYPE = T.StructType(
-    [
-        T.StructField("route", T.StringType()),  # html | pdf | plain | tagged | failed
-        T.StructField("raw_text", T.StringType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("tagged_text", T.StringType()),
-        T.StructField("blocks", T.ArrayType(BLOCK_TYPE)),
-        T.StructField("parse_failed", T.BooleanType()),
-        T.StructField("error", T.StringType()),
-        T.StructField("bytes_in", T.IntegerType()),
-        T.StructField("charset_source", T.StringType()),
-        T.StructField("canonical_url", T.StringType()),
-        T.StructField("is_noindex", T.BooleanType()),
-    ]
-)
-
-#: Fast-path schema: scalars only. Shipping the nested block array
-#: through Arrow costs ~9× the extraction kernel itself (measured:
-#: list-of-struct conversion dominates the batch), so the default
-#: stage resolves main-vs-raw text inside the kernel and sends back
-#: flat columns; the block-level detail is opt-in for debugging and
-#: classifier development.
+#: The extraction record: scalars only. Shipping the nested block
+#: array through Arrow costs ~9× the extraction kernel itself
+#: (measured: list-of-struct conversion dominates the batch), so the
+#: kernel resolves main-vs-raw text itself and the default stage sends
+#: back flat columns; the block array is opt-in (``include_blocks``)
+#: for the consumers that read it.
 EXTRACT_FAST_TYPE = T.StructType(
     [
-        T.StructField("route", T.StringType()),
+        T.StructField("route", T.StringType()),  # html | pdf | plain | tagged | failed
         T.StructField("extracted_text", T.StringType()),
         T.StructField("title", T.StringType()),
         T.StructField("parse_failed", T.BooleanType()),
@@ -98,19 +84,19 @@ EXTRACT_FAST_TYPE = T.StructType(
     ]
 )
 
-_FAILED = {
-    "route": "failed",
-    "raw_text": None,
+#: what every route but html leaves at its default
+_NOT_HTML = {
     "title": None,
-    "tagged_text": None,
-    "blocks": None,
-    "parse_failed": True,
+    "parse_failed": False,
     "error": None,
-    "bytes_in": 0,
+    "blocks_kept": 0,
+    "blocks_dropped": 0,
     "charset_source": None,
     "canonical_url": None,
     "is_noindex": False,
+    "blocks": None,
 }
+_FAILED = {**_NOT_HTML, "route": "failed", "extracted_text": None, "parse_failed": True, "bytes_in": 0}
 
 #: payload sniff window (bytes) for OCR-format markers
 _SNIFF = 4096
@@ -134,7 +120,7 @@ def _canonical_from_head(html: bytes) -> str | None:
 
 
 #: robots-meta noindex/none declaration, same bounded byte-level scan
-#: (functions/html_meta.is_noindex is the Column form for decoded text)
+#: (the engine's only noindex rule; the docs table and its metrics read it)
 _PY_ROBOTS = re.compile(
     rb"""<meta[^>]*?name\s*=\s*["']robots["'][^>]*?content\s*=\s*["']([^"']*)["']""",
     re.IGNORECASE,
@@ -153,7 +139,10 @@ def _extract_one(
     dpi: tuple[int, int],
     http_charset: str | None = None,
 ) -> dict:
-    """Pure per-record kernel; the UDF maps this over Arrow batches."""
+    """Pure per-record kernel; the UDF maps this over Arrow batches.
+
+    Returns the ``EXTRACT_FAST_TYPE`` fields plus ``blocks`` (the html
+    route's scored ``Block`` objects, ``None`` on every other route)."""
     if html is not None and len(html) > 0:
         head = html[:_SNIFF]
         is_tagged = head.lstrip()[:4] == OCR1_MAGIC.encode() or any(
@@ -168,17 +157,10 @@ def _extract_one(
             try:
                 words = extract_tagged_words(html, dpi=dpi)
                 return {
+                    **_NOT_HTML,
                     "route": "tagged",
-                    "raw_text": None,
-                    "title": None,
-                    "tagged_text": tagged_text(words, page_index=0),
-                    "blocks": None,
-                    "parse_failed": False,
-                    "error": None,
+                    "extracted_text": tagged_text(words, page_index=0),
                     "bytes_in": len(html),
-                    "charset_source": None,
-                    "canonical_url": None,
-                    "is_noindex": False,
                 }
             except UnrecognizedOCRFormatError:
                 pass  # not OCR after all → HTML route
@@ -192,103 +174,67 @@ def _extract_one(
             if not pdf_text:
                 return {**_FAILED, "error": "pdf_no_text", "bytes_in": len(html)}
             return {
+                **_NOT_HTML,
                 "route": "pdf",
-                "raw_text": pdf_text,
+                "extracted_text": pdf_text,
                 "title": pdf_title(html),
-                "tagged_text": None,
-                "blocks": None,
-                "parse_failed": False,
-                "error": None,
                 "bytes_in": len(html),
-                "charset_source": None,
-                "canonical_url": None,
-                "is_noindex": False,
             }
         result = extract_html(html, http_charset=http_charset)
         if result.parse_failed:
             return {**_FAILED, "error": result.error, "bytes_in": len(html)}
+        blocks = result.blocks
+        kept = sum(1 for b in blocks if b.kept)
+        dropped = len(blocks) - kept
         return {
             "route": "html",
-            "raw_text": result.raw_text,
+            # boilerplate detected ⇒ main-content text (kept blocks in
+            # document order); clean page ⇒ raw markup-strip bytes
+            # (get_text parity)
+            "extracted_text": (
+                "\n".join(b.text for b in blocks if b.kept) if dropped else result.raw_text
+            ),
             "title": result.title,
-            "tagged_text": None,
-            # Block objects, not dicts: the fast path only counts
-            # kept/dropped and joins text, so the per-block as_dict()
-            # conversion is deferred to the detail UDF that actually
-            # serializes the struct column
-            "blocks": result.blocks,
             "parse_failed": False,
             "error": None,
             "bytes_in": len(html),
+            "blocks_kept": kept,
+            "blocks_dropped": dropped,
             "charset_source": result.charset_source,
             "canonical_url": _canonical_from_head(html),
             "is_noindex": _noindex_from_head(html),
+            # Block objects, not dicts: only ``include_blocks`` pays
+            # for the per-block ``as_dict``
+            "blocks": blocks,
         }
     if text is not None:
         # plain-text passthrough, unaltered (extracted_text.py:109-111)
         return {
+            **_NOT_HTML,
             "route": "plain",
-            "raw_text": text,
-            "title": None,
-            "tagged_text": None,
-            "blocks": None,
-            "parse_failed": False,
-            "error": None,
+            "extracted_text": text,
             "bytes_in": len(text.encode("utf-8")),
-            "charset_source": None,
-            "canonical_url": None,
-            "is_noindex": False,
         }
     return {**_FAILED, "error": "empty_html"}
 
 
-def make_extract_udf(dpi: tuple[int, int] = (400, 400)):
-    @pandas_udf(EXTRACT_TYPE)
+def make_extract_udf(dpi: tuple[int, int] = (400, 400), include_blocks: bool = False):
+    """The extraction UDF: ``EXTRACT_FAST_TYPE``, plus the scored
+    ``blocks`` array when ``include_blocks`` (NULL off the html route,
+    ``[]`` for an html page with no text block)."""
+    schema = EXTRACT_FAST_TYPE
+    if include_blocks:
+        schema = T.StructType(
+            [*EXTRACT_FAST_TYPE.fields, T.StructField("blocks", T.ArrayType(BLOCK_TYPE))]
+        )
+
+    @pandas_udf(schema)
     def extract_udf(
-        html: pd.Series, text: pd.Series, http_charset: pd.Series
-    ) -> pd.DataFrame:
-        out = []
-        for h, t, c in zip(html, text, http_charset):
-            rec = _extract_one(
-                h,
-                t if isinstance(t, str) else None,
-                dpi,
-                c if isinstance(c, str) else None,
-            )
-            if rec["blocks"] is not None:
-                rec = {**rec, "blocks": [b.as_dict() for b in rec["blocks"]]}
-            out.append(rec)
-        return pd.DataFrame(out)
-
-    return extract_udf
-
-
-def _resolve_text(rec: dict) -> str | None:
-    """Final extracted_text decision, kernel-side (fast path). Must
-    stay semantically identical to the Column logic in
-    :func:`extract_stage` detail mode (pinned by tests)."""
-    if rec["parse_failed"]:
-        return None
-    route = rec["route"]
-    if route == "tagged":
-        return rec["tagged_text"]
-    if route == "plain":
-        return rec["raw_text"]
-    blocks = rec["blocks"] or []
-    dropped = sum(1 for b in blocks if not b.kept)
-    if dropped > 0:
-        return "\n".join(b.text for b in blocks if b.kept)
-    return rec["raw_text"]
-
-
-def make_extract_fast_udf(dpi: tuple[int, int] = (400, 400)):
-    @pandas_udf(EXTRACT_FAST_TYPE)
-    def extract_fast_udf(
         html: pd.Series, text: pd.Series, http_charset: pd.Series
     ) -> pd.DataFrame:
         # columnar accumulation: dict-of-lists beats list-of-dicts for
         # the pandas→Arrow hop
-        cols: dict[str, list] = {f.name: [] for f in EXTRACT_FAST_TYPE.fields}
+        cols: dict[str, list] = {f.name: [] for f in schema.fields}
         for h, t, c in zip(html, text, http_charset):
             rec = _extract_one(
                 h,
@@ -296,41 +242,25 @@ def make_extract_fast_udf(dpi: tuple[int, int] = (400, 400)):
                 dpi,
                 c if isinstance(c, str) else None,
             )
-            blocks = rec["blocks"] or []
-            kept = sum(1 for b in blocks if b.kept)
             cols["route"].append(rec["route"])
-            cols["extracted_text"].append(_resolve_text(rec))
+            cols["extracted_text"].append(rec["extracted_text"])
             cols["title"].append(rec["title"])
             cols["parse_failed"].append(rec["parse_failed"])
             cols["error"].append(rec["error"])
             cols["bytes_in"].append(rec["bytes_in"])
-            cols["blocks_kept"].append(kept)
-            cols["blocks_dropped"].append(len(blocks) - kept)
+            cols["blocks_kept"].append(rec["blocks_kept"])
+            cols["blocks_dropped"].append(rec["blocks_dropped"])
             cols["charset_source"].append(rec["charset_source"])
             cols["canonical_url"].append(rec["canonical_url"])
             cols["is_noindex"].append(rec["is_noindex"])
+            if include_blocks:
+                blocks = rec["blocks"]
+                cols["blocks"].append(
+                    None if blocks is None else [b.as_dict() for b in blocks]
+                )
         return pd.DataFrame(cols)
 
-    return extract_fast_udf
-
-
-def kept_blocks(blocks: Column) -> Column:
-    return F.filter(blocks, lambda b: b["kept"])
-
-
-def main_text(blocks: Column) -> Column:
-    """Ordered concatenation of kept block texts. Block arrays are
-    emitted in document order by the kernel; ``array_sort`` on
-    block_index makes the ordering contract explicit and
-    retry-independent (reference analog: ordered page join ' ',
-    extracted_text.py:58 / page_sequence.py:50-71)."""
-    ordered = F.array_sort(
-        kept_blocks(blocks),
-        lambda a, b: F.when(a["block_index"] < b["block_index"], -1)
-        .when(a["block_index"] > b["block_index"], 1)
-        .otherwise(0),
-    )
-    return F.array_join(F.transform(ordered, lambda b: b["text"]), "\n")
+    return extract_udf
 
 
 def page_outline(blocks: Column) -> Column:
@@ -391,11 +321,13 @@ def extract_stage(
       - ``blocks_kept``/``blocks_dropped``/``bytes_in`` metrics
       - ``blocks``          per-block detail, only when ``include_blocks``
 
-    ``include_blocks=False`` (default) is the high-throughput path: the
-    kernel resolves extracted_text and only flat scalars cross the
-    Arrow boundary. ``include_blocks=True`` ships the scored block
-    array and assembles the text with Column expressions — same bytes
-    (pinned by tests), ~9× slower boundary, for debugging/inspection.
+    Both modes run the same kernel, so every scalar column, the text
+    included, is the same bytes in either. ``include_blocks=False``
+    (default) is the high-throughput path: only flat scalars cross the
+    Arrow boundary. ``include_blocks=True`` also ships the scored block
+    array for the consumers that read it (``page_outline``, child docs,
+    ``job.py --outline``); the nested array makes that boundary ~9×
+    slower.
     """
     # transport-layer charset label (WARC ingest's http_charset column)
     # feeds the decode ladder between BOM and in-document declarations;
@@ -410,57 +342,25 @@ def _extract_layers(
     dpi: tuple[int, int], include_blocks: bool, has_charset: bool
 ) -> tuple[dict[str, Column], ...]:
     """The stage's Columns, built once per process: the UDF call into
-    ``_ext``, then the fields read from it, then (detail mode) the text
-    assembled from those fields. Each layer reads only the columns
-    before it, so it is one ``withColumns``."""
+    ``_ext``, then the fields read from it. Each layer reads only the
+    columns before it, so it is one ``withColumns``."""
     hint = F.col("http_charset") if has_charset else F.lit(None).cast("string")
-    args = (F.col("html"), F.col("text"), hint)
     e = F.col("_ext")
-    if not include_blocks:
-        return (
-            {"_ext": make_extract_fast_udf(dpi)(*args)},
-            {
-                "route": e["route"],
-                "title": e["title"],
-                "parse_failed": e["parse_failed"],
-                "error": e["error"],
-                "bytes_in": e["bytes_in"],
-                "is_tagged": e["route"] == F.lit("tagged"),
-                "blocks_kept": e["blocks_kept"],
-                "blocks_dropped": e["blocks_dropped"],
-                "charset_source": e["charset_source"],
-                "canonical_url": e["canonical_url"],
-                "is_noindex": e["is_noindex"],
-                "extracted_text": e["extracted_text"],
-            },
-        )
-    n_kept = F.size(kept_blocks(e["blocks"]))
-    n_blocks = F.size(e["blocks"])
-    return (
-        {"_ext": make_extract_udf(dpi)(*args)},
-        {
-            "route": e["route"],
-            "title": e["title"],
-            "parse_failed": e["parse_failed"],
-            "error": e["error"],
-            "bytes_in": e["bytes_in"],
-            "charset_source": e["charset_source"],
-            "canonical_url": e["canonical_url"],
-            "is_noindex": e["is_noindex"],
-            "blocks": e["blocks"],
-            "is_tagged": e["route"] == F.lit("tagged"),
-            "blocks_kept": F.when(e["blocks"].isNotNull(), n_kept).otherwise(F.lit(0)),
-            "blocks_dropped": F.when(e["blocks"].isNotNull(), n_blocks - n_kept).otherwise(
-                F.lit(0)
-            ),
-        },
-        {
-            "extracted_text": F.when(e["parse_failed"], F.lit(None).cast("string"))
-            .when(e["route"] == "tagged", e["tagged_text"])
-            .when(e["route"] == "plain", e["raw_text"])
-            # html route: boilerplate detected ⇒ main-content text;
-            # clean page ⇒ raw markup-strip bytes (get_text parity)
-            .when(F.col("blocks_dropped") > 0, main_text(e["blocks"]))
-            .otherwise(e["raw_text"]),
-        },
-    )
+    fields = {
+        "route": e["route"],
+        "title": e["title"],
+        "parse_failed": e["parse_failed"],
+        "error": e["error"],
+        "bytes_in": e["bytes_in"],
+        "is_tagged": e["route"] == F.lit("tagged"),
+        "blocks_kept": e["blocks_kept"],
+        "blocks_dropped": e["blocks_dropped"],
+        "charset_source": e["charset_source"],
+        "canonical_url": e["canonical_url"],
+        "is_noindex": e["is_noindex"],
+        "extracted_text": e["extracted_text"],
+    }
+    if include_blocks:
+        fields["blocks"] = e["blocks"]
+    udf = make_extract_udf(dpi, include_blocks)
+    return ({"_ext": udf(F.col("html"), F.col("text"), hint)}, fields)

@@ -68,21 +68,19 @@ def test_html_lang(spark):
 
 
 def test_meta_robots_and_noindex(spark):
-    from solrizer_spark.functions.html_meta import is_noindex
+    from solrizer_spark.operators.extract import _extract_one
 
     got = _extract(spark, '<meta name="robots" content="NOINDEX, nofollow">')
     assert got["meta_robots"] == "noindex, nofollow"
-    df = spark.createDataFrame(
-        [
-            ('<meta name="robots" content="noindex">',),
-            ('<meta name="robots" content="none">',),
-            ('<meta name="robots" content="nofollow">',),  # follow-only: indexable
-            ('<meta name="robots" content="noindexing-is-fun">',),  # no token match
-            ("<p>no robots meta at all</p>",),
-        ],
-        "html string",
-    )
-    flags = [r[0] for r in df.select(is_noindex(F.col("html"))).collect()]
+    # noindex is decided by the extraction kernel's head scan
+    pages = [
+        b'<meta name="robots" content="noindex">',
+        b'<meta name="robots" content="none">',
+        b'<meta name="robots" content="nofollow">',  # follow-only: indexable
+        b'<meta name="robots" content="noindexing-is-fun">',  # no token match
+        b"<p>no robots meta at all</p>",
+    ]
+    flags = [_extract_one(h, None, (400, 400))["is_noindex"] for h in pages]
     assert flags == [True, True, False, False, False]
 
 

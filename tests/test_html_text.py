@@ -81,7 +81,6 @@ def test_block_segmentation_and_order():
     ]
     assert [b.block_index for b in r.blocks] == [0, 1, 2, 3]
     assert all(b.kept for b in r.blocks)
-    assert r.main_text == "\n".join(texts)
 
 
 def test_boilerplate_classification():

@@ -224,17 +224,50 @@ def test_deterministic_across_runs(spark, corpus_dir, job_output):
 
 
 def test_fast_and_detail_modes_identical(spark, corpus_dir):
-    """The kernel-side text resolution (fast path) must produce the
-    same bytes as the Column-expression assembly (detail path)."""
+    """One kernel serves both modes: every scalar column is the same
+    bytes with or without the block array, and the array detail mode
+    emits agrees with the text and counts the kernel decided."""
+    from test_pdf_text import make_pdf
+
     from solrizer_spark.operators.extract import extract_stage
 
-    pages = spark.read.parquet(os.path.join(corpus_dir, "pages"))
-    cols = ["url", "extracted_text", "title", "route", "parse_failed",
-            "blocks_kept", "blocks_dropped"]
+    extra = spark.createDataFrame(
+        [
+            ("https://x.org/a.pdf", make_pdf(b"BT (pdf route) Tj ET"), None),
+            ("https://x.org/no-text", b"<html><body><img src=a.png></body></html>", None),
+        ],
+        "url string, html binary, text string",
+    )
+    pages = spark.read.parquet(os.path.join(corpus_dir, "pages")).unionByName(
+        extra, allowMissingColumns=True
+    )
+    cols = ["url", "extracted_text", "title", "route", "parse_failed", "error",
+            "bytes_in", "is_tagged", "blocks_kept", "blocks_dropped",
+            "charset_source", "canonical_url", "is_noindex"]
     fast = extract_stage(pages, include_blocks=False).select(cols)
-    detail = extract_stage(pages, include_blocks=True).select(cols)
-    assert fast.exceptAll(detail).count() == 0
-    assert detail.exceptAll(fast).count() == 0
+    detail = extract_stage(pages, include_blocks=True).select(cols + ["blocks"])
+    assert fast.exceptAll(detail.select(cols)).count() == 0
+    assert detail.select(cols).exceptAll(fast).count() == 0
+
+    rows = detail.collect()
+    assert {r["route"] for r in rows} == {"html", "plain", "tagged", "pdf", "failed"}
+    for r in rows:
+        blocks = r["blocks"]
+        # NULL off the html route; an html page always carries an array
+        assert (blocks is None) == (r["route"] != "html"), r["url"]
+        if blocks is None:
+            assert r["blocks_kept"] == r["blocks_dropped"] == 0
+            continue
+        kept = sorted((b for b in blocks if b["kept"]), key=lambda b: b["block_index"])
+        assert r["blocks_kept"] == len(kept)
+        assert r["blocks_dropped"] == len(blocks) - len(kept)
+        if r["blocks_dropped"] > 0:
+            assert r["extracted_text"] == "\n".join(b["text"] for b in kept)
+    assert any(r["blocks_dropped"] > 0 for r in rows)
+    # no text block is an empty array, not NULL: page_outline and
+    # child_docs read the difference
+    no_text = next(r for r in rows if r["url"] == "https://x.org/no-text")
+    assert no_text["route"] == "html" and no_text["blocks"] == []
 
 
 def test_salted_repartition_balances_skewed_domains(spark, corpus_dir):

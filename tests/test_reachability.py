@@ -17,10 +17,7 @@ Pure AST, no SparkSession. The walk is a transitive name closure:
 * a mention is a ``Name``, an attribute, an ``import ... as`` alias,
   or an identifier inside a string constant, so a help text or
   docstring naming the tool that writes a CLI's input (curate's
-  ``--base-index`` → ``write_lsh_index``) keeps that tool;
-* code that looks builders up as ``getattr(em, f"q_{name}")`` (the
-  ``bench.py`` component leaves) mentions ``q_<s>`` for each string
-  ``s`` it holds.
+  ``--base-index`` → ``write_lsh_index``) keeps that tool.
 
 Resolution is by bare name, so the closure over-approximates: a miss
 is always real dead code.
@@ -58,7 +55,6 @@ _IDENT = re.compile(r"[A-Za-z_]\w*")
 def _mentions(node: ast.AST) -> set[str]:
     out: set[str] = set()
     words: set[str] = set()
-    by_q_name = False
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
             out.add(n.id)
@@ -68,11 +64,6 @@ def _mentions(node: ast.AST) -> set[str]:
             out.add(n.name.rsplit(".", 1)[-1])
         elif isinstance(n, ast.Constant) and isinstance(n.value, str):
             words.update(_IDENT.findall(n.value))
-        elif isinstance(n, ast.JoinedStr) and n.values:
-            head = n.values[0]
-            by_q_name |= isinstance(head, ast.Constant) and head.value == "q_"
-    if by_q_name:  # getattr(em, f"q_{name}") over a list of names
-        words |= {f"q_{w}" for w in words}
     return out | words
 
 

@@ -27,7 +27,7 @@ def test_ocr_sniff_false_positive_falls_back_to_html():
     rec = _extract_one(html, None, (400, 400))
     assert rec["route"] == "html"
     assert not rec["parse_failed"]
-    assert "Notes on the ocr_page class" in rec["raw_text"]
+    assert "Notes on the ocr_page class" in rec["extracted_text"]
 
 
 def test_hocr_void_tags_do_not_merge_words():

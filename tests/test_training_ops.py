@@ -17,14 +17,6 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_exact_dedup(docs):
-    from solrizer_spark.operators.dedup import exact_dedup
-
-    out = {r.canonical_id: r.n_copies for r in exact_dedup(docs).collect()}
-    assert out[1] == 2  # docs 1+2 collapse
-    assert out[3] == 1 and out[4] == 1 and out[5] == 1
-
-
 def test_explode_bucket_pairs_matches_combinations(spark):
     """The codegen double-explode pair generator emits EXACTLY the
     (i<j) pairs of each member array, in member order — scalar members

@@ -29,16 +29,7 @@ def main() -> None:
     spark = get_spark(app_name="solrizer-plans", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    qs = dict(em.queries())
-    for comp in (
-        "text_stats", "dedup_minhash_lsh", "dedup_simhash",
-        "dedup_simhash_pairs", "ann_bruteforce", "outlinks",
-        "media_features", "domain_stats", "fetch_schedule", "lm_score",
-        "lm_backoff", "anchors", "crawl_delay_schedule",
-        "inverted_postings", "tfidf_keywords", "keyword_search",
-        "ann_pq",
-    ):
-        qs.setdefault(comp, getattr(em, f"q_{comp}"))
+    qs = {**em.queries(), **em.component_queries()}
 
     names = only or sorted(qs)
     os.makedirs(OUT_DIR, exist_ok=True)
