@@ -62,9 +62,10 @@ executor fails the run) and counted, and the next op and the write
 read that checkpoint instead of re-running every op before it.
 ``--stats none`` keeps the pipeline fully lazy — one plan, run by the
 write — for giant runs where the sink row count suffices. Either way
-the ``neardedup`` entry carries ``cc``, the stats of its
-connected-components step (``path``, ``pairs``, ``rounds``,
-``converged``).
+the ``neardedup`` entry carries ``lsh``, the stats of its pair step
+(``path`` driver|distributed, ``docs``, ``text_bytes``), and ``cc``,
+those of its connected-components step (``path``, ``pairs``,
+``rounds``, ``converged``).
 """
 
 from __future__ import annotations
@@ -199,17 +200,19 @@ def apply_op(
         # left-anti keep — excluding them from pair generation also
         # avoids the degenerate all-null-signature LSH bucket (same
         # guard as job.py --dedup near)
+        lsh: dict = {}
         pairs = minhash_lsh_pairs(
             df.where(F.col(text_col).isNotNull()).select(id_col, text_col),
             id_col=id_col,
             text_col=text_col,
             threshold=args.near_threshold,
             persisted=persisted,
+            stats=lsh,
         )
         cc: dict = {}
         comps = connected_components(pairs, stats=cc)
         if stats is not None:
-            stats["cc"] = cc
+            stats.update(lsh=lsh, cc=cc)
         persisted.append(comps)  # star's final label checkpoint
         return dedup_keep_canonical(df, comps, id_col=id_col)
     if op == "basededup":

@@ -256,18 +256,19 @@ def run_job(
         text_side = docs.where(F.col("extracted_text").isNotNull()).select(
             "url", "extracted_text"
         )
+        lsh_stats: dict = {}
         pairs = minhash_lsh_pairs(
             text_side,
             id_col="url",
             text_col="extracted_text",
             threshold=0.8,
-            # at 10^12 rows pass --near-signatures-path: signatures go
-            # to a durable table instead of executor block cache
-            persist_base=near_signatures_path is None,
+            # at 10^12 rows pass --near-signatures-path: the sketch
+            # goes to a durable table instead of a local checkpoint
             signatures_path=near_signatures_path,
             persisted=near_dedup_persisted,
+            stats=lsh_stats,
         )
-        near_dedup_stats = {}
+        near_dedup_stats = {"lsh": lsh_stats}
         comps = connected_components(pairs, stats=near_dedup_stats)
         near_dedup_persisted.append(comps)  # star's final label checkpoint
         docs = dedup_keep_canonical(docs, comps, id_col="url")

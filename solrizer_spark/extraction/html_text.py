@@ -99,7 +99,10 @@ class Block:
     def as_dict(self) -> dict:
         """Slots replacement for ``vars()`` (hand-rolled: the UDF
         serialization path calls this per block; ``dataclasses.asdict``
-        is ~10× slower via recursive deepcopy)."""
+        is ~10× slower via recursive deepcopy). The keys are exactly
+        ``operators.extract.BLOCK_TYPE``'s fields;
+        ``in_boilerplate_container`` is a classifier input, not an
+        output column."""
         return {
             "block_index": self.block_index,
             "tag_path": self.tag_path,
@@ -109,7 +112,6 @@ class Block:
             "link_chars": self.link_chars,
             "link_density": self.link_density,
             "text_density": self.text_density,
-            "in_boilerplate_container": self.in_boilerplate_container,
             "kept": self.kept,
         }
 

@@ -4,9 +4,12 @@ No reference analog (solrizer indexes one record per request; its only
 dup check is indexer-name validation, web.py:286-287) — these are the
 corpus-scale operators a 10^12-document extraction pipeline feeds:
 
-* :func:`minhash_signatures` word-shingle MinHash
+* :func:`make_minhash_kernel`  word-shingle MinHash as one numpy
+                             kernel over an Arrow string array (band
+                             keys + shingle-hash set per text)
 * :func:`minhash_lsh_pairs`  banded-LSH candidate generation + exact
-                             Jaccard verification
+                             Jaccard verification (numpy on the driver
+                             for small inputs, one Arrow stage above)
 * :func:`simhash`            64-ish-bit SimHash as a pure Column
                              expression (md5-derived token hashes, so a
                              SQL oracle can reproduce it bit-for-bit)
@@ -19,21 +22,22 @@ corpus-scale operators a 10^12-document extraction pipeline feeds:
 * :func:`duplicate_spans` /  exact substring dedup at fixed window
   :func:`remove_duplicate_spans`  size (Lee et al. 2022 ExactSubstr)
 
-Scale design: everything before the single candidate-pair shuffle is
-map-side Column expressions (shingling, hashing, signatures, banding).
-Candidate generation groups by (band, band-hash) — never an all-pairs
-join — and giant buckets are capped to bound worst-case fan-out
-(a 10^12-corpus has pathological near-identical clusters: caps keep
-the pair count linear-ish). Verification recomputes exact Jaccard on
-candidates only.
+Scale design: the MinHash side is one vectorized kernel
+(:func:`make_minhash_kernel`: tokenize, hash, sketch and band-key each
+text in one pass), run on the driver below
+:data:`DRIVER_LSH_MAX_BYTES` of text and as one map-side Arrow stage
+above it. Candidate generation groups by (band, band-hash) — never an
+all-pairs join — and giant buckets are capped to bound worst-case
+fan-out (a 10^12-corpus has pathological near-identical clusters:
+caps keep the pair count linear-ish). Verification computes exact
+Jaccard over the candidates' shingle-hash sets only.
 """
 
 from __future__ import annotations
 
-import functools
-
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -69,7 +73,8 @@ def md5_hash60(col: Column) -> Column:
 
 
 def word_shingles(text: Column | str, n: int = 3) -> Column:
-    """Distinct word n-grams (the MinHash input set)."""
+    """Distinct word n-grams (the string form of the shingle sets
+    :func:`make_minhash_kernel` hashes)."""
     col = F.col(text) if isinstance(text, str) else text
     toks = F.split(col, " ")
     k = F.size(toks) - (n - 1)
@@ -83,40 +88,147 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
-def minhash_signatures(shingles: Column | str, num_hashes: int = 64) -> Column:
-    """MinHash signature: per seed i, min over shingles of
-    ``xxhash64(shingle, i)``. Pure map-side Column expression.
+#: Arrow/Spark type of :func:`minhash_sketch`: the ``bands`` LSH band
+#: keys and the sorted, unique shingle-hash set of one text.
+MINHASH_TYPE = "struct<bk:array<bigint>,sh:array<bigint>>"
 
-    Deliberately UNROLLED per seed: a nested runtime loop
-    (``transform(sequence(0,63), seed -> …)``) measured 12× slower —
-    nested higher-order lambdas evaluate interpreted per element,
-    while unrolled literal seeds stay codegen'd. Seeds bind via a
-    closure factory, NOT an ``i=i`` default arg (pyspark treats a
-    second lambda parameter as the array-index variable).
-
-    Building the expression costs ~5 driver→JVM calls per seed, so
-    the Column for a named shingle column is built once per process."""
-    if isinstance(shingles, str):
-        return _minhash_signatures_of(shingles, num_hashes)
-    return _minhash_signatures(shingles, num_hashes)
+#: Stamped into a :func:`write_lsh_index` index's ``params``: the
+#: token hash, shingle hash, MinHash mix and band-key mix of
+#: :func:`make_minhash_kernel`. An index written under another format
+#: has other band keys and shingle hashes, so it cannot be queried.
+LSH_KEY_FORMAT = "md5tok-splitmix64-v1"
 
 
-@functools.cache
-def _minhash_signatures_of(shingles: str, num_hashes: int) -> Column:
-    return _minhash_signatures(F.col(shingles), num_hashes)
+def make_minhash_kernel(shingle_n: int = 3, num_hashes: int = 64, bands: int = 16):
+    """The MinHash kernel (Broder 1997) as a pure function
+    ``pa.StringArray -> struct<bk, sh>`` (:data:`MINHASH_TYPE`), called
+    on the driver by :func:`minhash_lsh_pairs`' small-input path and
+    as one ``arrow_udf`` (:func:`minhash_sketch`) everywhere else.
 
+    * tokens: ``split(text, " ")``, empty tokens included — Spark's
+      ``split``, so the shingles are :func:`word_shingles`'; each
+      distinct token of the batch is md5-hashed once (the 60-bit
+      :func:`md5_hash60` value);
+    * ``sh``: a 64-bit mix of each ``shingle_n`` consecutive token
+      hashes, sorted and unique. A text with fewer than ``shingle_n``
+      tokens has one shingle, the whole text, hashed in a separate
+      domain;
+    * the ``num_hashes`` MinHash values: per seed, the minimum over
+      ``sh`` of a seeded 64-bit mix (one ``minimum.reduceat`` over the
+      document offsets);
+    * ``bk``: per band, a mix of its ``num_hashes // bands`` values.
 
-def _minhash_signatures(shingles: Column, num_hashes: int) -> Column:
-    def hash_with_seed(seed: int):
-        lit_seed = F.lit(seed)
-        return lambda s: F.xxhash64(s, lit_seed)
+    Null text gives a null struct. Exact Jaccard over two ``sh`` sets
+    equals the string-shingle Jaccard of :func:`ngram_jaccard` unless
+    two distinct tokens of the pair collide in the 60-bit token hash
+    or two distinct shingles in the 64-bit shingle hash. With ``k``
+    distinct shingles in the pair (so at most ``k + shingle_n - 1``
+    distinct tokens) that has probability below about ``k²/2⁶⁰``
+    (~4·10⁻¹² for two 1,000-word texts).
 
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, hash_with_seed(i)))
-            for i in range(num_hashes)
+    Everything the kernel reads is defined in this factory: a
+    reference to a module global would make every worker import this
+    module, and with it ``pyspark.sql.functions``."""
+    import hashlib
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    u64 = np.uint64
+    c1, c2, odd = u64(0xBF58476D1CE4E5B9), u64(0x94D049BB133111EB), u64(0x9E3779B97F4A7C15)
+
+    def mix(x, tmp=None):
+        """splitmix64's finalizer, a bijection on uint64, in place
+        (``tmp``: a scratch array of ``x``'s shape)."""
+        tmp = np.empty_like(x) if tmp is None else tmp
+        for shift, mul in ((u64(30), c1), (u64(27), c2), (u64(31), None)):
+            np.right_shift(x, shift, out=tmp)
+            x ^= tmp
+            if mul is not None:
+                x *= mul
+        return x
+
+    def md5_60(values) -> np.ndarray:
+        digests = b"".join(hashlib.md5(v).digest()[:8] for v in values)
+        return np.frombuffer(digests, dtype=">u8").astype(u64) >> u64(4)
+
+    def ranges(starts, lens):
+        """Concatenated ``arange(s, s + n)`` for each (s, n)."""
+        ends = np.cumsum(lens)
+        return np.repeat(starts - ends + lens, lens) + np.arange(ends[-1] if len(ends) else 0)
+
+    seeds = mix(np.arange(1, num_hashes + 1, dtype=u64) * odd)
+    rows = num_hashes // bands
+    short_domain = u64(shingle_n)
+
+    def kernel(texts: pa.Array) -> pa.Array:
+        n_docs = len(texts)
+        valid = texts.is_valid().to_numpy(zero_copy_only=False)
+        toks = pc.split_pattern(texts, " ")
+        lens = pc.list_value_length(toks).fill_null(0).to_numpy().astype(np.int64)
+        flat = toks.flatten()
+        enc = pc.dictionary_encode(flat)
+        th = md5_60(enc.dictionary.cast(pa.binary()).to_pylist())[
+            enc.indices.to_numpy(zero_copy_only=False)
         ]
-    )
+        starts = np.cumsum(lens) - lens
+        long_ = lens >= shingle_n
+        n_sh = np.where(long_, lens - shingle_n + 1, 0)
+        pos = ranges(starts, n_sh)
+        h = th[pos]
+        for j in range(1, shingle_n):
+            h = mix(h * odd ^ th[pos + j])
+        short = valid & ~long_
+        short_h = mix(md5_60(texts.filter(pa.array(short)).cast(pa.binary()).to_pylist()) ^ short_domain)
+        doc = np.concatenate([np.repeat(np.arange(n_docs), n_sh), np.flatnonzero(short)])
+        vals = np.concatenate([h, short_h]).view(np.int64)
+        order = np.lexsort((vals, doc))
+        doc, vals = doc[order], vals[order]
+        keep = np.ones(len(vals), dtype=bool)
+        keep[1:] = (doc[1:] != doc[:-1]) | (vals[1:] != vals[:-1])
+        doc, vals = doc[keep], vals[keep]
+        counts = np.bincount(doc, minlength=n_docs)
+        sh_off = np.concatenate([[0], np.cumsum(counts)])
+        sig = np.empty((num_hashes, int(valid.sum())), dtype=u64)
+        if sig.size:
+            first = sh_off[:-1][valid]
+            u = vals.view(u64)
+            buf, tmp = np.empty_like(u), np.empty_like(u)
+            for i, seed in enumerate(seeds):
+                np.bitwise_xor(u, seed, out=buf)
+                np.minimum.reduceat(mix(buf, tmp), first, out=sig[i])
+        sig = sig.T.reshape(-1, bands, rows)
+        bk = mix(sig[:, :, 0].copy())
+        for r in range(1, rows):
+            bk = mix(bk * odd ^ sig[:, :, r])
+        bk_off = np.concatenate([[0], np.cumsum(np.where(valid, bands, 0))])
+        return pa.StructArray.from_arrays(
+            [
+                pa.ListArray.from_arrays(pa.array(bk_off, pa.int32()), pa.array(bk.view(np.int64).ravel())),
+                pa.ListArray.from_arrays(pa.array(sh_off, pa.int32()), pa.array(vals)),
+            ],
+            names=["bk", "sh"],
+            mask=pa.array(~valid),
+        )
+
+    return kernel
+
+
+def minhash_sketch(text: Column | str, shingle_n: int = 3, num_hashes: int = 64, bands: int = 16) -> Column:
+    """:func:`make_minhash_kernel` as one Arrow-batched column of
+    :data:`MINHASH_TYPE`."""
+    from pyspark.sql.functions import arrow_udf
+
+    return arrow_udf(make_minhash_kernel(shingle_n, num_hashes, bands), MINHASH_TYPE)(text)
+
+
+def _capped_bands(sketch: DataFrame, id_col: str, max_bucket: int) -> DataFrame:
+    """``(id, band, key)`` rows of a sketch frame's ``_mh.bk`` band
+    keys, at most ``max_bucket`` lowest ids per bucket — the banding
+    the durable index shares with :func:`minhash_lsh_pairs`."""
+    banded = sketch.select(id_col, F.posexplode("_mh.bk").alias("band", "key"))
+    return cap_bucket_rows(banded, [F.col("band"), F.col("key")], [F.col(id_col)], max_bucket)
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -156,6 +268,26 @@ def explode_bucket_pairs(buckets: DataFrame, members_col: str) -> DataFrame:
     )
 
 
+#: At or below this many bytes of text (and with no
+#: ``signatures_path``), :func:`minhash_lsh_pairs` collects the
+#: ``(id, text)`` checkpoint and runs MinHash, banding and verification
+#: in numpy on the driver; above it, the same kernel runs as one Arrow
+#: stage on the executors. Set just below the crossover measured on a
+#: 4-vCPU box, ~14 MB (``minhash_lsh_pairs`` at threshold 0.8 plus a
+#: checkpoint of its pairs, over perfbench's seed-7 curate docs at
+#: four sizes; warm, min of 3 calls per path):
+#:
+#:   =======  =======  ======  ===========
+#:   docs     text     driver  distributed
+#:   =======  =======  ======  ===========
+#:   3,364    0.7 MB   0.22 s  0.81 s
+#:   33,640   6.9 MB   1.14 s  1.53 s
+#:   78,492   16.2 MB  3.30 s  3.15 s
+#:   100,920  20.9 MB  4.14 s  3.74 s
+#:   =======  =======  ======  ===========
+DRIVER_LSH_MAX_BYTES = 12 << 20
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -165,21 +297,17 @@ def minhash_lsh_pairs(
     bands: int = 16,
     threshold: float = 0.5,
     max_bucket: int = 64,
-    persist_base: bool = True,
     signatures_path: str | None = None,
     candidate_filter=None,
     persisted: list | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + banded LSH, verified exactly.
 
-    ``candidate_filter`` (optional): callable ``(id_a Column, id_b
-    Column) -> boolean Column`` applied to candidate pairs BEFORE the
-    exact-Jaccard verification join — callers that only want a subset
-    (e.g. cross-side pairs in incremental dedup) drop the rest before
-    the expensive shingle re-join instead of after.
-
-    Returns ``(id_a, id_b, jaccard_sim)`` with ``id_a < id_b`` and
-    ``jaccard_sim ≥ threshold``.
+    Returns ``(id_a, id_b, jaccard_sim)`` with ``id_a < id_b``,
+    ``jaccard_sim ≥ threshold`` (exact Jaccard of the two shingle-hash
+    sets, see :func:`make_minhash_kernel`) rounded half-up to 6
+    places. Rows with a null id or a null text pair with nothing.
 
     With ``num_hashes=64, bands=16`` (rows-per-band 4) the candidate
     probability for a pair at Jaccard s is ``1-(1-s^4)^16`` — ≈0.9997
@@ -187,61 +315,90 @@ def minhash_lsh_pairs(
     while recall at the threshold is effectively total.
 
     Buckets larger than ``max_bucket`` are truncated to their
-    ``max_bucket`` lowest ids *before* aggregation (see
-    :func:`cap_bucket_rows`), bounding both the quadratic pair
-    blow-up AND the aggregation-buffer memory of degenerate clusters.
+    ``max_bucket`` lowest ids, bounding the quadratic pair blow-up of
+    degenerate clusters.
 
-    ``persisted`` (optional): a list the ``persist_base`` signature
-    frame is appended to, for the caller to ``session.release`` once
-    the pairs have been consumed. Without it the cache outlives the
-    call.
+    The ``(id, text)`` input is materialized once (an eager
+    ``localCheckpoint``, not fault-tolerant) with an ``observe`` of its
+    row count and text bytes. Then:
+
+    * at most :data:`DRIVER_LSH_MAX_BYTES` of text and no
+      ``signatures_path``: the checkpoint is read once as Arrow and
+      :func:`_driver_lsh_pairs` does the rest in numpy; the result is
+      a local frame. 2 jobs in all.
+    * more: :func:`minhash_sketch` runs as one Arrow stage, its output
+      materialized once (a ``localCheckpoint``, or written to
+      ``signatures_path`` — a durable table for 10^12 rows, where
+      block-cache persistence would evict or spill), then the band
+      keys go through :func:`cap_bucket_rows` (the cap applies BEFORE
+      aggregation, so the aggregation buffer is bounded too) → one
+      groupBy → :func:`explode_bucket_pairs` → two verification joins
+      against the shingle-hash sets.
+
+    ``candidate_filter`` (optional): callable ``(id_a Column, id_b
+    Column) -> boolean Column`` keeping a subset of the pairs (e.g.
+    cross-side pairs in incremental dedup). The distributed path
+    applies it before the verification joins; the driver path after
+    verification, which is equivalent because verifying a pair reads
+    only that pair.
+
+    ``persisted`` (optional): a list the distributed path's sketch
+    checkpoint is appended to, for the caller to ``session.release``
+    once the pairs have been consumed. Without it the checkpoint
+    outlives the call.
+
+    ``stats`` (optional dict) receives ``path`` (``"driver"`` or
+    ``"distributed"``), ``docs`` and ``text_bytes``, the observed
+    input the path rule read.
     """
-    from solrizer_spark.operators.repartition import ensure_min_parallelism
+    from pyspark.sql import Observation
 
-    rows_per_band = num_hashes // bands
-    # shingling + 64-hash signatures are the CPU-heavy map side; a
-    # few-file corpus would otherwise compute them in that few tasks
-    base = ensure_min_parallelism(df).select(
-        F.col(id_col).alias("_id"),
-        word_shingles(text_col, shingle_n).alias("_sh"),
-    ).withColumn("_sig", minhash_signatures("_sh", num_hashes))
+    from solrizer_spark.session import release
+
+    obs = Observation()
+    keyed = df.where(F.col(id_col).isNotNull())
+    ck = keyed.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text")).observe(
+        obs,
+        F.count(F.lit(1)).alias("docs"),
+        F.coalesce(F.sum(F.octet_length("_text")), F.lit(0)).alias("text_bytes"),
+    ).localCheckpoint()
+    seen = obs.get
+    driver = signatures_path is None and seen["text_bytes"] <= DRIVER_LSH_MAX_BYTES
+    if stats is not None:
+        stats.update(seen, path="driver" if driver else "distributed")
+    if driver:
+        pairs = _driver_lsh_pairs(
+            ck, make_minhash_kernel(shingle_n, num_hashes, bands), bands, threshold, max_bucket
+        )
+        release(ck)
+        if candidate_filter is not None:
+            pairs = pairs.where(candidate_filter(F.col("id_a"), F.col("id_b")))
+        return pairs
+
+    # the kernel is the CPU-heavy map side: spread a checkpoint of few
+    # partitions (a one-file scan, an AQE-coalesced shuffle) over the
+    # cores
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    src = ck if ck.rdd.getNumPartitions() >= cores else ck.repartition(cores)
+    base = src.select("_id", minhash_sketch("_text", shingle_n, num_hashes, bands).alias("_mh"))
     if signatures_path is not None:
-        # 10^12-row scale path: the shingle/signature base is written
-        # to durable storage once and re-read by the banding stage and
-        # both verification-join sides — executor block-cache persist()
-        # at that scale would evict or spill, and a table survives
-        # job restarts (the signatures are by far the most expensive
-        # intermediate). Same results as persist_base, by construction
-        # and by test (tests/test_dedup_scale_paths.py).
         base.write.mode("overwrite").parquet(signatures_path)
         base = df.sparkSession.read.parquet(signatures_path)
-    elif persist_base:
-        # the shingle/signature base feeds banding AND both sides of
-        # the verification join — without persistence it is computed
-        # three times (measured ~1.5× total). At 10^12 scale write the
-        # signatures to a table instead (signatures_path).
-        base = base.persist()
+    else:
+        # banding and both verification sides read the sketch, so it
+        # is materialized first: a persist() would be read by neither
+        # verification side, whose self-join copies of the Python UDF
+        # do not match the cached plan
+        base = base.localCheckpoint()
         if persisted is not None:
             persisted.append(base)
-
-    # band keys: hash of each signature slice → (band_idx, band_key);
-    # shared expression with the durable index (band_key_expr) so the
-    # two paths stay key-compatible
-    band_key = band_key_expr(F.col("_sig"), bands, rows_per_band)
-    # only (_id, band-key) ride the banding/cap shuffle — the shingle
-    # array re-joins from the persisted base at verification time
-    banded = base.select("_id", band_key.alias("bk"))
-
-    # cap BEFORE aggregating: the groupBy's collect_list then holds at
-    # most max_bucket ids, so degenerate buckets can't OOM (the window
-    # keeps the max_bucket lowest ids — same members as the old
-    # slice(array_sort(collect_list)) form, without materializing the
-    # full bucket)
-    capped = cap_bucket_rows(
-        banded, [F.col("bk.band"), F.col("bk.key")], [F.col("_id")], max_bucket
-    )
+    release(ck)
+    # only (_id, band, key) ride the banding/cap shuffle — the
+    # shingle-hash sets re-join from the sketch at verification time;
+    # the groupBy's collect_list holds at most max_bucket ids
     buckets = (
-        capped.groupBy(F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        _capped_bands(base, "_id", max_bucket)
+        .groupBy("band", "key")
         .agg(F.array_sort(F.collect_list("_id")).alias("ids"))
         .where(F.size("ids") > 1)
     )
@@ -253,16 +410,85 @@ def minhash_lsh_pairs(
     )
     if candidate_filter is not None:
         pairs = pairs.where(candidate_filter(F.col("id_a"), F.col("id_b")))
-    # exact verification on candidates only
-    sh = base.select("_id", "_sh")
-    verified = (
+    sh = base.select("_id", F.col("_mh.sh").alias("_sh"))
+    return (
         pairs.join(sh.withColumnRenamed("_id", "id_a").withColumnRenamed("_sh", "_sha"), "id_a")
         .join(sh.withColumnRenamed("_id", "id_b").withColumnRenamed("_sh", "_shb"), "id_b")
         .withColumn("jaccard_sim", jaccard(F.col("_sha"), F.col("_shb")))
         .where(F.col("jaccard_sim") >= threshold)
         .select("id_a", "id_b", F.round("jaccard_sim", 6).alias("jaccard_sim"))
     )
-    return verified
+
+
+def _driver_lsh_pairs(ck: DataFrame, kernel, bands: int, threshold: float, max_bucket: int) -> DataFrame:
+    """:func:`minhash_lsh_pairs` over a collected ``(_id, _text)``
+    checkpoint, as a local frame with the ids' own type. The docs are
+    sorted by id first (Arrow sorts strings by UTF-8 bytes, Spark's
+    string order), so a doc's position is its id rank:
+
+    * band: one lexsort of the ``(band, key, rank)`` entries, keeping
+      the ``max_bucket`` lowest ranks per bucket (as
+      :func:`cap_bucket_rows`); each kept member pairs with every
+      later one, unique across bands;
+    * verify: one lexsort of the pairs' concatenated shingle-hash sets
+      by ``(pair, hash)`` counts each intersection. The Jaccard is
+      rounded as Spark's ``round`` does: half-up, on the shortest
+      decimal form of the double."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import pyarrow.compute as pc
+
+    table = ck.toArrow()
+    by_id = pc.sort_indices(table["_id"])
+    ids = table["_id"].take(by_id)
+    mh = kernel(table["_text"].take(by_id).combine_chunks())
+    n = len(ids)
+    docs = np.flatnonzero(mh.is_valid().to_numpy(zero_copy_only=False))
+    sh = mh.field("sh")
+    sh_off, sh_vals = sh.offsets.to_numpy(), sh.values.to_numpy()
+
+    member = np.repeat(docs, bands)
+    band = np.tile(np.arange(bands), len(docs))
+    key = mh.field("bk").values.to_numpy()
+    order = np.lexsort((member, key, band))
+    band, key, member = band[order], key[order], member[order]
+    new = np.ones(len(member), dtype=bool)
+    new[1:] = (band[1:] != band[:-1]) | (key[1:] != key[:-1])
+    group = np.cumsum(new) - 1
+    pos = np.arange(len(member)) - np.flatnonzero(new)[group]
+    kept = pos < max_bucket
+    member, group, pos = member[kept], group[kept], pos[kept]
+    later = np.bincount(group)[group] - pos - 1
+    first = np.repeat(np.arange(len(member)), later)
+    code = np.unique(member[first] * n + member[first + 1 + _ranges(np.zeros_like(later), later)])
+    lo, hi = code // n, code % n
+
+    la, lb = np.diff(sh_off)[lo], np.diff(sh_off)[hi]
+    pair = np.arange(len(code))
+    v = sh_vals[np.concatenate([_ranges(sh_off[lo], la), _ranges(sh_off[hi], lb)])]
+    p = np.concatenate([np.repeat(pair, la), np.repeat(pair, lb)])
+    order = np.lexsort((v, p))
+    v, p = v[order], p[order]
+    same = (v[1:] == v[:-1]) & (p[1:] == p[:-1])
+    inter = np.bincount(p[1:][same], minlength=len(code))
+    sim = inter / (la + lb - inter)
+    ok = np.flatnonzero(sim >= threshold)
+    q = Decimal("0.000001")
+    out = pa.table({
+        "id_a": ids.take(lo[ok]),
+        "id_b": ids.take(hi[ok]),
+        "jaccard_sim": [float(Decimal(repr(s)).quantize(q, ROUND_HALF_UP)) for s in sim[ok].tolist()],
+    })
+    id_type = ck.schema["_id"].dataType.simpleString()
+    return ck.sparkSession.createDataFrame(
+        out, schema=f"id_a {id_type}, id_b {id_type}, jaccard_sim double"
+    )
+
+
+def _ranges(starts, lens):
+    """Concatenated ``arange(s, s + n)`` for each ``(s, n)``."""
+    ends = np.cumsum(lens)
+    return np.repeat(starts - ends + lens, lens) + np.arange(ends[-1] if len(ends) else 0)
 
 
 def make_simhash_udf(bits: int = 32):
@@ -572,9 +798,7 @@ def _driver_components(pair_ck: DataFrame) -> DataFrame:
     with the ids' own type. The ids are encoded as their ranks in
     sorted order (Arrow sorts strings by UTF-8 bytes, Spark's string
     order), so the minimum code of a component is its minimum id."""
-    import pyarrow as pa
     import pyarrow.compute as pc
-    from pyspark.sql.types import StructField, StructType
 
     table = pair_ck.toArrow()
     ends = pa.chunked_array(
@@ -585,13 +809,9 @@ def _driver_components(pair_ck: DataFrame) -> DataFrame:
     codes = pc.index_in(ends, value_set=ids).to_numpy()
     n = table.num_rows
     root = _driver_labels(codes[:n], codes[n:], len(ids))[0]
-    field = pair_ck.schema["src"]
-    schema = StructType([
-        StructField("id", field.dataType, field.nullable),
-        StructField("component", field.dataType, field.nullable),
-    ])
+    id_type = pair_ck.schema["src"].dataType.simpleString()
     out = pa.table({"id": ids, "component": ids.take(root)})
-    return pair_ck.sparkSession.createDataFrame(out, schema=schema)
+    return pair_ck.sparkSession.createDataFrame(out, schema=f"id {id_type}, component {id_type}")
 
 
 def _driver_labels(src, dst, n: int):
@@ -740,7 +960,6 @@ def dedup_against_base(
     num_hashes: int = 64,
     bands: int = 16,
     max_bucket: int = 64,
-    persist_base: bool = True,
     persisted: list | None = None,
 ) -> DataFrame:
     """Incremental dedup: the rows of ``new_df`` (a crawl increment)
@@ -762,14 +981,14 @@ def dedup_against_base(
     Scale: the exact stage is one hash anti-join; the near stage
     reuses the capped, payload-pruned LSH machinery, with base×base
     candidates discarded BEFORE the exact-Jaccard verification join.
-    Base shingles/signatures are recomputed per call here — for
+    Base sketches are recomputed per call here — for
     repeated increments against the same base, build the durable
     index ONCE with :func:`write_lsh_index` and use
     :func:`dedup_against_index` (equivalent results, pinned by
     test).
 
     ``persisted`` (optional): passed to :func:`minhash_lsh_pairs`, which
-    appends its ``persist_base`` signature cache for the caller to
+    appends its sketch checkpoint for the caller to
     ``session.release`` once the result has been consumed."""
     text_hash = F.md5(F.col(text_col))
     base_hashes = (
@@ -807,7 +1026,6 @@ def dedup_against_base(
         bands=bands,
         threshold=threshold,
         max_bucket=max_bucket,
-        persist_base=persist_base,
         persisted=persisted,
         # drop same-side candidates BEFORE the verification join: the
         # base x base population dominates and is not wanted here
@@ -829,29 +1047,6 @@ def dedup_against_base(
 # durable LSH index: cross-increment near-dup without re-signaturing
 # --------------------------------------------------------------------------
 
-def band_key_expr(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """Exploded ``(band, key)`` structs for a minhash signature array —
-    the banding expression shared by the symmetric pair generator and
-    the durable LSH index (one copy, so the two paths cannot drift)."""
-    return F.explode(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.struct(
-                b.alias("band"),
-                F.xxhash64(
-                    F.array_join(
-                        F.transform(
-                            F.slice(sig, b * rows_per_band + 1, rows_per_band),
-                            lambda h: h.cast("string"),
-                        ),
-                        ",",
-                    )
-                ).alias("key"),
-            ),
-        )
-    )
-
-
 def write_lsh_index(
     df: DataFrame,
     path: str,
@@ -863,39 +1058,29 @@ def write_lsh_index(
     max_bucket: int = 64,
 ) -> None:
     """Materialize the base corpus' dedup index ONCE:
-    ``{path}/signatures`` (id, text_hash, shingles), ``{path}/bands``
-    (band, key, id — bucket membership capped at write time), and
-    ``{path}/params`` (single row; read back to reject mismatched
-    query parameters). This is the cross-increment amortization
-    ``dedup_against_base`` documents as its limit: signaturing the
-    10^12-row base happens here once, and every increment afterwards
-    only signatures ITSELF (``dedup_against_index``)."""
-    rows_per_band = num_hashes // bands
+    ``{path}/signatures`` (id, text_hash, shingle-hash set, band keys),
+    ``{path}/bands`` (band, key, id — bucket membership capped at
+    write time), and ``{path}/params`` (single row, with the kernel's
+    :data:`LSH_KEY_FORMAT`; read back to reject mismatched query
+    parameters and indexes of another key format). This is the
+    cross-increment amortization ``dedup_against_base`` documents as
+    its limit: sketching the 10^12-row base happens here once, and
+    every increment afterwards only sketches ITSELF
+    (``dedup_against_index``)."""
     spark = df.sparkSession
-    base = df.where(F.col(text_col).isNotNull()).select(
+    df.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).cast("string").alias("_id"),
         F.md5(F.col(text_col)).alias("_th"),
-        word_shingles(text_col, shingle_n).alias("_sh"),
-    )
-    # the durable table holds (id, text-hash, shingles); signatures are
-    # recomputed from the stored shingles below (deterministic, and
-    # cheaper to store shingles once than shingles + signature arrays)
-    base.write.mode("overwrite").parquet(f"{path}/signatures")
+        minhash_sketch(text_col, shingle_n, num_hashes, bands).alias("_mh"),
+    ).write.mode("overwrite").parquet(f"{path}/signatures")
     sigs = spark.read.parquet(f"{path}/signatures")  # durable, re-read
-    resig = sigs.withColumn("_sig", minhash_signatures("_sh", num_hashes))
-    banded = resig.select("_id", band_key_expr(F.col("_sig"), bands, rows_per_band).alias("bk"))
-    capped = cap_bucket_rows(
-        banded, [F.col("bk.band"), F.col("bk.key")], [F.col("_id")], max_bucket
-    )
-    capped.select(
-        F.col("bk.band").alias("band"), F.col("bk.key").alias("key"), "_id"
-    ).write.mode("overwrite").parquet(f"{path}/bands")
+    _capped_bands(sigs, "_id", max_bucket).write.mode("overwrite").parquet(f"{path}/bands")
     from solrizer_spark.session import write_local_parquet
 
     # driver-direct write — zero Spark jobs for the one-row params table
     write_local_parquet(
-        [(shingle_n, num_hashes, bands, max_bucket)],
-        "shingle_n int, num_hashes int, bands int, max_bucket int",
+        [(shingle_n, num_hashes, bands, max_bucket, LSH_KEY_FORMAT)],
+        "shingle_n int, num_hashes int, bands int, max_bucket int, key_format string",
         f"{path}/params",
     )
 
@@ -906,14 +1091,13 @@ def dedup_against_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float | None = 0.8,
-    persist_increment: bool = True,
     persisted: list | None = None,
 ) -> DataFrame:
     """Incremental dedup against a :func:`write_lsh_index` index: the
-    increment is the ONLY side that gets shingled/signatured; exact
-    dups drop via the stored text hashes, near dups via a band join
-    against the stored buckets + exact-Jaccard verification against
-    the stored shingles. Same keep semantics as
+    increment is the ONLY side that gets sketched; exact dups drop via
+    the stored text hashes, near dups via a band join against the
+    stored buckets + exact-Jaccard verification against the stored
+    shingle-hash sets. Same keep semantics as
     :func:`dedup_against_base` (new-vs-new dups kept); results are
     identical on non-degenerate buckets (pinned by test). Where the
     ``max_bucket`` cap binds they can differ in the increment's
@@ -922,15 +1106,20 @@ def dedup_against_index(
     compares against the bucket's stored members (strictly ≥ recall);
     both sides cap their own bucket membership.
 
-    ``persisted`` (optional): a list the ``persist_increment`` cache is
+    Raises ``ValueError`` for an index whose ``key_format`` is missing
+    or is not :data:`LSH_KEY_FORMAT`: its band keys and shingle hashes
+    come from another kernel and would silently match nothing.
+
+    ``persisted`` (optional): a list the increment's sketch cache is
     appended to, for the caller to ``session.release`` once the result
     has been consumed. Without it the cache outlives the call."""
     spark = new_df.sparkSession
-    p = spark.read.parquet(f"{index_path}/params").collect()[0]
-    shingle_n, num_hashes, bands, max_bucket = (
-        p["shingle_n"], p["num_hashes"], p["bands"], p["max_bucket"],
-    )
-    rows_per_band = num_hashes // bands
+    p = spark.read.parquet(f"{index_path}/params").collect()[0].asDict()
+    if p.get("key_format") != LSH_KEY_FORMAT:
+        raise ValueError(
+            f"LSH index {index_path} has key format {p.get('key_format')!r}, "
+            f"not {LSH_KEY_FORMAT!r}: rebuild it with tools/build_lsh_index.py"
+        )
     sigs = spark.read.parquet(f"{index_path}/signatures")
 
     survivors = new_df.join(
@@ -941,35 +1130,20 @@ def dedup_against_index(
     if threshold is None:
         return survivors
 
-    inc = (
-        survivors.where(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col).cast("string").alias("_nid"),
-            word_shingles(text_col, shingle_n).alias("_nsh"),
-        )
-        .withColumn("_sig", minhash_signatures("_nsh", num_hashes))
+    inc = survivors.where(F.col(text_col).isNotNull()).select(
+        F.col(id_col).cast("string").alias("_nid"),
+        minhash_sketch(text_col, p["shingle_n"], p["num_hashes"], p["bands"]).alias("_mh"),
     )
-    if persist_increment:
-        # feeds banding AND verification; released by the caller
-        # through ``persisted``, as minhash_lsh_pairs' base (pass
-        # False from sinks that cannot release caches, e.g.
-        # foreachBatch)
-        inc = inc.persist()
-        if persisted is not None:
-            persisted.append(inc)
-    inc_banded = inc.select(
-        "_nid", band_key_expr(F.col("_sig"), bands, rows_per_band).alias("bk")
-    )
+    # feeds banding AND verification; released by the caller through
+    # ``persisted``
+    inc = inc.persist()
+    if persisted is not None:
+        persisted.append(inc)
     # cap the INCREMENT side of each bucket too (stored max_bucket):
     # a degenerate increment bucket (10^6 boilerplate copies on one
     # band key) would otherwise fan out against the stored members
-    # unbounded — same guard as the symmetric path (review finding)
-    inc_capped = cap_bucket_rows(
-        inc_banded, [F.col("bk.band"), F.col("bk.key")], [F.col("_nid")], max_bucket
-    )
-    inc_bands = inc_capped.select(
-        F.col("bk.band").alias("band"), F.col("bk.key").alias("key"), "_nid"
-    )
+    # unbounded — same guard as the symmetric path
+    inc_bands = _capped_bands(inc, "_nid", p["max_bucket"])
     base_bands = spark.read.parquet(f"{index_path}/bands")
     candidates = (
         inc_bands.join(base_bands, ["band", "key"])
@@ -977,8 +1151,8 @@ def dedup_against_index(
         .distinct()
     )
     flagged = (
-        candidates.join(inc.select("_nid", "_nsh"), "_nid")
-        .join(sigs.select("_id", "_sh"), "_id")
+        candidates.join(inc.select("_nid", F.col("_mh.sh").alias("_nsh")), "_nid")
+        .join(sigs.select("_id", F.col("_mh.sh").alias("_sh")), "_id")
         .where(jaccard(F.col("_nsh"), F.col("_sh")) >= threshold)
         .select(F.col("_nid").alias("__k"))
         .distinct()

@@ -235,9 +235,10 @@ def ensure_min_parallelism(df: DataFrame, floor: int | None = None) -> DataFrame
     AQE finalization, so calling this on an uncached shuffled plan
     never double-executes upstream stages. When the estimate is
     unknown (non-file source, remote filesystem, or an upstream
-    shuffle-only plan) the input passes through: shuffle outputs
-    already carry ``spark.sql.shuffle.partitions``-many partitions,
-    which is the parallelism this guard exists to restore."""
+    shuffle-only plan) the input passes through, whatever its
+    partition count: an AQE-coalesced shuffle output can be a single
+    partition (curate's op checkpoints on a small corpus hold 1), and
+    then the stage after this guard runs as one task."""
     want = floor or df.sparkSession.sparkContext.defaultParallelism
     est = _scan_split_estimate(df)
     if est is not None and est < want:

@@ -238,14 +238,13 @@ def embedding_near_dup_pairs(
     from solrizer_spark.operators.repartition import ensure_min_parallelism
 
     # hyperplane-projection banding over 64-dim vectors is the
-    # CPU-heavy map side — small-input parallelism guard as in
-    # dedup.minhash_lsh_pairs (no-op when the scan has >= cores splits)
+    # CPU-heavy map side — small-input parallelism guard (no-op when
+    # the scan has >= cores splits)
     base = ensure_min_parallelism(df).select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
     )
     if persist_base:
-        # feeds banding + both verification-join sides (see
-        # dedup.minhash_lsh_pairs)
+        # feeds banding + both verification-join sides
         base = base.persist()
     # banding carries ONLY (_id, band-key): the vector must not ride
     # through the cap window's shuffle+sort (verification re-joins it

@@ -108,21 +108,26 @@ def test_curate_releases_op_checkpoints(spark, docs_table, tmp_path, monkeypatch
     assert [e["rows_after"] for e in stats["ops"]] == [6, 6]
     assert len(jsc.getPersistentRDDs()) == before
 
-    # the ops that persist inside apply_op: neardedup's LSH signature
-    # cache and, on the star path, its final connected-component label
-    # checkpoint, and fluency's scan cache, are released with the op
-    # checkpoints. The driver bound at 0 forces the star path.
+    # the ops that persist inside apply_op: neardedup's distributed
+    # LSH sketch checkpoint and, on the star path, its final
+    # connected-component label checkpoint, and fluency's scan cache,
+    # are released with the op checkpoints. The driver bounds at 0
+    # force the distributed LSH and star CC paths.
     from solrizer_spark.operators import dedup
 
-    for path in ("driver", "star"):
+    for lsh_path, path in (("driver", "driver"), ("distributed", "star")):
         if path == "star":
             monkeypatch.setattr(dedup, "DRIVER_CC_MAX_PAIRS", 0)
+            monkeypatch.setattr(dedup, "DRIVER_LSH_MAX_BYTES", 0)
         stats = run_curate(
             spark, _args(input=docs_table, output=str(tmp_path / f"o2_{path}"),
                          ops="linededup,neardedup,fluency")
         )
         rows_after = [e["rows_after"] for e in stats["ops"]]
         assert rows_after[1] < rows_after[0], path  # the near-dups collapsed
+        lsh = stats["ops"][1]["lsh"]
+        assert lsh["path"] == lsh_path
+        assert 0 < lsh["docs"] <= rows_after[0] and lsh["text_bytes"] > 0
         cc = stats["ops"][1]["cc"]
         assert (cc["path"], cc["converged"]) == (path, True)
         assert cc["pairs"] > 0

@@ -11,7 +11,8 @@ the same construction. (The round-5 run of the same measurement at
 24k docs is ``BENCH/dedup_recall_r5.json``.)
 
 * MinHash-LSH (``minhash_lsh_pairs``, 64 hashes x 16 bands, threshold
-  0.5): recall per true-Jaccard band is at least the candidate
+  0.5), on its driver and its distributed path: recall per
+  true-Jaccard band is at least the candidate
   probability ``1-(1-s^4)^16`` minus 0.08 (sampling noise), and at
   least 0.95 for s >= 0.7. Verification is exact, so no unplanted
   pair is ever emitted.
@@ -70,11 +71,17 @@ def recall_corpus(spark):
     docs.unpersist()
 
 
-def test_minhash_lsh_recall_floor(recall_corpus):
-    from solrizer_spark.operators.dedup import minhash_lsh_pairs
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_minhash_lsh_recall_floor(recall_corpus, path, monkeypatch):
+    from solrizer_spark.operators import dedup
 
+    if path == "distributed":
+        monkeypatch.setattr(dedup, "DRIVER_LSH_MAX_BYTES", 0)
     docs, planted = recall_corpus
-    got = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(docs, threshold=THRESHOLD).collect()}
+    stats: dict = {}
+    pairs = dedup.minhash_lsh_pairs(docs, threshold=THRESHOLD, stats=stats)
+    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+    assert stats["path"] == path
     assert not got - set(planted), "unplanted pairs emitted"
     bands: dict[int, list] = {}
     for pair, s in planted.items():

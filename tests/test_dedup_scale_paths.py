@@ -9,7 +9,11 @@
   setting ``DRIVER_CC_MAX_PAIRS`` to 0 — and star converges on a long
   chain within a small round budget;
 * star non-convergence is surfaced (stats flag + warning), not
-  silent.
+  silent;
+* ``minhash_lsh_pairs`` returns the same rows on its driver path and
+  its distributed Arrow-stage path (forced by setting
+  ``DRIVER_LSH_MAX_BYTES`` below 0): string ids in Spark's order, null,
+  empty and short texts, a binding bucket cap, a candidate filter.
 """
 
 from __future__ import annotations
@@ -63,6 +67,14 @@ def _force_star(monkeypatch):
     from solrizer_spark.operators import dedup
 
     monkeypatch.setattr(dedup, "DRIVER_CC_MAX_PAIRS", 0)
+
+
+def _force_distributed(monkeypatch):
+    """Set the LSH driver bound below 0: every input, one of 0 text
+    bytes too, takes the distributed Arrow-stage path."""
+    from solrizer_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "DRIVER_LSH_MAX_BYTES", -1)
 
 
 @pytest.fixture()
@@ -288,13 +300,8 @@ def test_signatures_path_pairs_identical(spark, tmp_path):
 
     docs = _near_dup_docs(spark)
     kw = dict(id_col="doc_id", text_col="text", threshold=0.5)
-    persisted = minhash_lsh_pairs(docs, persist_base=True, **kw)
-    to_table = minhash_lsh_pairs(
-        docs,
-        persist_base=False,
-        signatures_path=str(tmp_path / "sigs"),
-        **kw,
-    )
+    persisted = minhash_lsh_pairs(docs, **kw)
+    to_table = minhash_lsh_pairs(docs, signatures_path=str(tmp_path / "sigs"), **kw)
     a = sorted(map(tuple, persisted.collect()))
     b = sorted(map(tuple, to_table.collect()))
     assert a == b
@@ -331,6 +338,10 @@ def test_job_near_dedup_signatures_and_star(spark, corpus_dir, tmp_path, monkeyp
     assert stats_a["near_dedup"]["path"] == "driver"
     assert stats_b["near_dedup"]["path"] == "star"
     assert stats_a["near_dedup"]["pairs"] == stats_b["near_dedup"]["pairs"]
+    # signatures_path takes the distributed LSH path, whatever the size
+    assert stats_a["near_dedup"]["lsh"]["path"] == "driver"
+    assert stats_b["near_dedup"]["lsh"]["path"] == "distributed"
+    assert stats_a["near_dedup"]["lsh"]["docs"] == stats_b["near_dedup"]["lsh"]["docs"] > 0
     da = spark.read.parquet(f"{out_a}/docs").select("url", "extracted_text")
     db = spark.read.parquet(f"{out_b}/docs").select("url", "extracted_text")
     assert sorted(map(tuple, da.collect())) == sorted(map(tuple, db.collect()))
@@ -407,6 +418,11 @@ def test_lsh_index_equivalent_to_direct_base_dedup(spark, tmp_path):
         via_base = {r["doc_id"]
                     for r in dedup_against_base(inc, base).collect()}
         assert via_index == via_base == {k + 3, k + 4}
+    with pytest.MonkeyPatch.context() as mp:
+        _force_distributed(mp)
+        via_base = {r["doc_id"]
+                    for r in dedup_against_base(increment(100), base).collect()}
+    assert via_base == {103, 104}
 
     # exact-only mode consistent too
     only_exact = {r["doc_id"] for r in
@@ -460,3 +476,166 @@ def test_dedup_against_base_idempotent(spark):
     twice = dedup_against_base(once, base)
     assert ({r["doc_id"] for r in once.collect()}
             == {r["doc_id"] for r in twice.collect()} == {12})
+
+
+def test_lsh_index_without_key_format_rejected(spark, tmp_path):
+    """An index written before the key format was stamped (no
+    ``key_format`` column in ``params``) holds other band keys: it is
+    refused, naming the tool that rebuilds it."""
+    from solrizer_spark.operators.dedup import dedup_against_index, write_lsh_index
+    from solrizer_spark.session import write_local_parquet
+
+    body = "the quick brown fox jumps over the lazy dog again"
+    idx = str(tmp_path / "idx")
+    write_lsh_index(spark.createDataFrame([(1, body)], "doc_id long, text string"), idx)
+    write_local_parquet(
+        [(3, 64, 16, 64)],
+        "shingle_n int, num_hashes int, bands int, max_bucket int",
+        f"{idx}/params",
+    )
+    inc = spark.createDataFrame([(9, body)], "doc_id long, text string")
+    with pytest.raises(ValueError, match="tools/build_lsh_index.py"):
+        dedup_against_index(inc, idx)
+
+
+def _both_lsh_paths(run):
+    """``run(stats)`` on the driver path, then forced distributed;
+    both results, after checking each took its path."""
+    out = []
+    for path in ("driver", "distributed"):
+        with pytest.MonkeyPatch.context() as mp:
+            if path == "distributed":
+                _force_distributed(mp)
+            stats: dict = {}
+            out.append(run(stats))
+        assert stats["path"] == path
+    return out
+
+
+def _reporting(stats, call):
+    """``call()``, with each ``minhash_lsh_pairs`` call made inside it
+    (by a caller that passes no ``stats``) filling ``stats``."""
+    from solrizer_spark.operators import dedup
+
+    real = dedup.minhash_lsh_pairs
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "minhash_lsh_pairs", lambda *a, **kw: real(*a, **kw, stats=stats))
+        return call()
+
+
+# url ids (non-ASCII ones sort by UTF-8 bytes: "é" after "z"; a null
+# id pairs with nothing) over texts of every degenerate shape: null,
+# empty, fewer than 3 tokens, exactly 3, runs of spaces (empty tokens)
+EDGE_DOCS = [
+    ("https://z.example/a", "alpha beta gamma delta epsilon zeta eta theta"),
+    ("https://é.example/b", "alpha beta gamma delta epsilon zeta eta theta iota"),
+    ("https://日本.example/", "alpha beta gamma delta epsilon zeta eta"),
+    ("u/null1", None), ("u/null2", None),
+    ("u/empty1", ""), ("u/empty2", ""),
+    ("u/short1", "two words"), ("u/short2", "two words"), ("u/short3", "two"),
+    ("u/three1", "exactly three tokens"), ("u/three2", "exactly three tokens"),
+    ("u/spaces1", "a  b c  d"), ("u/spaces2", "a  b c  d e"),
+    (None, "alpha beta gamma delta epsilon zeta eta theta"),
+]
+
+
+def _string_jaccard(a: str, b: str) -> float:
+    def shingles(t):
+        toks = t.split(" ")
+        if len(toks) < 3:
+            return {t}
+        return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+
+    sa, sb = shingles(a), shingles(b)
+    return len(sa & sb) / len(sa | sb)
+
+
+def test_lsh_paths_identical_on_edge_texts(spark):
+    from solrizer_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = spark.createDataFrame(EDGE_DOCS, "url string, text string")
+
+    def run(stats):
+        pairs = minhash_lsh_pairs(docs, id_col="url", threshold=0.5, stats=stats)
+        return sorted(map(tuple, pairs.collect()))
+
+    driver, distributed = _both_lsh_paths(run)
+    assert driver == distributed
+    texts = [(u, t) for u, t in EDGE_DOCS if u is not None and t is not None]
+    expected = sorted(
+        (min(a, b, key=str.encode), max(a, b, key=str.encode))
+        for i, (a, ta) in enumerate(texts) for b, tb in texts[i + 1:]
+        if _string_jaccard(ta, tb) >= 0.5
+    )
+    assert [(a, b) for a, b, _ in driver] == expected
+    assert ("https://z.example/a", "https://é.example/b", 0.857143) in driver
+    assert ("u/empty1", "u/empty2", 1.0) in driver
+    none = docs.where("false")
+    assert _both_lsh_paths(
+        lambda stats: minhash_lsh_pairs(none, id_col="url", stats=stats).count()
+    ) == [0, 0]
+
+
+def test_lsh_paths_identical_with_binding_bucket_cap(spark):
+    """20 identical texts share every bucket; a cap of 5 keeps the 5
+    lowest ids (Spark string order) on both paths."""
+    from solrizer_spark.operators.dedup import minhash_lsh_pairs
+
+    ids = [f"https://{c}.example/" for c in "abcdefghijklmnopqrsé"] + ["https://ä.example/"]
+    docs = spark.createDataFrame(
+        [(u, "one boilerplate body repeated on every mirror") for u in ids],
+        "url string, text string",
+    )
+
+    def run(stats):
+        pairs = minhash_lsh_pairs(docs, id_col="url", max_bucket=5, stats=stats)
+        return sorted(map(tuple, pairs.collect()))
+
+    driver, distributed = _both_lsh_paths(run)
+    assert driver == distributed
+    lowest = sorted(ids, key=str.encode)[:5]
+    assert driver == [(a, b, 1.0) for i, a in enumerate(lowest) for b in lowest[i + 1:]]
+
+
+def test_lsh_paths_identical_through_candidate_filter(spark):
+    """``dedup_against_base`` keeps only cross-side pairs; the driver
+    path filters after verification, the distributed one before."""
+    from solrizer_spark.operators.dedup import dedup_against_base
+
+    body = ("the quick brown fox jumps over the lazy dog and then sleeps "
+            "in the warm afternoon sun for a while longer today")
+    base = spark.createDataFrame(
+        [(1, body), (2, body + " extra"), (3, None)], "doc_id long, text string"
+    )
+    new = spark.createDataFrame(
+        [(10, " ".join(body.split()[:-1])), (11, "a fresh text with new words only"),
+         (12, "a fresh text with new words only too"), (13, None)],
+        "doc_id long, text string",
+    )
+
+    def run(stats):
+        kept = _reporting(stats, lambda: dedup_against_base(new, base).collect())
+        return sorted(r["doc_id"] for r in kept)
+
+    driver, distributed = _both_lsh_paths(run)
+    assert driver == distributed == [11, 12, 13]
+
+
+def test_q_dedup_minhash_lsh_paths_identical(spark, tmp_path):
+    """The ``dedup_minhash_lsh`` registry query returns the same rows
+    on both paths, over a ``documents`` table of 120 texts."""
+    import __spark_entry__ as em
+
+    words = [f"w{i}" for i in range(400)]
+    spark.createDataFrame(
+        [(i, " ".join(words[(i * 7) % 300:(i * 7) % 300 + 12 + i % 9])) for i in range(120)],
+        "doc_id long, text string",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+
+    def run(stats):
+        rows = _reporting(stats, lambda: em.q_dedup_minhash_lsh(spark, str(tmp_path)).collect())
+        return sorted(map(tuple, rows))
+
+    driver, distributed = _both_lsh_paths(run)
+    assert driver == distributed
+    assert len(driver) >= 24  # every doc_id % 5 == 0 has its near copy

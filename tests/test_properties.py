@@ -23,10 +23,11 @@ from solrizer_spark.operators.multimodal import parse_media_header
 def test_extract_html_never_raises(payload):
     r1 = extract_html(payload)
     r2 = extract_html(payload)
-    assert (r1.raw_text, r1.title, [b.as_dict() for b in r1.blocks],
-            r1.parse_failed, r1.error) == (
-        r2.raw_text, r2.title, [b.as_dict() for b in r2.blocks],
-        r2.parse_failed, r2.error)
+    def blocks(r):
+        return [(b.as_dict(), b.in_boilerplate_container) for b in r.blocks]
+
+    assert (r1.raw_text, r1.title, blocks(r1), r1.parse_failed, r1.error) == (
+        r2.raw_text, r2.title, blocks(r2), r2.parse_failed, r2.error)
     if not r1.parse_failed:
         assert isinstance(r1.raw_text, str)
         for b in r1.blocks:

@@ -272,22 +272,24 @@ def test_hash_sampling_deterministic_and_stratified(spark):
     assert by.get("en") == 500 and "de" not in by
 
 
-def test_degenerate_bucket_cap_bounds_members_and_memory(spark):
+def test_degenerate_bucket_cap_bounds_members_and_memory(spark, monkeypatch):
     """A pathological cluster (10^5 identical docs → one LSH bucket in
     every band) must (a) complete, (b) emit exactly C(cap,2) pairs over
-    the cap lowest ids, and (c) cap rows BEFORE the aggregation so the
-    collect_list buffer never holds the whole bucket (the plan's
-    row_number filter sits below the aggregate)."""
-    from solrizer_spark.operators.dedup import minhash_lsh_pairs
+    the cap lowest ids, and (c) on the distributed path, cap rows
+    BEFORE the aggregation so the collect_list buffer never holds the
+    whole bucket (the plan's row_number filter sits below the
+    aggregate). The driver path caps in numpy, to the same pairs."""
+    from solrizer_spark.operators import dedup
 
     n, cap = 100_000, 8
     docs = spark.range(n).select(
         F.col("id").alias("doc_id"),
         F.lit("boilerplate empty page placeholder text repeated verbatim").alias("text"),
     )
-    pairs_df = minhash_lsh_pairs(
-        docs, shingle_n=3, num_hashes=16, bands=4, threshold=0.5, max_bucket=cap
-    )
+    kw = dict(shingle_n=3, num_hashes=16, bands=4, threshold=0.5, max_bucket=cap)
+    on_driver = sorted(map(tuple, dedup.minhash_lsh_pairs(docs, **kw).collect()))
+    monkeypatch.setattr(dedup, "DRIVER_LSH_MAX_BYTES", 0)
+    pairs_df = dedup.minhash_lsh_pairs(docs, **kw)
     plan = pairs_df._jdf.queryExecution().executedPlan().toString()
     assert "row_number" in plan  # pre-aggregation cap present
     pairs = pairs_df.collect()
@@ -295,6 +297,7 @@ def test_degenerate_bucket_cap_bounds_members_and_memory(spark):
     ids = {r.id_a for r in pairs} | {r.id_b for r in pairs}
     assert ids == set(range(cap))  # deterministic: the cap lowest ids
     assert all(r.jaccard_sim == 1.0 for r in pairs)
+    assert sorted(map(tuple, pairs)) == on_driver
 
 
 def test_simhash_bucket_cap_pre_aggregation(spark):

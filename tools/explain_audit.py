@@ -10,7 +10,8 @@ Checks:
    sort shuffle.
 4. The vocab dim join broadcasts (BroadcastHashJoin, no
    SortMergeJoin).
-5. minhash LSH pair generation contains no CartesianProduct.
+5. minhash LSH pair generation (its distributed plan) contains no
+   CartesianProduct, and its MinHash is one ArrowEvalPython stage.
 6. chunk_text / the label-concat faceters are shuffle-free row-local
    plans; WARC ingestion is exactly one MapInPandas crossing.
 """
@@ -35,10 +36,10 @@ def optimized_of(df) -> str:
 def main() -> int:
     import __spark_entry__ as em
     from solrizer_spark.functions.language import lang_names_df
-    from solrizer_spark.operators.dedup import minhash_lsh_pairs
+    from solrizer_spark.operators import dedup
     from solrizer_spark.operators.similarity import brute_force_topk
     from solrizer_spark.plans.pipeline import run_chain
-    from solrizer_spark.session import get_spark
+    from solrizer_spark.session import get_spark, release
 
     sf = "/root/testdata/sf0.01"
     spark = get_spark(app_name="explain-audit", cpus=8, shuffle_partitions=16)
@@ -90,16 +91,33 @@ def main() -> int:
     p5 = plan_of(joined)
     check("vocab_join_broadcast", "BroadcastHashJoin" in p5 and "SortMergeJoin" not in p5)
 
-    # 5. LSH pair generation has no cartesian product
+    # 5. LSH pair generation has no cartesian product. The audit
+    #    inspects the distributed plan: the driver bound is set to 0,
+    #    or this small input would return a LocalRelation.
     union = em._with_near_dups(spark, sf)
-    pairs = minhash_lsh_pairs(union, threshold=0.8)
-    p6 = plan_of(pairs)
+    bound, dedup.DRIVER_LSH_MAX_BYTES = dedup.DRIVER_LSH_MAX_BYTES, 0
+    held: list = []
+    p6 = plan_of(dedup.minhash_lsh_pairs(union, threshold=0.8, persisted=held))
+    dedup.DRIVER_LSH_MAX_BYTES = bound
     check("lsh_no_cartesian", "CartesianProduct" not in p6)
     check("lsh_joins_are_hash_or_smj", ("BroadcastHashJoin" in p6) or ("SortMergeJoin" in p6) or ("ShuffledHashJoin" in p6))
 
     # 6. bucket cap rides a pre-aggregation window (row_number filter
     #    bounds the collect_list buffer — VERDICT r1 "what's wrong" #1)
     check("lsh_bucket_cap_preaggregation (row_number window)", "row_number" in p6)
+
+    # 6b. the MinHash kernel is one Arrow stage over the (id, text)
+    #     checkpoint (no row-at-a-time UDF), and it runs once: the
+    #     sketch is checkpointed, so its readers hold no Python stage
+    held.append(union.select(F.col("doc_id").alias("_id"), F.col("text").alias("_text")).localCheckpoint())
+    p6b = plan_of(held[-1].select("_id", dedup.minhash_sketch("_text").alias("_mh")))
+    check(
+        "lsh_distributed_single_arrow_stage",
+        p6b.count("ArrowEvalPython") == 1 and "BatchEvalPython" not in p6b and "EvalPython" not in p6,
+        f"arrow={p6b.count('ArrowEvalPython')} batch={p6b.count('BatchEvalPython')} readers={p6.count('EvalPython')}",
+    )
+    for df in held:
+        release(df)
 
     # 7. the detail chain (blocks + child docs + jq aggregate fields +
     #    IIIF links + doc JSON) still crosses into Python exactly once

@@ -73,13 +73,11 @@ def main() -> None:
             reps = int(sys.argv[a + 1])
 
     from solrizer_spark.operators.dedup import (
-        band_key_expr,
         cap_bucket_rows,
         connected_components,
         dedup_against_base,
         minhash_lsh_pairs,
-        minhash_signatures,
-        word_shingles,
+        minhash_sketch,
     )
     from solrizer_spark.session import get_spark
 
@@ -139,34 +137,28 @@ def main() -> None:
         return result
 
     # --- capped-bucket occupancy probe (the degenerate-bucket claim):
-    # same banding expressions as minhash_lsh_pairs, occupancy counted
+    # the band keys of minhash_lsh_pairs' kernel, occupancy counted
     # after cap_bucket_rows
     def bucket_probe():
-        # materialize signatures BEFORE banding (exactly like
-        # minhash_lsh_pairs' persisted base): composing the raw
-        # banding-over-signature-over-shingle expression lets
-        # Catalyst's project collapsing inline the shingle transform
-        # into all 64 hash terms × 16 band slices — a ~1000×
-        # recompute that turns a 15 s stage into hours
+        # materialize the sketch BEFORE banding, as minhash_lsh_pairs'
+        # distributed path does: each reader would otherwise re-run
+        # the kernel
         sig_df = docs.select(
-            F.col("doc_id").alias("_id"),
-            minhash_signatures(word_shingles("text", 3), 64).alias("_sig"),
+            F.col("doc_id").alias("_id"), minhash_sketch("text").alias("_mh")
         ).persist()
         sig_df.count()
-        banded = sig_df.select(
-            "_id", band_key_expr(F.col("_sig"), 16, 4).alias("bk")
-        )
+        banded = sig_df.select("_id", F.posexplode("_mh.bk").alias("band", "key"))
         uncapped = (
-            banded.groupBy("bk.band", "bk.key")
+            banded.groupBy("band", "key")
             .agg(F.count(F.lit(1)).alias("n"))
             .agg(F.max("n").alias("mx"))
             .collect()[0]["mx"]
         )
         capped = cap_bucket_rows(
-            banded, [F.col("bk.band"), F.col("bk.key")], [F.col("_id")], max_bucket
+            banded, [F.col("band"), F.col("key")], [F.col("_id")], max_bucket
         )
         capped_mx = (
-            capped.groupBy("bk.band", "bk.key")
+            capped.groupBy("band", "key")
             .agg(F.count(F.lit(1)).alias("n"))
             .agg(F.max("n").alias("mx"))
             .collect()[0]["mx"]
