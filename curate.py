@@ -72,11 +72,13 @@ from __future__ import annotations
 
 import argparse
 import json
+import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from solrizer_spark import jvm_archive
 from solrizer_spark.session import get_spark, release
 
 KNOWN_OPS = (
@@ -567,8 +569,10 @@ def main() -> None:
                     help="write a markdown corpus card of the OUTPUT here")
     args = ap.parse_args()
 
+    t0 = time.monotonic()
     spark = get_spark(app_name="solrizer-curate", cpus=args.cpus)
-    print(json.dumps(run_curate(spark, args)))
+    startup = {"session_s": round(time.monotonic() - t0, 3), "jvm_archive": jvm_archive.state}
+    print(json.dumps({**run_curate(spark, args), **startup}))
     spark.stop()
 
 

@@ -40,6 +40,7 @@ import uuid
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from solrizer_spark import jvm_archive
 from solrizer_spark.operators.manifests import (
     manifest_from_metrics,
     completed_buckets,
@@ -455,11 +456,13 @@ def main() -> None:
         else:
             model_chains = loaded  # per-model lists, indexers.yml analog
 
+    t0 = time.monotonic()
     spark = get_spark(
         app_name="solrizer-spark-job",
         cpus=args.cpus,
         shuffle_partitions=args.shuffle_partitions,
     )
+    session_s = time.monotonic() - t0
     stats = run_job(
         spark,
         args.input,
@@ -477,6 +480,7 @@ def main() -> None:
         outline=args.outline,
         max_records_per_file=args.max_records_per_file,
     )
+    stats.update(session_s=round(session_s, 3), jvm_archive=jvm_archive.state)
     print(json.dumps(stats))
     spark.stop()
 

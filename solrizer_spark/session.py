@@ -15,7 +15,8 @@ parameters for local testing:
   every Arrow stage. The daemon module must be importable by the
   executor's Python: the session puts the ``sys.path`` root holding
   this package (the checkout, or the ``--py-files`` zip) on the
-  executor ``PYTHONPATH``.
+  executor ``PYTHONPATH``,
+* a driver JVM started from a class-data-sharing archive (``jvm_archive``).
 """
 
 from __future__ import annotations
@@ -23,6 +24,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from . import jvm_archive
 
 #: Cap on rows per Arrow batch crossing the JVM↔Python boundary.
 #: Round 6: raised 1024 → 8192 and paired with the Spark 4
@@ -51,7 +54,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -85,12 +88,11 @@ def get_spark(
         .config("spark.python.daemon.module", "solrizer_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    if os.environ.get("SPARK_GRAFT_WARM_WORKERS", "1") != "0":
-        _warm_python_workers(spark, cpus)
-    return spark
+    conf = extra_conf or {}
+    with jvm_archive.launch(conf) as archive_conf:
+        for k, v in {**conf, **archive_conf}.items():
+            builder = builder.config(k, v)
+        return builder.getOrCreate()
 
 
 def release(df) -> None:
@@ -103,51 +105,6 @@ def release(df) -> None:
     plan = df._jdf.queryExecution().analyzed()
     if plan.getClass().getSimpleName() == "LogicalRDD":
         plan.rdd().unpersist(False)
-
-
-#: application ids whose Python worker pool has been pre-spawned
-_WARMED_APPS: set[str] = set()
-
-
-def _warm_python_workers(spark: SparkSession, cpus: int) -> None:
-    """Pre-spawn one Python worker per core and pre-import the heavy
-    libraries (numpy/pandas/pyarrow) inside each — once per
-    application.
-
-    On a long-lived cluster the worker pool is resident; locally the
-    FIRST pandas-UDF action otherwise pays interpreter spin-up plus
-    ~1-3 s of imports × cpus inside whatever query happens to run
-    first (measured round 6: the cold extraction run carried ~4 s of
-    worker spawn that no steady-state deployment would see). A plain
-    ``count(lit(1))`` probe does NOT do this — Catalyst prunes the
-    unused UDF column and the Python stage never runs — so the probe
-    aggregates the UDF output itself. Reused workers keep their
-    imports (``spark.python.worker.reuse`` default), so every later
-    Arrow stage starts hot. Disable with SPARK_GRAFT_WARM_WORKERS=0."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _WARMED_APPS:
-        return
-    _WARMED_APPS.add(app_id)
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def _fn(s: "pd.Series") -> "pd.Series":
-        import numpy  # noqa: F401  — resident for every later kernel
-        import pyarrow  # noqa: F401
-
-        return s
-
-    # explicit annotations: this module's `from __future__ import
-    # annotations` turns decorator-style hints into unresolvable
-    # strings for pandas_udf's signature inference
-    _fn.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    _preload = F.pandas_udf(_fn, "long")
-
-    probe = spark.range(cpus * 16).repartition(cpus)
-    # count(THE UDF COLUMN): the aggregate consumes the UDF output, so
-    # column pruning cannot drop the Python stage
-    probe.select(_preload("id").alias("w")).agg(F.count("w")).collect()
 
 
 try:  # Arrow conversion failures surface as this on the pandas path

@@ -62,6 +62,8 @@ def test_spark_submit_py_files(tmp_path):
     assert proc.returncode == 0, proc.stderr[-4000:]
     stats = json.loads(proc.stdout.strip().splitlines()[-1])
     assert stats["n_docs"] == 300
+    # the JVM existed before get_spark, which therefore added no flags
+    assert stats["jvm_archive"] == "off:spark-submit"
     # all three output tables landed
     for sub in ("docs", "manifests", "metrics"):
         assert os.path.isdir(os.path.join(out, sub)), sub
