@@ -2198,7 +2198,7 @@ def _kmeans_oracle_sql(dims: int = 64) -> str:
     every centroid with the exact left-fold term order of the Spark
     expressions (see _cos_sql), zero-norm guarded like
     similarity.cosine, argmax = max cosine then LOWEST cell (the
-    strictly-greater fold of assign_ivf_cell)."""
+    strictly-greater fold of assign_ivf_cell_sim)."""
     dot = " + ".join(
         f"(CAST(embedding[{d+1}] AS DOUBLE) * c[{d+1}])" for d in range(dims)
     )

@@ -2,6 +2,8 @@
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``.
+Without ``$SPARK_GRAFT_CPUS``, ``get_spark`` takes one slot per CPU in
+the affinity mask.
 
 The flagship measurement is the full extraction field-chain over a
 deterministic HTML wrap of the ``documents`` table, replicated
@@ -26,7 +28,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     mult = int(os.environ.get("SPARK_GRAFT_BENCH_MULT", "20"))
 
     import __spark_entry__ as em
@@ -37,8 +38,9 @@ def main() -> None:
     from solrizer_spark.plans.pipeline import run_chain
     from solrizer_spark.session import get_spark
 
-    spark = get_spark(app_name="solrizer-bench", cpus=cpus)
+    spark = get_spark(app_name="solrizer-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     timings: dict[str, float] = {}
 

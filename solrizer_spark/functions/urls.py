@@ -218,28 +218,18 @@ def _robots_directives(
     return [d for rules in selected for d in rules]
 
 
-def parse_robots_txt(content: str | bytes | None, agent: str = "*") -> list[str]:
-    """Disallow path-prefixes for ``agent`` from a robots.txt body
-    (plain-Python dim-side parser: robots files are one small blob per
-    domain — parse them into the ``(domain, disallow)`` dim that
-    :func:`filter_robots_disallowed` broadcasts). RFC 9309 group
-    semantics via :func:`_robots_directives` — a group naming the
-    agent exactly SUPERSEDES the ``*`` fallback group. Empty Disallow
-    (allow-all) entries are ignored."""
-    return [
-        v for f, v in _robots_directives(content, agent) if f == "disallow" and v
-    ]
-
-
 def parse_robots_rules(
     content: str | bytes | None, agent: str = "*"
 ) -> dict[str, list[str]]:
-    """Both rule kinds for ``agent``: ``{"disallow": [...], "allow":
-    [...]}`` — feed these into the two-column robots dim that
-    :func:`filter_robots_disallowed` consumes for full RFC 9309 §2.2.2
-    longest-match precedence (Allow can re-open a subtree of a
-    Disallowed prefix). Empty values (no-op rules) are dropped, same
-    as :func:`parse_robots_txt`."""
+    """Both rule kinds for ``agent`` from a robots.txt body:
+    ``{"disallow": [...], "allow": [...]}``. A plain-Python dim-side
+    parser (robots files are one small blob per domain): feed these
+    into the two-column robots dim that :func:`filter_robots_disallowed`
+    broadcasts for full RFC 9309 §2.2.2 longest-match precedence (Allow
+    can re-open a subtree of a Disallowed prefix). RFC 9309 group
+    semantics via :func:`_robots_directives`: a group naming the agent
+    exactly SUPERSEDES the ``*`` fallback group. Empty values (no-op
+    rules, e.g. an allow-all ``Disallow:``) are dropped."""
     dirs = _robots_directives(content, agent)
     return {
         "disallow": [v for f, v in dirs if f == "disallow" and v],
@@ -403,7 +393,7 @@ def extract_anchors(html: Column | str) -> Column:
 
 def parse_crawl_delay(content: str | bytes | None, agent: str = "*") -> float | None:
     """``Crawl-delay`` (seconds) for ``agent`` from a robots.txt body —
-    same RFC 9309 group semantics as :func:`parse_robots_txt` (exact
+    same RFC 9309 group semantics as :func:`parse_robots_rules` (exact
     agent group supersedes ``*``); the last delay among the applicable
     groups wins; invalid/absent → None. Feeds
     ``crawl.fetch_schedule_with_delays`` as the per-host rate dim."""

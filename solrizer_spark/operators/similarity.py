@@ -167,19 +167,6 @@ def lsh_topk(
     )
 
 
-def assign_ivf_cell(vec: Column, centroids: list[list[float]]) -> Column:
-    """IVF coarse quantizer: index of the nearest centroid (highest
-    cosine; ties → lowest index). Centroids are plan-time literals
-    (at production scale: an in-engine :func:`kmeans_fit` result,
-    broadcast into the plan), so assignment is pure codegen.
-
-    Thin wrapper over :func:`assign_ivf_cell_sim` — ONE copy of the
-    tie-break-sensitive strictly-greater fold (the kmeans oracle's
-    ``ORDER BY cs DESC, cell ASC`` parity depends on it); Catalyst's
-    SimplifyExtractValueOps prunes the unused ``sim`` field."""
-    return assign_ivf_cell_sim(vec, centroids)["cell"]
-
-
 def ivf_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -339,7 +326,7 @@ def kmeans_fit(
     vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Distributed spherical k-means (Lloyd's) — trains the IVF
-    centroids :func:`ivf_topk` / :func:`assign_ivf_cell` consume,
+    centroids :func:`ivf_topk` / :func:`assign_ivf_cell_sim` consume,
     closing the "centroids come from somewhere" seam in-engine.
 
     Scale shape: up to 4096 cells, each round is ONE mapInPandas

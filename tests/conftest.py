@@ -36,7 +36,12 @@ def chain_doc(spark, url: str, html: bytes, lang: str | None = None,
 def spark():
     from solrizer_spark.session import get_spark
 
-    spark = get_spark(app_name="solrizer-spark-tests", cpus=4, shuffle_partitions=8)
+    # -Xshare:auto is the JVM's default: it only turns the user's CDS
+    # archive off, so the tests neither map it nor record one at exit
+    spark = get_spark(
+        app_name="solrizer-spark-tests", cpus=4, shuffle_partitions=8,
+        extra_conf={"spark.driver.defaultJavaOptions": "-Xshare:auto"},
+    )
     yield spark
     spark.stop()
 

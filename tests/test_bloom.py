@@ -52,7 +52,10 @@ def test_bloom_params_standard_sizing():
 def test_no_false_negatives_and_fp_rate(spark):
     bf = bloom_build(_vals_df(spark, BASE), "v", expected_items=2000, fpp=0.01)
     probe = _vals_df(spark, BASE + NEW)
-    out = bloom_might_contain(probe, "v", bf).collect()
+    checked = bloom_might_contain(probe, "v", bf)
+    # membership is executor-local: the probe plan joins nothing
+    assert "Join" not in checked._jdf.queryExecution().executedPlan().toString()
+    out = checked.collect()
     hits = {r["v"] for r in out if r["bloom_hit"]}
     # guarantee: every inserted value is a hit
     assert hits.issuperset(BASE)
@@ -82,6 +85,32 @@ def test_local_and_shuffle_builds_bit_identical(spark):
     b = bloom_build(df, "v", expected_items=2000, fpp=0.01, strategy="shuffle")
     assert a.chunks == b.chunks
     assert (a.bits_total, a.k, a.seed) == (b.bits_total, b.k, b.seed)
+
+
+def _shuffle_records(spark) -> int:
+    """Shuffle records written by every stage so far, from the JVM's
+    status store (the Spark UI's data; it works with the UI off)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    gw = spark.sparkContext._gateway
+    empty = gw.jvm.java.util.ArrayList()
+    stages = sc.statusStore().stageList(empty, False, False, gw.new_array(gw.jvm.double, 0), empty)
+    return sum(stages.apply(i).shuffleWriteRecords() for i in range(stages.length()))
+
+
+def test_local_build_shuffles_bitmaps_not_positions(spark):
+    """The local build moves one bitmap per input partition into ≤ 16
+    merge tasks, then those into one: at most P + 16 shuffle records,
+    where the shuffle build moves one per set position (items × k)."""
+    df = _vals_df(spark, BASE).repartition(7).persist()
+    df.count()
+    before = _shuffle_records(spark)
+    bf = bloom_build(df, "v", expected_items=2000, fpp=0.01, strategy="local")
+    assert _shuffle_records(spark) - before <= 7 + 16
+    before = _shuffle_records(spark)
+    bloom_build(df, "v", expected_items=2000, fpp=0.01, strategy="shuffle")
+    assert _shuffle_records(spark) - before >= len(BASE) * bf.k
+    df.unpersist()
 
 
 def test_build_is_deterministic(spark):

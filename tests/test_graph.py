@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import random
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -161,3 +164,45 @@ def test_generated_corpus_host_graph_nonempty(spark):
     assert any(d.startswith("example-hub") for d in dsts)
     assert any(d.startswith("example-ext") for d in dsts)
     assert {e["src"] for e in edges} <= {"example.com", "example.org"}
+
+
+def _skewed_graph(n=300, sinks=15, seed=7):
+    """Preferential attachment: node i links to 1-4 earlier nodes (so
+    early nodes soak up in-links) and, 30% of the time, to one of
+    ``sinks`` dangling nodes that have no out-edges."""
+    rng = random.Random(seed)
+    edges = set()
+    for i in range(1, n):
+        for _ in range(1 + rng.randrange(4)):
+            edges.add((i, rng.randrange(i)))
+        if rng.random() < 0.3:
+            edges.add((i, n + rng.randrange(sinks)))
+    return sorted(edges)
+
+
+def _reference_ranks(edges, iterations, num=85, denom=100, mass=10**12):
+    """The integer PageRank recurrence in plain Python: a dangling
+    node's rank reaches nobody, so its mass leaves the total."""
+    nodes = {v for e in edges for v in e}
+    outdeg = Counter(src for src, _ in edges)
+    base = ((denom - num) * mass // denom) // len(nodes)
+    rank = dict.fromkeys(nodes, mass // len(nodes))
+    for _ in range(iterations):
+        inbound = dict.fromkeys(nodes, 0)
+        for src, dst in edges:
+            inbound[dst] += rank[src] // outdeg[src]
+        rank = {v: base + num * inbound[v] // denom for v in nodes}
+    return rank
+
+
+def test_pagerank_skewed_graph_with_sinks_matches_reference(spark):
+    """A 315-node skewed graph with dangling sinks: exact ranks at 5
+    rounds and at 10 (past the round-8 checkpoint), the same node set
+    at both, and mass that only decays."""
+    edges = _skewed_graph()
+    df = spark.createDataFrame(edges, "src long, dst long").repartition(4)
+    got = {it: {r["node"]: r["rank"] for r in pagerank(df, iterations=it).collect()}
+           for it in (5, 10)}
+    for it, ranks in got.items():
+        assert ranks == _reference_ranks(edges, it), it
+    assert 10**12 > sum(got[5].values()) > sum(got[10].values())

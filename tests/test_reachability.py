@@ -3,21 +3,23 @@
 The engine is one batch dataflow with three user entry points —
 ``job.py`` (extraction), ``curate.py`` (the operator chain) and
 ``__spark_entry__.py`` (``queries()``/``oracle_sql()``/``entry()``,
-the oracle-checked registry) — plus ``bench.py`` and the two required
-gates ``tools/check_oracles.py`` and ``tools/explain_audit.py``. A
+the oracle-checked registry) — plus ``bench.py``, the two required
+gates ``tools/check_oracles.py`` and ``tools/explain_audit.py``, and
+``tools/build_lsh_index.py`` (it writes curate's ``--base-index``). A
 name none of them reaches is code only tests run, so it is deleted
-with its tests, or it gets an entry point.
+with its tests, or it gets an entry point, or a ``KEEP`` entry that
+says why it stays.
 
 Pure AST, no SparkSession. The walk is a transitive name closure:
 
-* roots are every name those files mention, plus the module-level
-  statements of each package module (they run at import);
+* roots are every name those files mention, the module-level
+  statements of each package module (they run at import) and the
+  ``KEEP`` names;
 * a reached top-level def or assign of ``solrizer_spark/**`` or
   ``__spark_entry__.py`` reaches every name its body mentions;
-* a mention is a ``Name``, an attribute, an ``import ... as`` alias,
-  or an identifier inside a string constant, so a help text or
-  docstring naming the tool that writes a CLI's input (curate's
-  ``--base-index`` → ``write_lsh_index``) keeps that tool.
+* a mention is a ``Name``, an attribute or an ``import ... as``
+  alias. Code only: a name inside a string or docstring reaches
+  nothing.
 
 Resolution is by bare name, so the closure over-approximates: a miss
 is always real dead code.
@@ -27,7 +29,6 @@ from __future__ import annotations
 
 import ast
 import functools
-import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -37,6 +38,7 @@ ROOT_FILES = (
     "bench.py",
     "tools/check_oracles.py",
     "tools/explain_audit.py",
+    "tools/build_lsh_index.py",
 )
 ENTRY = "__spark_entry__.py"
 ENTRY_FUNCS = {"queries", "oracle_sql", "entry"}
@@ -47,14 +49,23 @@ KEEP = {
     "reference EDTF table through it (edtf_fields is the fused form)",
     "solr_date_range": "reference path: tests/test_edtf.py drives the "
     "reference EDTF table through it (edtf_fields is the fused form)",
+    "get_text": "the markup-strip seam the reference byte-identity gate "
+    "in tests/test_html_text.py checks",
+    "load_psl_file": "deployment hook: loads the full Public Suffix List "
+    "in place of the pinned snapshot",
+    "parse_robots_rules": "builds the robots dim from robots.txt bodies "
+    "fetched outside the engine",
+    "parse_crawl_delay": "builds the crawl-delay dim from robots.txt "
+    "bodies fetched outside the engine",
+    "save_bloom": "writes the filter curate's --bloom-path reads",
+    "bloom_index_build": "writes the sharded index curate's --bloom-index reads",
+    "hyperplane_bucket": "bit-parity reference for make_band_keys_udf "
+    "(tests/test_arrow_simkernels.py)",
 }
-
-_IDENT = re.compile(r"[A-Za-z_]\w*")
 
 
 def _mentions(node: ast.AST) -> set[str]:
     out: set[str] = set()
-    words: set[str] = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
             out.add(n.id)
@@ -62,9 +73,7 @@ def _mentions(node: ast.AST) -> set[str]:
             out.add(n.attr)
         elif isinstance(n, ast.alias) and n.asname:
             out.add(n.name.rsplit(".", 1)[-1])
-        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
-            words.update(_IDENT.findall(n.value))
-    return out | words
+    return out
 
 
 def _top_level(body: list[ast.stmt]):
@@ -90,8 +99,8 @@ def _defined_names(s: ast.stmt) -> list[str]:
 
 
 @functools.cache
-def _scan() -> tuple[dict[str, list[tuple[str, ast.stmt]]], set[str]]:
-    """(top-level definitions by name → [(file, statement)], reached names)."""
+def _scan() -> tuple[dict[str, list[tuple[str, ast.stmt]]], frozenset[str]]:
+    """(top-level definitions by name → [(file, statement)], root names)."""
     defs: dict[str, list[tuple[str, ast.stmt]]] = {}
     roots: set[str] = set()
     modules = sorted((ROOT / "solrizer_spark").rglob("*.py")) + [ROOT / ENTRY]
@@ -110,7 +119,10 @@ def _scan() -> tuple[dict[str, list[tuple[str, ast.stmt]]], set[str]]:
                 defs.setdefault(name, []).append((rel, s))
     for f in ROOT_FILES:
         roots |= _mentions(ast.parse((ROOT / f).read_text()))
+    return defs, frozenset(roots)
 
+
+def _reached(defs, roots) -> set[str]:
     reached: set[str] = set()
     todo = list(roots)
     while todo:
@@ -120,25 +132,28 @@ def _scan() -> tuple[dict[str, list[tuple[str, ast.stmt]]], set[str]]:
         reached.add(name)
         for _, s in defs.get(name, ()):
             todo.extend(_mentions(s) - reached)
-    return defs, reached
+    return reached
 
 
 def test_every_top_level_name_is_reached():
-    defs, reached = _scan()
+    defs, roots = _scan()
+    reached = _reached(defs, roots | KEEP.keys())
     dead = sorted(
         f"{rel}:{s.lineno} {name}"
         for name, where in defs.items()
-        if name not in reached and name not in KEEP
+        if name not in reached
         and not (name.startswith("__") and name.endswith("__"))
         for rel, s in where
     )
     assert not dead, (
         "no entry point reaches these names; delete them with their "
-        "tests, or give them an entry point:\n" + "\n".join(dead)
+        "tests, give them an entry point, or a KEEP entry with its "
+        "reason:\n" + "\n".join(dead)
     )
 
 
 def test_keep_list_is_current():
-    defs, reached = _scan()
+    defs, roots = _scan()
+    reached = _reached(defs, roots)
     stale = sorted(n for n in KEEP if n not in defs or n in reached)
     assert not stale, f"KEEP entries that are gone or reached: {stale}"

@@ -464,8 +464,8 @@ def test_media_feature_stage(spark):
     assert {r["asset_id"]: r["features"] for r in out.collect()}[1] == [5.0, 5.0]
 
 
-def test_parse_robots_txt():
-    from solrizer_spark.functions.urls import parse_robots_txt
+def test_parse_robots_rules_agent_groups():
+    from solrizer_spark.functions.urls import parse_robots_rules
 
     body = b"""# comment
 User-agent: googlebot
@@ -477,12 +477,13 @@ Disallow: /tmp/   # trailing comment
 Disallow:
 Crawl-delay: 10
 """
-    assert parse_robots_txt(body) == ["/private/", "/tmp/"]
+    # the empty Disallow line (allow-all) adds no rule
+    assert parse_robots_rules(body)["disallow"] == ["/private/", "/tmp/"]
     # RFC 9309: a group naming the agent exactly SUPERSEDES the *
     # fallback (review fix — previously unioned with the * group)
-    assert parse_robots_txt(body, agent="googlebot") == ["/google-only/"]
-    assert parse_robots_txt(None) == []
-    assert parse_robots_txt(b"\xff\xfe garbage") == []
+    assert parse_robots_rules(body, agent="googlebot")["disallow"] == ["/google-only/"]
+    assert parse_robots_rules(None) == {"disallow": [], "allow": []}
+    assert parse_robots_rules(b"\xff\xfe garbage") == {"disallow": [], "allow": []}
 
 
 def test_filter_robots_disallowed(spark):

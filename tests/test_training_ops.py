@@ -486,7 +486,7 @@ def test_kmeans_fit_recovers_separated_clusters(spark):
     must assign each group to one cell, and the trained centroids
     must point at the group directions (spherical k-means)."""
     from solrizer_spark.operators.similarity import (
-        assign_ivf_cell,
+        assign_ivf_cell_sim,
         kmeans_fit,
     )
 
@@ -507,7 +507,7 @@ def test_kmeans_fit_recovers_separated_clusters(spark):
         assert max(c) > 0.9
     # assignment groups the three directions into three distinct cells
     out = df.select(
-        "vec_id", assign_ivf_cell(F.col("embedding"), cents).alias("cell")
+        "vec_id", assign_ivf_cell_sim(F.col("embedding"), cents)["cell"].alias("cell")
     ).collect()
     by_dir = {}
     for r in out:
@@ -595,6 +595,8 @@ def test_assign_cells_join_equals_literal_path(spark):
     ).select("vec_id", F.col("a.cell").alias("cell"), F.col("a.sim").alias("sim"))
     join = assign_cells_join(df, cents)
     got_l = {r["vec_id"]: (r["cell"], r["sim"]) for r in lit.collect()}
-    got_j = {r["vec_id"]: (r["cell"], r["sim"]) for r in join.collect()}
+    join_rows = join.collect()
+    assert len(join_rows) == len(rows)  # one row per vector: no dup, no drop
+    got_j = {r["vec_id"]: (r["cell"], r["sim"]) for r in join_rows}
     assert got_l == got_j
     assert got_j[1000][0] == 7  # tie resolved to the LOWEST cell

@@ -99,3 +99,7 @@ def test_every_python_task_invalidates_lazily(spark, tmp_path):
     )
     assert {r.part for r in rows} == set(range(8))
     assert all(r.lazy for r in rows)
+    # the session's -Xshare:auto keeps the user's JVM archive out of it
+    from solrizer_spark import jvm_archive
+
+    assert jvm_archive.state == "off:java-options"

@@ -19,14 +19,13 @@ OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     suffix = sys.argv[1]
     only = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
     import __spark_entry__ as em
     from solrizer_spark.session import get_spark
 
-    spark = get_spark(app_name="solrizer-plans", cpus=cpus)
+    spark = get_spark(app_name="solrizer-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = {**em.queries(), **em.component_queries()}

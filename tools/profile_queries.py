@@ -29,7 +29,6 @@ def _rest(spark, path):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     only = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
     import __spark_entry__ as em
@@ -37,10 +36,10 @@ def main() -> None:
 
     spark = get_spark(
         app_name="solrizer-profile",
-        cpus=cpus,
         extra_conf={"spark.ui.enabled": "true"},
     )
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
     app_id = spark.sparkContext.applicationId
 
     qs = {**em.queries(), **em.component_queries()}

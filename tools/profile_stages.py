@@ -60,7 +60,6 @@ def profile(spark, app_id, name, fn, runs=2):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     mult = int(os.environ.get("SPARK_GRAFT_BENCH_MULT", "20"))
     targets = sys.argv[1].split(",") if len(sys.argv) > 1 else None
 
@@ -73,10 +72,11 @@ def main() -> None:
     from solrizer_spark.session import get_spark
 
     spark = get_spark(
-        app_name="solrizer-stageprof", cpus=cpus,
+        app_name="solrizer-stageprof",
         extra_conf={"spark.ui.enabled": "true"},
     )
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
     app_id = spark.sparkContext.applicationId
 
     def want(n):
